@@ -133,6 +133,17 @@ object TxTable {
     * valid as conservative bounds; live rows = rows − dvRows).
     * Compaction materializes and clears it.
     */
+  /** `types`: the Spark type of each column in `cols`, position for
+    * position, recorded at write time from the schema the writer
+    * already holds (partition columns carry their directory-inferred
+    * type). Together with `cols` it is the file's schema, so
+    * [[scanEntries]] builds its read schema from the log instead of
+    * launching a footer-reading inference job per scan (the Delta
+    * shape: readers never infer). Entries copied forward (clone,
+    * carry-over, DV updates) keep it. Empty on entries written before
+    * it was recorded: only scans touching such LEGACY entries keep the
+    * inference read.
+    */
   final case class FileEntry(path: String, rows: Long, stats: Map[String, ColStats],
       nullCounts: Map[String, Long] = Map.empty,
       parts: Map[String, String] = Map.empty,
@@ -140,11 +151,14 @@ object TxTable {
       cols: Seq[String] = Seq.empty,
       dv: Seq[Long] = Seq.empty,
       dvRef: String = "",
-      dvCount: Long = 0L) {
+      dvCount: Long = 0L,
+      types: Seq[org.apache.spark.sql.types.DataType] = Seq.empty) {
     /** Does this file carry any deletion-vector tombstones? */
     def hasDv: Boolean = dv.nonEmpty || dvRef.nonEmpty
     /** Tombstoned row count (inline or sidecar-referenced). */
     def dvRows: Long = if (dvRef.nonEmpty) dvCount else dv.size.toLong
+    /** Does the entry record a type for every column (not legacy)? */
+    def typed: Boolean = cols.nonEmpty && types.size == cols.size
   }
 
   /** A deletion-vector ACTION payload as it rides a version record's
@@ -313,8 +327,11 @@ object TxTable {
       .map(_.elements().asScala.map(_.asLong()).toSeq).getOrElse(Seq.empty)
     val dvRef = Option(f.get("dvRef")).map(_.asText()).getOrElse("")
     val dvCount = Option(f.get("dvCount")).map(_.asLong()).getOrElse(0L)
+    val types = Option(f.get("types")).map(_.elements().asScala
+      .map(t => org.apache.spark.sql.types.DataType.fromJson(t.toString)).toSeq)
+      .getOrElse(Seq.empty)
     FileEntry(f.get("path").asText(), f.get("rows").asLong(), stats, nulls,
-      parts, bytes, cols, dv, dvRef, dvCount)
+      parts, bytes, cols, dv, dvRef, dvCount, types)
   }
 
   /** Parse a `dvs` action payload — sidecar object form
@@ -542,6 +559,10 @@ object TxTable {
     if (f.cols.nonEmpty) {
       val cn = fn.putArray("cols")
       f.cols.foreach(cn.add)
+    }
+    if (f.types.nonEmpty) {
+      val tn = fn.putArray("types")
+      f.types.foreach(t => tn.add(M.readTree(t.json)))
     }
     if (f.dv.nonEmpty) {
       val dn = fn.putArray("dv")
@@ -857,12 +878,26 @@ object TxTable {
   private def diffFrames(spark: SparkSession, table: String, fromV: Int,
       toV: Int): (DataFrame, DataFrame, Snapshot) = {
     val (addedE, removedE, toSnap) = changedEntrySets(table, fromV, toV)
-    def readSet(entries: Seq[FileEntry]): Option[DataFrame] =
-      if (entries.isEmpty) None
-      else Some(rawRead(spark, table, entries.sortBy(_.path)))
-    val empty = rawRead(spark, table, toSnap.files).filter(lit(false))
-    (readSet(addedE).getOrElse(empty), readSet(removedE).getOrElse(empty),
-      toSnap)
+    // only a window with an empty side needs the typed empty frame
+    lazy val empty = rawRead(spark, table, toSnap.files).filter(lit(false))
+    def readSet(entries: Seq[FileEntry]): DataFrame =
+      if (entries.isEmpty) empty
+      else rawRead(spark, table, entries.sortBy(_.path))
+    val (added, removed) = (readSet(addedE), readSet(removedE))
+    // both sides diff over ONE physical column set: a window spanning a
+    // schema change reads files of different shapes. Columns dropped by
+    // toV leave first (a row differing only there is no change in toV's
+    // view); a column one side lacks reads as typed nulls, as the
+    // merged scan of both sides' files would surface it
+    val fields = (added.schema.fields ++ removed.schema.fields)
+      .groupBy(_.name).map { case (n, fs) => n -> fs.head }
+    val cols = (added.columns ++ removed.columns).distinct
+      .filterNot(toSnap.drops.contains).toSeq
+    def align(df: DataFrame): DataFrame = df.select(cols.map { c =>
+      if (df.columns.contains(c)) col(c)
+      else lit(null).cast(fields(c).dataType).as(c)
+    }: _*)
+    (align(added), align(removed), toSnap)
   }
 
   /** One-pass multiset diff of a change window's raw sides — the fused
@@ -1081,7 +1116,7 @@ object TxTable {
       // null partition (__HIVE_DEFAULT_PARTITION__), mixed inferred
       // types across directories (the read-back would resolve a joint
       // type), or an unexpected column order.
-      val perFileParts: Map[java.nio.file.Path, Seq[(String, String, String)]] =
+      val perFileParts: Map[java.nio.file.Path, Seq[(String, String, String, DataType)]] =
         if (partitionCols.isEmpty) Map.empty
         else {
           val typeInference = spark.sessionState.conf.getConfString(
@@ -1102,7 +1137,7 @@ object TxTable {
           raw.map { case (p, vals) =>
             p -> vals.map { case (c, dt, v) =>
               val lit = org.apache.spark.sql.catalyst.expressions.Literal.create(v, dt)
-              (c, Cast(lit, StringType, tz).eval(null).toString, statTyp(dt))
+              (c, Cast(lit, StringType, tz).eval(null).toString, statTyp(dt), dt)
             }
           }.toMap
         }
@@ -1216,16 +1251,17 @@ object TxTable {
               c -> ColStats(statTyp(dt), render(mn, dt), render(mx, dt))
             }
           }.toMap ++
-            pvals.map { case (c, rendered, typ) => c -> ColStats(typ, rendered, rendered) }
+            pvals.map { case (c, rendered, typ, _) => c -> ColStats(typ, rendered, rendered) }
           val nulls = wanted.map(c => c -> colStats(c)._2).toMap ++
-            pvals.map { case (c, _, _) => c -> 0L }
-          val parts = pvals.map { case (c, rendered, _) => c -> rendered }.toMap
-          // read-back field order: data columns, then inferred partition dirs
-          val fieldOrder =
-            if (partitionCols.isEmpty) schema.fieldNames.toSeq
-            else schema.fieldNames.toSeq.filterNot(partSet) ++ partitionCols
+            pvals.map { case (c, _, _, _) => c -> 0L }
+          val parts = pvals.map { case (c, rendered, _, _) => c -> rendered }.toMap
+          // read-back field order: data columns, then inferred partition
+          // dirs (typed as the directory inference types them)
+          val fields =
+            schema.fields.toSeq.filterNot(f => partSet(f.name)).map(f => f.name -> f.dataType) ++
+              pvals.map { case (c, _, _, dt) => c -> dt }
           Some(FileEntry(rel.toString, rows, stats, nulls, parts,
-            Files.size(p), fieldOrder))
+            Files.size(p), fields.map(_._1), types = fields.map(_._2)))
         }
       }
       Some(entries.sortBy(_.path))
@@ -1280,6 +1316,18 @@ object TxTable {
     val written = spark.read.parquet(dir.toString)
     val allCols = (statsCols ++ partitionCols).distinct
     val typs = allCols.map(c => c -> statTyp(written.schema(c).dataType)).toMap
+    // each file's columns and types: a write's files all carry the
+    // written schema; converted files may differ, so each one's own
+    // footer decides (driver-side, no job), partition columns typed by
+    // the slot's directory inference
+    val fieldsOf: String => Seq[org.apache.spark.sql.types.StructField] =
+      if (writtenSchema.isDefined) { val fs = written.schema.fields.toSeq; _ => fs }
+      else rel => {
+        val partSet = partitionCols.toSet
+        org.apache.spark.sql.execution.datasources.parquet.GraftParquetBridge
+          .footerSchema(spark, Paths.get(table, rel)).fields.toSeq
+          .filterNot(f => partSet(f.name)) ++ partitionCols.map(written.schema(_))
+      }
     val aggs = count(lit(1)).as("rows") +:
       allCols.flatMap(c => Seq(min(col(c)).cast("string").as(s"min_$c"),
         max(col(c)).cast("string").as(s"max_$c"),
@@ -1307,9 +1355,10 @@ object TxTable {
         // a partition column is constant per file (one dir per value),
         // so its identity stat doubles as the recorded partition value
         val parts = partitionCols.flatMap(c => stats.get(c).map(c -> _.min)).toMap
+        val fields = fieldsOf(rel.toString)
         FileEntry(rel.toString, rows, stats, nulls, parts,
           Files.size(Paths.get(table, rel.toString)),
-          written.schema.fieldNames.toSeq)
+          fields.map(_.name), types = fields.map(_.dataType))
       }.toSeq
       .sortBy(_.path)
   }
@@ -1986,7 +2035,7 @@ object TxTable {
     }
     // DECLARED-but-not-yet-written columns surface as typed nulls (the
     // metadata half of add-column evolution); once any file carries
-    // the column the mergeSchema read serves it and this is a no-op
+    // the column the merged scan schema serves it and this is a no-op
     snap.added.foldLeft(renamed) { case (d, (n, ddl)) =>
       if (d.columns.contains(n)) d
       else d.withColumn(n, lit(null).cast(ddl))
@@ -2338,11 +2387,11 @@ object TxTable {
 
   /** Snapshot read: exactly the manifest's files (latest by default;
     * any committed `version` for time travel — files are immutable).
-    * mergeSchema: files within one live set may carry DIFFERENT
-    * schemas after an add-column evolution (an append with a wider
-    * frame); the merged read surfaces the union schema with nulls for
-    * the pre-evolution files — Delta/Iceberg add-column semantics on
-    * plain parquet.
+    * Files within one live set may carry DIFFERENT schemas after an
+    * add-column evolution (an append with a wider frame); the read
+    * surfaces the union of their recorded schemas ([[scanEntries]])
+    * with nulls for the pre-evolution files — Delta/Iceberg add-column
+    * semantics on plain parquet.
     */
   def read(spark: SparkSession, table: String, version: Int = -1): DataFrame = {
     val v = if (version > 0) version else latestVersion(table)
@@ -2382,11 +2431,21 @@ object TxTable {
     * file name, `_dv_pos` = parquet row index) selected per scan
     * BEFORE any union (metadata columns don't survive a union).
     *
+    * The read schema comes from the LOG ([[recordedSchema]]), passed
+    * through `.schema(...)`: no footer-reading inference job per scan,
+    * and a plan built only for analysis (column names, predicate
+    * resolution) costs no job at all. It is the schema `mergeSchema`
+    * inference would derive from the same files. A read group holding
+    * any legacy entry (no recorded types) keeps the inference read.
+    *
     * Partitioned entries read PER SLOT: Spark's partition inference
     * rejects `<col>=<value>` dirs under differing non-kv parents
     * (CONFLICTING_DIRECTORY_STRUCTURES), so each commit slot scans
     * under its own basePath and the slots union by name — slot count
-    * is the number of live commits, which compaction bounds.
+    * is the number of live commits, which compaction bounds. The
+    * recorded schema holds only the data columns there: partition
+    * columns stay with Spark's directory inference (driver-side, no
+    * job), typed exactly as before.
     */
   private def scanEntries(spark: SparkSession, table: String,
       entries: Seq[FileEntry], withMeta: Boolean): DataFrame = {
@@ -2395,17 +2454,42 @@ object TxTable {
       else df.withColumn("_dv_fn",
           element_at(split(col("_metadata.file_path"), "/"), -1))
         .withColumn("_dv_pos", col("_metadata.row_index"))
+    def reader(es: Seq[FileEntry]) =
+      recordedSchema(spark, es) match {
+        case Some(s) => spark.read.schema(s)
+        case None    => spark.read.option("mergeSchema", "true")
+      }
     if (entries.exists(_.parts.nonEmpty)) {
       val bySlot = entries.groupBy(f =>
         f.path.split('/').take(2).mkString("/")) // data/<slot>
       bySlot.toSeq.sortBy(_._1).map { case (slot, es) =>
-        meta(spark.read.option("mergeSchema", "true")
+        meta(reader(es)
           .option("basePath",
             Paths.get(table).resolve(slot).toAbsolutePath.toString)
           .parquet(es.map(f => s"$table/${f.path}"): _*))
       }.reduce(_.unionByName(_, allowMissingColumns = true))
-    } else meta(spark.read.option("mergeSchema", "true")
+    } else meta(reader(entries)
       .parquet(entries.map(f => s"$table/${f.path}"): _*))
+  }
+
+  /** The data schema `mergeSchema` inference derives from `entries`'
+    * footers, rebuilt from their recorded types: parquet's own merge
+    * fold over the files in scan order (first file's columns first, new
+    * columns appended, nested types merged); the file source makes it
+    * nullable as it does an inferred one. Partition columns are left
+    * out (the directory inference types them). None when any entry is
+    * legacy.
+    */
+  private def recordedSchema(spark: SparkSession,
+      entries: Seq[FileEntry]): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.spark.sql.types.{StructField, StructType}
+    if (entries.isEmpty || !entries.forall(_.typed)) return None
+    val caseSensitive = spark.sessionState.conf.caseSensitiveAnalysis
+    Some(entries.map { e =>
+      StructType(e.cols.zip(e.types).collect {
+        case (n, t) if !e.parts.contains(n) => StructField(n, t)
+      })
+    }.distinct.reduce(org.apache.spark.sql.GraftBridge.mergeSchemas(_, _, caseSensitive)))
   }
 
   /** Filter `df` (which carries the `_dv_fn`/`_dv_pos` keys) down to
@@ -2726,9 +2810,23 @@ object TxTable {
       keyDisjoint ++ partPruned.filterNot(f => moverPaths.contains(f.path))))
   }
 
+  /** Evaluate `body` with `df` persisted, releasing it before returning:
+    * an operator that evaluates its input several times pays for it
+    * once, and nothing stays cached after the call (a stream thread
+    * never drains [[graft.util.CacheScope]]). A frame the caller
+    * already cached is used as-is and left cached.
+    */
+  private def pinned[A](df: DataFrame)(body: => A): A = {
+    val owned = df.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    if (owned) df.persist()
+    try body finally if (owned) { df.unpersist(); () }
+  }
+
   private def mergeSlotted(spark: SparkSession, table: String, updates: DataFrame,
       keyCol: String, statsCols: Seq[String], parent: Int, slot: String,
-      mergeSchema: Boolean = false): MergeResult = {
+      mergeSchema: Boolean = false): MergeResult = pinned(updates) {
+    // `updates` is pinned for the call: the bounds aggregate, the
+    // anti-join keys and the rewrite union evaluate it once
     val snap = resolveSnapshot(table, parent)
     val live = snap.files
     // PARTITION-AWARE rewrite: a hive-partitioned table merges with the
@@ -2870,7 +2968,7 @@ object TxTable {
       whenNotMatched: Seq[InsertClause] = Seq.empty,
       whenNotMatchedBySource: Seq[MergeClause] = Seq.empty,
       ledgerId: Option[Long] = None,
-      extraKeyCols: Seq[String] = Seq.empty): MergeResult = {
+      extraKeyCols: Seq[String] = Seq.empty): MergeResult = pinned(source) {
     require(whenMatched.nonEmpty || whenNotMatched.nonEmpty ||
       whenNotMatchedBySource.nonEmpty, "MERGE needs at least one clause")
     // COMPOSITE KEYS (r16): `extraKeyCols` adds equality conditions to
@@ -2914,7 +3012,7 @@ object TxTable {
         s"live files) — create() or append() the initial snapshot first")
     val parts = partitionColsOf(snap)
     val keyOrig = originalName(snap, keyCol)
-    val src = graft.util.CacheScope.cached(source)
+    val src = source // pinned for the call
     val srcPhys = toPhysical(snap, src)
     // matched-side candidates: every file that could hold a source key
     // (sound superset — see keyCandidates). Needed even when only
@@ -3071,30 +3169,32 @@ object TxTable {
     }
     if (changedFrame.isEmpty && ledgerId.isEmpty)
       return MergeResult(parent, 0, live.size)
-    val result = graft.util.CacheScope.cached(changedFrame.getOrElse(
-      toLogical(snap, rawRead(spark, table, live)).filter(lit(false))))
-    // CHECK constraints see the rows that actually land
-    enforceChecks(snap, result, s"MERGE (clauses) into $table")
-    val slot = f"v${parent + 1}%08d-mc"
-    val clusterCols =
-      ((parts.map(logicalName(snap, _)) ++ keyCols).distinct).map(col)
-    // no pre-write isEmpty probe: writeFiles detects the all-deleted
-    // case from the written slot itself (r17 — one fewer job per commit)
-    val written = writeFiles(spark, table, slot,
-      toPhysical(snap, result.repartitionByRange(
-        math.max(1, rewriteSet.size), clusterCols: _*)),
-      statsCols.map(originalName(snap, _)), parts)
-    // composite merges stamp a DISTINCT op type: CDF pairing keys on a
-    // single column, and pairing a composite window on its first
-    // column alone would mispair rows sharing it — mergeKeyFor only
-    // engages on type "merge", so the window stays insert/delete
-    // (conservative, correct)
-    val opStamp =
-      if (extraKeyCols.isEmpty) "merge" -> keyOrig
-      else "merge_multi" -> keyCols.map(originalName(snap, _)).mkString(",")
-    val v = commitResolved(table, parent, snap, untouched ++ written,
-      snap.batches ++ ledgerId, snap.renames, snap.drops, Some(opStamp))
-    MergeResult(v, rewriteSet.size, untouched.size)
+    val result = changedFrame.getOrElse(
+      toLogical(snap, rawRead(spark, table, live)).filter(lit(false)))
+    pinned(result) {
+      // CHECK constraints see the rows that actually land
+      enforceChecks(snap, result, s"MERGE (clauses) into $table")
+      val slot = f"v${parent + 1}%08d-mc"
+      val clusterCols =
+        ((parts.map(logicalName(snap, _)) ++ keyCols).distinct).map(col)
+      // no pre-write isEmpty probe: writeFiles detects the all-deleted
+      // case from the written slot itself (r17 — one fewer job per commit)
+      val written = writeFiles(spark, table, slot,
+        toPhysical(snap, result.repartitionByRange(
+          math.max(1, rewriteSet.size), clusterCols: _*)),
+        statsCols.map(originalName(snap, _)), parts)
+      // composite merges stamp a DISTINCT op type: CDF pairing keys on a
+      // single column, and pairing a composite window on its first
+      // column alone would mispair rows sharing it — mergeKeyFor only
+      // engages on type "merge", so the window stays insert/delete
+      // (conservative, correct)
+      val opStamp =
+        if (extraKeyCols.isEmpty) "merge" -> keyOrig
+        else "merge_multi" -> keyCols.map(originalName(snap, _)).mkString(",")
+      val v = commitResolved(table, parent, snap, untouched ++ written,
+        snap.batches ++ ledgerId, snap.renames, snap.drops, Some(opStamp))
+      MergeResult(v, rewriteSet.size, untouched.size)
+    }
   }
 
   /** DELETE BY KEY SET (r15 — the CDC-apply delete primitive): rows
@@ -3151,10 +3251,12 @@ object TxTable {
     * r16 (VERDICT-r15 wrong #1 + missing #4): the window nets to ONE
     * terminal row per key (an upsert image wins over its own
     * preimage), lands as ONE mergeClauses commit (was two:
-    * deleteKeys + merge), the feed frame persists for the single
-    * evaluation (was up to 4×), and `windowId` threads the batch
-    * ledger through the commit — a replayed window is a no-op with no
-    * jobs and no version (exactly-once CDC apply). Callers use the
+    * deleteKeys + merge), the netted feed is evaluated once
+    * (mergeClauses pins its source for the call and releases it before
+    * returning — nothing stays cached on the stream thread), and
+    * `windowId` threads the batch ledger through the commit — a
+    * replayed window is a no-op with no jobs and no version
+    * (exactly-once CDC apply). Callers use the
     * window's source `toVersion` (or any per-window-unique id in the
     * same ledger space as the table's streaming batch ids).
     */
@@ -3164,10 +3266,11 @@ object TxTable {
     val parent = latestVersion(table)
     if (windowId.exists(resolveSnapshot(table, parent).batches.contains))
       return parent // replayed window: exactly-once no-op
-    val c = graft.util.CacheScope.cached(changes)
     // one terminal row per key: 'u' (insert/update_postimage) sorts
-    // after 'd', so the upsert image wins its own preimage/delete row
-    val tagged = c.withColumn("_op",
+    // after 'd', so the upsert image wins its own preimage/delete row.
+    // mergeClauses pins the netted frame for its call, so the feed
+    // evaluates once without a cache of its own
+    val tagged = changes.withColumn("_op",
       when(col("_change_type").isin("insert", "update_postimage"), lit("u"))
         .otherwise(lit("d")))
       .drop("_change_type")

@@ -22,6 +22,14 @@ object GraftBridge {
   def toCatalystEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** Parquet's schema-merge fold (`StructType.merge` is `private[sql]`)
+    * — the same left fold `mergeSchema` inference runs over footers:
+    * left fields keep their order, new right fields append, nested
+    * types merge recursively, incompatible types throw.
+    */
+  def mergeSchemas(a: types.StructType, b: types.StructType,
+      caseSensitive: Boolean): types.StructType = a.merge(b, caseSensitive)
+
   /** Wrap a resolved logical plan as a DataFrame (`Dataset.ofRows` is
     * `private[sql]`) — the SQL-DML rule's way of handing a MERGE
     * statement's source plan to the TxTable clause engine.

@@ -28,7 +28,7 @@ class CacheAuditSpec extends SparkSpecBase {
       "streaming/EventStreams.scala", // foreachBatch try/finally unpersist
       "operators/Similarity.scala", // OPQ training sample, unpersisted after collect
       "operators/Dedup.scala",      // cluster loop pins; final round -> CacheScope.register
-      "sources/TxTable.scala",      // dvDeleteCore's fresh-hits pin, try/finally unpersist
+      "sources/TxTable.scala",      // dvDeleteCore's fresh-hits pin + pinned(), try/finally unpersist
       "ScaleRehearsal.scala")       // standalone main, session stopped at exit
     val offenders = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
