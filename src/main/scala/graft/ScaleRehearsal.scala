@@ -943,7 +943,7 @@ object ScaleRehearsal {
     val mergeOk = mRes.rewritten <= 3 && mRes.untouched >= files - 3
     // one-band delete
     val (dRes, tDelete) = timed(
-      TxTable.delete(spark, t, "id", (lo + 100).toString, (lo + 5000).toString, Seq("id")))
+      TxTable.deleteWhere(spark, t, col("id").between(lo + 100, lo + 5000), Seq("id")))
     val deleteOk = dRes.rewritten <= 3 &&
       TxTable.read(spark, t).filter(col("id").between(lo + 100, lo + 5000)).count() == 0
     // one-band CLAUSE MERGE (r16): conditional delete + update confined
@@ -998,7 +998,7 @@ object ScaleRehearsal {
         .agg(count(lit(1)), count(when(col("v") === 500, 1))).head()
       (r.getLong(0), r.getLong(1))
     }
-    val (_, tDv) = timed(TxTable.deleteWithDV(spark, t, "v", "500", "500"))
+    val (_, tDv) = timed(TxTable.deleteWithDVWhere(spark, t, col("v") === 500))
     val afterDv = TxTable.manifest(t, TxTable.latestVersion(t)).files
     val (postTotal, tDvRead) = timed(TxTable.read(spark, t).count())
     val dvOk = afterDv.map(_.path).toSet == beforePaths &&

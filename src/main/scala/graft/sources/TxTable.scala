@@ -18,10 +18,16 @@ import org.apache.spark.sql.functions._
   *
   * Layout:
   * {{{
-  *   <table>/data/v<N>/part-*.parquet        // immutable data files
+  *   <table>/data/v<N>-<tag>-<hex>/part-*.parquet  // immutable data files, one slot per write
   *   <table>/_log/v<N>.json                  // version record: checkpoint or delta actions
   *   <table>/_log/v<N>.checkpoint.json       // vacuum's horizon sidecar (full snapshot)
   * }}}
+  * A data SLOT is named by [[newSlot]]: the version its writer
+  * expected to commit, the operation's tag and 12 random hex digits.
+  * The random part makes every write's slot unique, so a write never
+  * collides with another writer's or with a crashed attempt's files;
+  * the version prefix only keeps slots sorted in commit order. Nothing
+  * parses slot names: the manifest references files by path.
   * A resolved manifest lists every live file with its row count and
   * typed column min/max. Readers resolve the latest (or any
   * historical) version and read exactly its files — data files are
@@ -36,8 +42,8 @@ import org.apache.spark.sql.functions._
   * a given version; the loser gets
   * [[java.nio.file.FileAlreadyExistsException]] wrapped as
   * [[java.util.ConcurrentModificationException]] and must re-read the
-  * new latest version and retry (optimistic concurrency, the Delta
-  * protocol's shape). link(2) is atomic on POSIX filesystems and HDFS;
+  * new latest version and retry ([[withConflictRetry]]; optimistic
+  * concurrency, the Delta protocol's shape). link(2) is atomic on POSIX filesystems and HDFS;
   * an object-store deployment swaps this single primitive for a
   * putIfAbsent/conditional-write commit — the rest of the protocol is
   * unchanged.
@@ -46,7 +52,7 @@ import org.apache.spark.sql.functions._
   * `removes` + `addBatches`) — not the live file set — so commit cost
   * is proportional to what the commit changed, never to the table
   * (10⁶ live files must not mean a ~100 MB JSON per append, nor per
-  * [[appendConcurrent]] OCC retry). Every [[CheckpointInterval]]-th
+  * [[append]] OCC rebase). Every [[CheckpointInterval]]-th
   * version (and v1) is instead a full CHECKPOINT carrying the entire
   * live set; snapshot resolution walks back from the requested
   * version to the nearest checkpoint and replays the ≤
@@ -121,7 +127,7 @@ object TxTable {
     */
   /** `dv` / `dvRef` / `dvCount`: the file's DELETION VECTOR — physical
     * row positions (parquet row indexes) deleted MERGE-ON-READ by
-    * [[deleteWithDV]]. The data file stays byte-identical; every read
+    * [[deleteWithDVWhere]]. The data file stays byte-identical; every read
     * filters the positions out ([[rawRead]]). Since r15 the positions
     * live in a per-file SIDECAR under `_dv/` (`dvRef` names the
     * dataset, `dvCount` its row count for this file) written and read
@@ -281,6 +287,43 @@ object TxTable {
     */
   private def checkpointFile(table: String, v: Int): Path =
     logDir(table).resolve(f"v$v%08d.checkpoint.json")
+
+  /** A writer-unique data slot for a write on top of `parent`:
+    * `v<parent+1>-<tag>-<12 hex>`. Only the version log arbitrates
+    * between writers, so a slot can never collide — neither with a
+    * concurrent writer's nor with the files of a crashed attempt that
+    * never published (a re-run writes a fresh slot; vacuum reclaims
+    * the orphan).
+    */
+  private def newSlot(parent: Int, tag: String): String =
+    f"v${parent + 1}%08d-$tag-" +
+      java.util.UUID.randomUUID().toString.replace("-", "").take(12)
+
+  /** Commit attempts [[withConflictRetry]] makes beyond the first. */
+  val MaxConflictRetries = 20
+
+  /** Run `attempt` until it commits, re-running it when it loses the
+    * version race ([[java.util.ConcurrentModificationException]]), at
+    * most [[MaxConflictRetries]] times. The conflict rule is Delta's:
+    * APPENDS REBASE — [[append]] retries internally, re-attaching the
+    * files it already wrote to each new latest version — while
+    * REWRITES RE-RUN: a merge, delete, update or compaction read the
+    * snapshot it rewrites, so wrapping it here re-resolves the latest
+    * version and recomputes the rewrite against it (every mutation
+    * resolves `latestVersion` when it starts). A lost attempt's files
+    * stay unreferenced until [[vacuum]].
+    */
+  def withConflictRetry[A](attempt: => A): A = {
+    var failures = 0
+    var out: Option[A] = None
+    while (out.isEmpty)
+      try out = Some(attempt)
+      catch {
+        case _: java.util.ConcurrentModificationException
+            if failures < MaxConflictRetries => failures += 1
+      }
+    out.get
+  }
 
   /** Latest committed version, 0 when the table does not exist. */
   def latestVersion(table: String): Int = {
@@ -509,7 +552,7 @@ object TxTable {
         if (net.contains(p)) net.remove(p) else removed.add(p)
         // a remove supersedes any earlier DV change on the same path in
         // this range: the consumer sees ONE terminal action per path —
-        // without this, deleteWithDV-then-compact inside one window put
+        // without this, deleteWithDVWhere-then-compact inside one window put
         // the path in BOTH the removed and dv-changed outputs (double-
         // counted deletes, and the CDF's forward fold resurrected the
         // removed path in its cached snapshot)
@@ -650,17 +693,6 @@ object TxTable {
     ()
   }
 
-  /** The commit core: serialize version parent+1 as a full checkpoint
-    * (v1 and every [[CheckpointInterval]]-th version) or as an
-    * O(delta) action record (`adds`/`removes`/`addBatches` vs the
-    * parent snapshot the caller already resolved). The exclusive
-    * publish arbitrates concurrent writers either way.
-    */
-  private def commitResolved(table: String, parent: Int, parentSnap: Snapshot,
-      files: Seq[FileEntry], batches: Set[Long]): Int =
-    commitResolved(table, parent, parentSnap, files, batches,
-      parentSnap.renames, parentSnap.drops)
-
   /** [[commitResolved]] with an OPERATION stamp — every public write
     * path routes through this so [[history]] can report what each
     * version was (Delta's DESCRIBE HISTORY operation column).
@@ -671,7 +703,13 @@ object TxTable {
     commitResolved(table, parent, parentSnap, files, batches,
       parentSnap.renames, parentSnap.drops, Some(op))
 
-  /** `op`: optional OPERATION metadata stamped on the version record
+  /** The commit core: serialize version parent+1 as a full checkpoint
+    * (v1 and every [[CheckpointInterval]]-th version) or as an
+    * O(delta) action record (`adds`/`removes`/`addBatches` vs the
+    * parent snapshot the caller already resolved). The exclusive
+    * publish arbitrates concurrent writers either way.
+    *
+    * `op`: optional OPERATION metadata stamped on the version record
     * (`{"type": "merge", "key": <physical key col>}`) — what lets the
     * change feed pair a keyed upsert's delete+insert rows into
     * `update_preimage`/`update_postimage` (Delta records the same in
@@ -990,7 +1028,7 @@ object TxTable {
     }
   }
 
-  /** Write `df` as a new immutable file set under data/v<slot>/ and
+  /** Write `df` as a new immutable file set under data/<slot>/ and
     * return entries with per-file rows + typed min/max for `statsCols`
     * (the skipping keys — integral, string, date, decimal all work).
     * Stats come from the just-written parquet FOOTERS when the write
@@ -1368,7 +1406,7 @@ object TxTable {
       statsCols: Seq[String]): Int = {
     require(latestVersion(table) == 0, s"table exists: $table")
     commitOp(table, 0, EmptySnapshot,
-      writeFiles(spark, table, "v00000001", df, statsCols), Set.empty,
+      writeFiles(spark, table, newSlot(0, "cr"), df, statsCols), Set.empty,
       "create" -> "")
   }
 
@@ -1376,7 +1414,7 @@ object TxTable {
     * table IN PLACE, without rewriting a byte of data (r16 — Delta's
     * `CONVERT TO DELTA`, the onboarding step for data that predates
     * the lakehouse): data files are RENAMED into the versioned layout
-    * (`data/v00000001/…`, a metadata move on any real filesystem),
+    * (a fresh `data/<slot>/…`, a metadata move on any real filesystem),
     * hive-style `col=value` partition directories are auto-detected
     * and preserved (the manifest records each file's partition values
     * like any partitioned write), and ONE distributed aggregate pass
@@ -1420,7 +1458,8 @@ object TxTable {
         s"(${partShapes.map(_.mkString("/")).mkString(" vs ")}) — " +
         s"one dataset has one directory shape")
     val partCols = partShapes.head
-    val slotDir = root.resolve("data").resolve("v00000001")
+    val slot = newSlot(0, "cv")
+    val slotDir = root.resolve("data").resolve(slot)
     found.foreach { rel =>
       val dst = slotDir.resolve(rel.toString)
       Files.createDirectories(dst.getParent)
@@ -1436,12 +1475,22 @@ object TxTable {
         }.toSeq
       }
     commitOp(table, 0, EmptySnapshot,
-      harvestSlot(spark, table, "v00000001", stats, partCols), Set.empty,
+      harvestSlot(spark, table, slot, stats, partCols), Set.empty,
       "convert" -> "")
   }
 
   /** Append-only commit: old files carry over by reference — an
     * O(delta) action record unless the version lands on a checkpoint.
+    *
+    * CONCURRENT appenders REBASE: the data lands ONCE, and a lost
+    * version race re-attaches the SAME files to the new latest version
+    * ([[withConflictRetry]]) — append vs append is always compatible
+    * (Delta's disjoint-operation rule), so a retry is pure manifest
+    * work, O(1): no rewrite, no re-read. A rebase re-checks the written
+    * rows only when a concurrent commit changed the CHECK constraints,
+    * re-derives the schema declaration against the new parent, and
+    * refuses when a concurrent rename or drop changed the column
+    * mapping the files were written under.
     *
     * SCHEMA (r16): an append whose frame carries columns beyond the
     * table's logical schema refuses unless `mergeSchema = true` — the
@@ -1453,19 +1502,33 @@ object TxTable {
     */
   def append(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String], mergeSchema: Boolean = false): Int = {
-    val parent = latestVersion(table)
-    val slot = f"v${parent + 1}%08d"
-    val snap = resolveSnapshot(table, parent)
-    require(snap.files.forall(_.parts.isEmpty),
+    val what = s"append into $table"
+    val parentAtWrite = latestVersion(table)
+    val snapAtWrite = resolveSnapshot(table, parentAtWrite)
+    require(snapAtWrite.files.forall(_.parts.isEmpty),
       s"$table is hive-partitioned — use appendPartitioned (a flat append " +
         s"would mix layouts in one live set and break the basePath scan)")
-    val newAdded = schemaEvolution(snap, df, mergeSchema,
-      s"append into $table")
-    val written = writeFiles(spark, table, slot, toPhysical(snap, df),
-      statsCols.map(originalName(snap, _)))
-    enforceChecksWritten(spark, table, snap, written, s"append into $table")
-    commitResolved(table, parent, snap, snap.files ++ written, snap.batches,
-      snap.renames, snap.drops, Some("append" -> ""), None, newAdded)
+    schemaEvolution(snapAtWrite, df, mergeSchema, what)
+    val written = writeFiles(spark, table, newSlot(parentAtWrite, "a"),
+      toPhysical(snapAtWrite, df), statsCols.map(originalName(snapAtWrite, _)))
+    enforceChecksWritten(spark, table, snapAtWrite, written, what)
+    var checkedUnder = snapAtWrite.checks
+    withConflictRetry {
+      val parent = latestVersion(table)
+      val snap = resolveSnapshot(table, parent)
+      if (snap.renames != snapAtWrite.renames || snap.drops != snapAtWrite.drops)
+        throw new IllegalStateException(
+          s"$what: a concurrent commit renamed or dropped columns after " +
+            s"its files were written under the old mapping — re-run the append")
+      if (snap.checks != checkedUnder) {
+        enforceChecks(snap, toLogical(snap, rawRead(spark, table, written)),
+          s"$what (rebased under new constraints)")
+        checkedUnder = snap.checks
+      }
+      commitResolved(table, parent, snap, snap.files ++ written, snap.batches,
+        snap.renames, snap.drops, Some("append" -> ""), None,
+        schemaEvolution(snap, df, mergeSchema, what))
+    }
   }
 
   /** The evolution decision for a write frame: None (inherit) when the
@@ -1491,7 +1554,7 @@ object TxTable {
     }
 
   /** Create the table with HIVE-STYLE PARTITION LAYOUT: data lands
-    * under `data/v00000001/<col>=<value>/part-*.parquet` — the
+    * under `data/<slot>/<col>=<value>/part-*.parquet` — the
     * directory shape downstream engines and users prune on (the
     * reference's `date_dim_id` is exactly such a column,
     * init_db.sql:29) — while the manifest records each file's
@@ -1509,7 +1572,7 @@ object TxTable {
     require(latestVersion(table) == 0, s"table exists: $table")
     require(partitionCols.nonEmpty, "partitionCols must be non-empty")
     commitOp(table, 0, EmptySnapshot,
-      writeFiles(spark, table, "v00000001", df, statsCols, partitionCols),
+      writeFiles(spark, table, newSlot(0, "cr"), df, statsCols, partitionCols),
       Set.empty, "create" -> "")
   }
 
@@ -1535,9 +1598,8 @@ object TxTable {
       s"partition columns $partitionCols do not match the table's $declared")
     val newAdded = schemaEvolution(snap, df, mergeSchema,
       s"append into $table")
-    val slot = f"v${parent + 1}%08d"
-    val written = writeFiles(spark, table, slot, toPhysical(snap, df),
-      statsCols.map(originalName(snap, _)),
+    val written = writeFiles(spark, table, newSlot(parent, "a"),
+      toPhysical(snap, df), statsCols.map(originalName(snap, _)),
       partitionCols.map(originalName(snap, _)))
     enforceChecksWritten(spark, table, snap, written, s"append into $table")
     commitResolved(table, parent, snap, snap.files ++ written,
@@ -1598,11 +1660,10 @@ object TxTable {
       specOrig.forall { case (c, v) => f.parts.get(c).contains(v) }
     }
     require(target.nonEmpty, s"no files match partition spec $spec in $table")
-    val slot = f"v${parent + 1}%08d-c"
     val df = toLogical(snap, rawRead(spark, table, target))
       .repartition(math.max(1, targetFiles))
     commitOp(table, parent, snap,
-      others ++ writeFiles(spark, table, slot, toPhysical(snap, df),
+      others ++ writeFiles(spark, table, newSlot(parent, "c"), toPhysical(snap, df),
         statsCols.map(originalName(snap, _)),
         partitionCols.map(originalName(snap, _))), snap.batches,
       "compact" -> "")
@@ -1623,60 +1684,12 @@ object TxTable {
     require(declared.nonEmpty, s"$table is not hive-partitioned — use compact")
     require(declared.sorted == partitionCols.map(originalName(snap, _)).sorted,
       s"partition columns $partitionCols do not match the table's $declared")
-    val slot = f"v${parent + 1}%08d-c"
     val df = toLogical(snap, rawRead(spark, table, snap.files))
     commitOp(table, parent, snap,
-      writeFiles(spark, table, slot, toPhysical(snap, df),
+      writeFiles(spark, table, newSlot(parent, "c"), toPhysical(snap, df),
         statsCols.map(originalName(snap, _)),
         partitionCols.map(originalName(snap, _))), snap.batches,
       "compact" -> "")
-  }
-
-  /** CONCURRENT-WRITER append: the multi-writer form of [[append]].
-    * [[append]] names its data slot after the version it expects to
-    * win, so two simultaneous appenders collide at the DATA write
-    * (errorifexists on the same slot) before the manifest race even
-    * arbitrates. Here the data lands ONCE under a writer-unique slot,
-    * then the manifest commit retries on an OCC conflict by
-    * re-reading the new latest and re-attaching the SAME files —
-    * append vs append is always semantically compatible (Delta's
-    * disjoint-operation conflict resolution), so the rebase is pure
-    * manifest work: no data rewrite, no re-read, O(1) per retry.
-    * At 100 TB this is the ingestion norm — N loaders appending to
-    * one table — and the retry loop is the entire coordination cost.
-    */
-  def appendConcurrent(spark: SparkSession, table: String, df: DataFrame,
-      statsCols: Seq[String], maxRetries: Int = 20): Int = {
-    val slot = f"a-${java.util.UUID.randomUUID().toString.take(12)}"
-    val snapAtWrite = resolveSnapshot(table, latestVersion(table))
-    val written = writeFiles(spark, table, slot, toPhysical(snapAtWrite, df),
-      statsCols.map(originalName(snapAtWrite, _)))
-    enforceChecksWritten(spark, table, snapAtWrite, written,
-      s"append into $table")
-    var attempt = 0
-    var checkedUnder = snapAtWrite.checks
-    while (true) {
-      val parent = latestVersion(table)
-      val snap = resolveSnapshot(table, parent)
-      // a CHECK constraint added by a CONCURRENT writer between the
-      // file write and this commit attempt must gate THIS append too:
-      // re-validate the already-written rows against the new
-      // constraint set before attaching them (ADVICE r15) — a cheap
-      // scan of only this append's files
-      if (snap.checks != checkedUnder) {
-        enforceChecks(snap, toLogical(snap, rawRead(spark, table, written)),
-          s"append into $table (rebased under new constraints)")
-        checkedUnder = snap.checks
-      }
-      try return commitOp(table, parent, snap, snap.files ++ written,
-        snap.batches, "append" -> "")
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   /** OVERWRITE commit: the new version's live set is ONLY the new
@@ -1687,7 +1700,6 @@ object TxTable {
   def overwrite(spark: SparkSession, table: String, df: DataFrame,
       statsCols: Seq[String]): Int = {
     val parent = latestVersion(table)
-    val slot = f"v${parent + 1}%08d-o"
     val snap = resolveSnapshot(table, parent)
     // same refusal as compact/zorder (r16): a flat rewrite of a
     // hive-partitioned live set would silently DE-PARTITION it —
@@ -1696,8 +1708,8 @@ object TxTable {
     require(snap.files.forall(_.parts.isEmpty),
       s"$table is hive-partitioned — a flat overwrite would silently " +
         s"de-partition it; use overwritePartitions (dynamic) instead")
-    val written = writeFiles(spark, table, slot, toPhysical(snap, df),
-      statsCols.map(originalName(snap, _)))
+    val written = writeFiles(spark, table, newSlot(parent, "o"),
+      toPhysical(snap, df), statsCols.map(originalName(snap, _)))
     enforceChecksWritten(spark, table, snap, written, s"overwrite of $table")
     commitOp(table, parent, snap, written, snap.batches,
       "overwrite" -> "")
@@ -1722,8 +1734,7 @@ object TxTable {
     val partsOrig = partitionCols.map(originalName(snap, _))
     require(declared.isEmpty || declared.sorted == partsOrig.sorted,
       s"partition columns $partitionCols do not match the table's $declared")
-    val slot = f"v${parent + 1}%08d-po"
-    val written = writeFiles(spark, table, slot, toPhysical(snap, df),
+    val written = writeFiles(spark, table, newSlot(parent, "po"), toPhysical(snap, df),
       statsCols.map(originalName(snap, _)), partsOrig)
     if (written.isEmpty) return MergeResult(parent, 0, snap.files.size)
     enforceChecksWritten(spark, table, snap, written,
@@ -2369,9 +2380,7 @@ object TxTable {
     if (snap.checks.isEmpty || written.isEmpty) return
     try enforceChecks(snap, toLogical(snap, rawRead(spark, table, written)), what)
     catch { case e: Throwable =>
-      // remove the whole slot tree, not just the parquet files — a
-      // leftover (even empty) slot dir would collide with the next
-      // commit attempt at the same version (errorifexists)
+      // the written slot never commits: remove its whole tree
       written.map(_.path.split('/').take(2).mkString("/")).distinct
         .foreach { slot =>
           val dir = Paths.get(table, slot)
@@ -2651,51 +2660,6 @@ object TxTable {
 
   // ------------------------------------------------------------------ merge
 
-  /** MERGE INTO (upsert on `keyCol`): rows whose key matches an update
-    * are REPLACED, new keys are INSERTED — copy-on-write at file
-    * granularity. Only files whose key-range stats intersect the
-    * update keys' range are rewritten; the rest carry over by
-    * reference, so a clustered table rewrites a handful of files.
-    * CONTRACT: `updates` must carry one row per key — duplicate update
-    * keys would all insert (SQL MERGE's "multiple rows matched" error
-    * class); callers dedupe upstream (keepLatest is the usual step).
-    */
-  def merge(spark: SparkSession, table: String, updates: DataFrame,
-      keyCol: String, statsCols: Seq[String],
-      mergeSchema: Boolean = false): MergeResult = {
-    val parent = latestVersion(table)
-    mergeSlotted(spark, table, updates, keyCol, statsCols, parent,
-      f"v${parent + 1}%08d", mergeSchema)
-  }
-
-  /** Concurrent-writer MERGE: unlike [[appendConcurrent]]'s rebase, a
-    * merge that loses the version race must RE-EXECUTE against the new
-    * latest — its rewrite set depends on the snapshot it read (the
-    * concurrent commit may have rewritten, appended into, or deleted
-    * from the very key range this merge touched, so re-attaching the
-    * stale outputs would resurrect replaced rows or drop the other
-    * writer's). That is Delta's conflict rule: appends rebase,
-    * overlapping rewrites re-run. Data lands under a writer-unique
-    * slot per attempt; a failed attempt's files are unreferenced
-    * garbage until [[vacuum]] (the standard OCC cost model).
-    */
-  def mergeConcurrent(spark: SparkSession, table: String, updates: DataFrame,
-      keyCol: String, statsCols: Seq[String], maxRetries: Int = 20): MergeResult = {
-    var attempt = 0
-    while (true) {
-      val parent = latestVersion(table)
-      try {
-        return mergeSlotted(spark, table, updates, keyCol, statsCols, parent,
-          f"m-${java.util.UUID.randomUUID().toString.take(12)}")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
   /** The table's declared partition columns (PHYSICAL names), from the
     * live files' recorded partition values — empty on flat tables.
     */
@@ -2703,7 +2667,7 @@ object TxTable {
     snap.files.flatMap(_.parts.keys).distinct.sorted
 
   /** CANDIDATE-FILE selection shared by the keyed-mutation family
-    * ([[mergeSlotted]] / [[mergeClauses]] / [[deleteKeys]]): which live
+    * ([[merge]] / [[mergeClauses]] / [[deleteKeys]]): which live
     * files could hold a row whose `keyOrig` appears in `probePhys`
     * (physical names). Returns None when the probe is empty (no
     * candidate keys → the caller commits nothing), otherwise
@@ -2822,11 +2786,27 @@ object TxTable {
     try body finally if (owned) { df.unpersist(); () }
   }
 
-  private def mergeSlotted(spark: SparkSession, table: String, updates: DataFrame,
-      keyCol: String, statsCols: Seq[String], parent: Int, slot: String,
+  /** MERGE INTO (upsert on `keyCol`): rows whose key matches an update
+    * are REPLACED, new keys are INSERTED — copy-on-write at file
+    * granularity. Only files whose key-range stats intersect the
+    * update keys' range are rewritten; the rest carry over by
+    * reference, so a clustered table rewrites a handful of files.
+    * CONTRACT: `updates` must carry one row per key — duplicate update
+    * keys would all insert (SQL MERGE's "multiple rows matched" error
+    * class); callers dedupe upstream (keepLatest is the usual step).
+    *
+    * A merge that loses the version race must RE-EXECUTE against the
+    * new latest, never rebase: its rewrite set depends on the snapshot
+    * it read (a concurrent commit may have rewritten, appended into or
+    * deleted from the very key range it touched). Concurrent writers
+    * wrap it in [[withConflictRetry]].
+    */
+  def merge(spark: SparkSession, table: String, updates: DataFrame,
+      keyCol: String, statsCols: Seq[String],
       mergeSchema: Boolean = false): MergeResult = pinned(updates) {
     // `updates` is pinned for the call: the bounds aggregate, the
     // anti-join keys and the rewrite union evaluate it once
+    val parent = latestVersion(table)
     val snap = resolveSnapshot(table, parent)
     val live = snap.files
     // PARTITION-AWARE rewrite: a hive-partitioned table merges with the
@@ -2868,7 +2848,7 @@ object TxTable {
     // columns lead the range key so each directory's files stay
     // key-contiguous).
     val clusterCols = ((parts :+ keyOrig).distinct).map(col)
-    val written = writeFiles(spark, table, slot,
+    val written = writeFiles(spark, table, newSlot(parent, "m"),
       survivors.repartitionByRange(math.max(1, touched.size), clusterCols: _*),
       statsCols.map(originalName(snap, _)), parts)
     val v = commitResolved(table, parent, snap, untouched ++ written,
@@ -3174,12 +3154,11 @@ object TxTable {
     pinned(result) {
       // CHECK constraints see the rows that actually land
       enforceChecks(snap, result, s"MERGE (clauses) into $table")
-      val slot = f"v${parent + 1}%08d-mc"
       val clusterCols =
         ((parts.map(logicalName(snap, _)) ++ keyCols).distinct).map(col)
       // no pre-write isEmpty probe: writeFiles detects the all-deleted
       // case from the written slot itself (r17 — one fewer job per commit)
-      val written = writeFiles(spark, table, slot,
+      val written = writeFiles(spark, table, newSlot(parent, "mc"),
         toPhysical(snap, result.repartitionByRange(
           math.max(1, rewriteSet.size), clusterCols: _*)),
         statsCols.map(originalName(snap, _)), parts)
@@ -3228,11 +3207,10 @@ object TxTable {
     if (cand.isEmpty) return MergeResult(parent, 0, live.size)
     val (touched, untouched) = cand.get
     if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    val slot = f"v${parent + 1}%08d-d"
     val kept = rawRead(spark, table, touched)
       .join(probe.select(col(keyOrig)).distinct(), Seq(keyOrig), "left_anti")
     val clusterCols = ((parts :+ keyOrig).distinct).map(col)
-    val written = writeFiles(spark, table, slot,
+    val written = writeFiles(spark, table, newSlot(parent, "d"),
       kept.repartitionByRange(math.max(1, touched.size), clusterCols: _*),
       statsCols.map(originalName(snap, _)), parts)
     val v = commitOp(table, parent, snap, untouched ++ written, snap.batches,
@@ -3288,291 +3266,20 @@ object TxTable {
     latestVersion(table)
   }
 
-  /** DELETE WHERE `predCol` ∈ [lo, hi] (bounds as the stats-string
-    * rendering of the column's type, like [[pruneTyped]]): copy-on-
-    * write at file granularity — only files whose min/max stats
-    * intersect the range are rewritten WITHOUT their matching rows,
-    * disjoint files carry over by reference, and a rewrite left empty
-    * writes nothing (the file simply leaves the live set). The
-    * Delta-class row-level DELETE with data skipping; nulls never
-    * match a range predicate, so they survive. Old snapshots stay
-    * readable (immutable files + manifest isolation).
-    */
-  def delete(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, statsCols: Seq[String]): MergeResult = {
-    val parent = latestVersion(table)
-    deleteSlotted(spark, table, predCol, lo, hi, statsCols, parent,
-      f"v${parent + 1}%08d-d")
-  }
-
-  /** Concurrent-writer DELETE — [[mergeConcurrent]]'s re-execute-on-
-    * conflict recipe applied to [[delete]] (a rewriting mutation can
-    * never rebase stale outputs; see mergeConcurrent's contract).
-    */
-  def deleteConcurrent(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, statsCols: Seq[String],
-      maxRetries: Int = 20): MergeResult = {
-    var attempt = 0
-    while (true) {
-      val parent = latestVersion(table)
-      try {
-        return deleteSlotted(spark, table, predCol, lo, hi, statsCols, parent,
-          f"d-${java.util.UUID.randomUUID().toString.take(12)}")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def deleteSlotted(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, statsCols: Seq[String], parent: Int,
-      slot: String): MergeResult = {
-    val snap = resolveSnapshot(table, parent)
-    val live = snap.files
-    val parts = partitionColsOf(snap)
-    val predOrig = originalName(snap, predCol)
-    // METADATA-ONLY fast path: a partition column is constant per file
-    // (one directory per value), so a file whose recorded value falls
-    // in [lo, hi] matches on EVERY row — it simply leaves the live set
-    // as a pure manifest remove: zero data IO, an O(delta) commit (the
-    // DROP PARTITION shape — at 100 TB a retention delete must never
-    // rewrite a byte). Applies only when every live file records the
-    // column; a mixed/legacy set falls through to the row-level rewrite.
-    if (parts.contains(predOrig) && live.forall(_.parts.contains(predOrig))) {
-      val (dropped, kept) = live.partition { f =>
-        f.stats.get(predOrig).exists(_.intersects(lo, hi))
-      }
-      if (dropped.isEmpty) return MergeResult(parent, 0, live.size)
-      val v = commitOp(table, parent, snap, kept, snap.batches,
-        "delete" -> predOrig)
-      return MergeResult(v, dropped.size, kept.size)
-    }
-    val (touched, untouched) = live.partition { f =>
-      f.stats.get(predOrig).forall(_.intersects(lo, hi))
-    }
-    if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    // partitioned tables rewrite LAYOUT-PRESERVING: survivors land
-    // under their own <col>=<value> dirs (writeFiles' partitionBy),
-    // disjoint files carry by reference — pruning and mutation compose
-    val touchedDf = rawRead(spark, table, touched)
-    val dt = touchedDf.schema(predOrig).dataType
-    val kept = touchedDf.filter(col(predOrig) < lit(lo).cast(dt) ||
-      col(predOrig) > lit(hi).cast(dt) || col(predOrig).isNull)
-    // same clustering-preservation contract as merge's rewrite
-    val clusterCols = ((parts :+ predOrig).distinct).map(col)
-    val written = writeFiles(spark, table, slot,
-      kept.repartitionByRange(math.max(1, touched.size), clusterCols: _*),
-      statsCols.map(originalName(snap, _)), parts)
-    val v = commitOp(table, parent, snap, untouched ++ written, snap.batches,
-      "delete" -> predOrig)
-    MergeResult(v, touched.size, untouched.size)
-  }
-
-  /** DELETE WHERE `predCol` ∈ [lo, hi] via DELETION VECTORS — the
-    * MERGE-ON-READ point-delete tier beside [[delete]]'s copy-on-write
-    * (Delta's deletion-vector shape): no data file is rewritten;
-    * instead each touched file's matching PHYSICAL ROW POSITIONS
-    * (parquet row indexes) are recorded in its manifest entry and
-    * every read anti-joins them out ([[rawRead]]). At 100 TB this is
-    * the GDPR-purge shape — k scattered rows across k files must not
-    * rewrite k whole files. Old snapshots are untouched (the DV lives
-    * in the NEW version's entries only); [[compact]]/
-    * [[compactPartitioned]]/the mutation rewrites MATERIALIZE DVs
-    * (they read through [[rawRead]]) and the rewritten files carry
-    * none; [[changesBetween]] surfaces DV'd rows as deletes; the
-    * streaming source treats a DV commit as a content change
-    * (append-only abort unless ignoreChanges). Stats keep describing
-    * the physical file — conservative bounds, never wrong. Positions
-    * live in per-file SIDECAR files written and read executor-side
-    * ([[DvStore]], r15): the driver sees only per-file counts, reads
-    * filter scan-locally with no broadcast, and accumulated tombstones
-    * have no per-table ceiling — `maxDvRows` is a per-delete advisory
-    * that a bigger delete belongs to copy-on-write. A lost OCC race
-    * leaves the attempt's sidecar dataset as unreferenced garbage
-    * until [[vacuum]] (the standard OCC cost model, same as merge).
-    */
-  def deleteWithDV(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, maxDvRows: Int = 1 << 22): MergeResult = {
-    val parent = latestVersion(table)
-    val snap = resolveSnapshot(table, parent)
-    val live = snap.files
-    val predOrig = originalName(snap, predCol)
-    val (touched, untouched) = live.partition { f =>
-      f.stats.get(predOrig).forall(_.intersects(lo, hi))
-    }
-    if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    // raw scan WITH row positions, old DVs NOT applied: positions are
-    // physical. Already-tombstoned rows re-match the predicate, so the
-    // FRESH set anti-joins the existing tombstones out (executor-side —
-    // a repeated/overlapping DV delete neither re-counts dead rows
-    // toward the cap, nor reports them rewritten, nor commits a no-op
-    // version). NOTHING position-shaped ever reaches the driver (r15,
-    // VERDICT r14 #1): the driver collects ONE COUNT PER TOUCHED FILE;
-    // positions flow scan → sidecar dataset entirely in executors, so
-    // maxDvRows is a per-delete TIER-FIT advisory (bigger belongs to
-    // copy-on-write), no longer a table-lifetime ceiling.
-    val partCols = touched.flatMap(_.parts.keys).distinct.sorted
-    val scanDf = scanEntries(spark, table, touched, withMeta = true)
-    val dt = scanDf.schema(predOrig).dataType
-    val hits = scanDf.filter(col(predOrig) >= lit(lo).cast(dt) &&
-        col(predOrig) <= lit(hi).cast(dt))
-      .select(dvKeyCol(partCols).as("_t_key"), col("_dv_pos").as("_t_pos"))
-    dvDeleteCore(spark, table, parent, snap, touched, partCols, hits, maxDvRows)
-  }
-
-  /** The DV-delete tail shared by the band and predicate forms: fresh
-    * hits (minus existing tombstones), per-file counts, sidecar write,
-    * manifest commit — positions never touch the driver.
-    */
-  private def dvDeleteCore(spark: SparkSession, table: String, parent: Int,
-      snap: Snapshot, touched: Seq[FileEntry], partCols: Seq[String],
-      hits: DataFrame, maxDvRows: Int): MergeResult = {
-    val live = snap.files
-    val oldDvd = touched.filter(_.hasDv)
-    val fresh =
-      (if (oldDvd.isEmpty) hits
-       else hits.join(tombstonesDF(spark, table, oldDvd, partCols),
-         Seq("_t_key", "_t_pos"), "left_anti")).persist()
-    try {
-      // O(touched files) driver rows — never positions
-      val freshCounts: Map[String, Long] = fresh.groupBy(col("_t_key"))
-        .agg(count(lit(1)).as("n")).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      if (freshCounts.isEmpty) return MergeResult(parent, 0, live.size)
-      val total = freshCounts.values.sum
-      require(total <= maxDvRows,
-        s"deleteWithDV matched $total fresh rows (> maxDvRows=$maxDvRows) — " +
-          s"a deletion vector this large defeats merge-on-read; use delete " +
-          s"(copy-on-write) for band deletes")
-      // the NEW sidecar dataset carries each changed file's COMPLETE
-      // tombstone set (fresh ∪ its previous positions — disjoint by the
-      // anti-join), so an entry always references exactly ONE dataset
-      val ref = s"_dv/dv-${java.util.UUID.randomUUID().toString.take(12)}"
-      val changedOld = oldDvd.filter(f =>
-        freshCounts.contains(dvKeyOf(f, partCols)))
-      val full =
-        if (changedOld.isEmpty) fresh
-        else fresh.unionByName(tombstonesDF(spark, table, changedOld, partCols))
-      writeDvDataset(spark, table, ref, full)
-      val newFiles = live.map { f =>
-        val k = dvKeyOf(f, partCols)
-        freshCounts.get(k) match {
-          case Some(n) =>
-            f.copy(dv = Seq.empty, dvRef = ref, dvCount = f.dvRows + n)
-          case None => f
-        }
-      }
-      val v = commitOp(table, parent, snap, newFiles, snap.batches,
-        "dv_delete" -> "")
-      MergeResult(v, freshCounts.size, live.size - freshCounts.size)
-    } finally { fresh.unpersist(); () }
-  }
-
-  /** Concurrent-writer DV DELETE — [[mergeConcurrent]]'s re-execute-
-    * on-conflict recipe applied to [[deleteWithDV]]: the positions
-    * attach to the snapshot's live paths, so a lost version race must
-    * re-scan against the new latest; re-execution is cheap — no data
-    * write, the whole point of the tier.
-    */
-  def deleteWithDVConcurrent(spark: SparkSession, table: String,
-      predCol: String, lo: String, hi: String, maxDvRows: Int = 1 << 22,
-      maxRetries: Int = 20): MergeResult = {
-    var attempt = 0
-    while (true) {
-      try return deleteWithDV(spark, table, predCol, lo, hi, maxDvRows)
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** UPDATE … SET WHERE `predCol` ∈ [lo, hi]: copy-on-write at file
-    * granularity, riding the same stats-intersection machinery as
-    * [[delete]] — only files whose min/max intersect the range are
-    * rewritten (matching rows get the SET expressions applied,
-    * non-matching rows in the same file carry through unchanged),
-    * disjoint files carry over by reference, and zero intersecting
-    * files is a NO-OP (no new version — the Delta UPDATE fast path).
-    * `set` maps column → new-value expression over the row's existing
-    * columns (so `price -> col("price") * 1.1` works). Nulls never
-    * match a range predicate and are never updated. Old snapshots
-    * stay readable; rewrites preserve clustering (merge's contract).
-    */
-  def update(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, set: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String]): MergeResult = {
-    val parent = latestVersion(table)
-    updateSlotted(spark, table, predCol, lo, hi, set, statsCols, parent,
-      f"v${parent + 1}%08d-u")
-  }
-
-  /** Concurrent-writer UPDATE — [[mergeConcurrent]]'s re-execute-on-
-    * conflict recipe applied to [[update]].
-    */
-  def updateConcurrent(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, set: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String], maxRetries: Int = 20): MergeResult = {
-    var attempt = 0
-    while (true) {
-      val parent = latestVersion(table)
-      try {
-        return updateSlotted(spark, table, predCol, lo, hi, set, statsCols,
-          parent, f"u-${java.util.UUID.randomUUID().toString.take(12)}")
-      } catch {
-        case e: java.util.ConcurrentModificationException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  private def updateSlotted(spark: SparkSession, table: String, predCol: String,
-      lo: String, hi: String, set: Map[String, org.apache.spark.sql.Column],
-      statsCols: Seq[String], parent: Int, slot: String): MergeResult = {
-    require(!set.contains(predCol),
-      s"UPDATE must not rewrite its own predicate column $predCol — " +
-        s"the file-skipping contract (stats bound the OLD values) would break")
-    val snap = resolveSnapshot(table, parent)
-    val live = snap.files
-    val parts = partitionColsOf(snap)
-    val predOrig = originalName(snap, predCol)
-    val (touched, untouched) = live.partition { f =>
-      f.stats.get(predOrig).forall(_.intersects(lo, hi))
-    }
-    if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    // SET expressions reference CURRENT logical names, so the update
-    // applies in the logical view and converts back before the write.
-    // Partitioned tables rewrite LAYOUT-PRESERVING (writeFiles'
-    // partitionBy); a SET on a partition column is allowed — rewritten
-    // rows land under their NEW value's directory, Delta's semantics.
-    // When predCol IS a partition column its identity stats prune the
-    // touched set to exactly the matching directories.
-    val touchedDf = toLogical(snap, rawRead(spark, table, touched))
-    val dt = touchedDf.schema(predCol).dataType
-    val matches = col(predCol) >= lit(lo).cast(dt) && col(predCol) <= lit(hi).cast(dt)
-    val updated = set.foldLeft(touchedDf) { case (df, (c, v)) =>
-      df.withColumn(c, when(matches, v).otherwise(col(c)))
-    }
-    enforceChecks(snap, updated.filter(matches), s"UPDATE of $table")
-    // same clustering-preservation contract as merge/delete rewrites
-    val clusterCols = ((parts :+ predOrig).distinct).map(col)
-    val written = writeFiles(spark, table, slot,
-      toPhysical(snap, updated)
-        .repartitionByRange(math.max(1, touched.size), clusterCols: _*),
-      statsCols.map(originalName(snap, _)), parts)
-    val v = commitOp(table, parent, snap, untouched ++ written, snap.batches,
-      "update" -> predOrig)
-    MergeResult(v, touched.size, untouched.size)
-  }
-
   // ---------------------------------------------- predicate mutations
+
+  /** `pred` resolved as a filter over `snap`'s logical view (its
+    * child's schema is the view's) — analysis only, no job: the scan
+    * schema comes from the log ([[scanEntries]]).
+    */
+  private def resolvedFilter(spark: SparkSession, table: String,
+      snap: Snapshot, pred: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.catalyst.plans.logical.Filter =
+    toLogical(snap, rawRead(spark, table, snap.files)).filter(pred)
+      .queryExecution.analyzed.collectFirst {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f
+      }.getOrElse(throw new IllegalArgumentException(
+        s"predicate did not analyze to a filter: $pred"))
 
   /** Conservative file pruning for an ARBITRARY Column predicate
     * (r15, VERDICT r14 #2): resolve the predicate against the table's
@@ -3589,37 +3296,54 @@ object TxTable {
       snap: Snapshot, pred: org.apache.spark.sql.Column):
       (Seq[FileEntry], Seq[FileEntry]) = {
     if (snap.files.isEmpty) return (Nil, Nil)
-    val probe = toLogical(snap, rawRead(spark, table, snap.files)).filter(pred)
-    val cond = probe.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition
-    }.getOrElse(throw new IllegalArgumentException(
-      s"predicate did not analyze to a filter: $pred"))
-    val filters = org.apache.spark.sql.GraftBridge.translateConjuncts(cond)
+    val filters = org.apache.spark.sql.GraftBridge.translateConjuncts(
+      resolvedFilter(spark, table, snap, pred).condition)
     val orig: String => String = c => snap.renames.getOrElse(c, c)
     snap.files.partition(f => filters.forall(TxDataSource.keep(f, _, orig)))
   }
 
-  /** The columns a predicate reads (current LOGICAL names) — the
-    * UPDATE guard's input.
+  /** The live files a PARTITION-ONLY predicate deletes whole, or None
+    * when the predicate is not one: it must read partition columns
+    * only, and every live file must record their values. Each distinct
+    * partition tuple is tested against `pred` over a LocalRelation —
+    * evaluated on the driver, no job — so a matching file matches on
+    * every row.
     */
-  private def predicateRefs(spark: SparkSession, table: String,
-      snap: Snapshot, pred: org.apache.spark.sql.Column): Set[String] = {
-    if (snap.files.isEmpty) return Set.empty
-    val probe = toLogical(snap, rawRead(spark, table, snap.files)).filter(pred)
-    probe.queryExecution.analyzed.collectFirst {
-      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        f.condition.references.toSeq.map(_.name).toSet
-    }.getOrElse(Set.empty)
+  private def partitionMatches(spark: SparkSession, table: String,
+      snap: Snapshot, pred: org.apache.spark.sql.Column): Option[Seq[FileEntry]] = {
+    import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+    val filter = resolvedFilter(spark, table, snap, pred)
+    val refs = filter.condition.references.toSeq.map(_.name).distinct.sorted
+    val refsOrig = refs.map(originalName(snap, _))
+    if (!refsOrig.forall(partitionColsOf(snap).contains) ||
+        !snap.files.forall(f => refsOrig.forall(f.parts.contains))) return None
+    val types = filter.child.schema
+    val tuples = snap.files.map(f => refsOrig.map(f.parts)).distinct
+    val local = spark.createDataFrame(
+      tuples.zipWithIndex.map { case (t, i) =>
+        org.apache.spark.sql.Row.fromSeq(i +: t) }.asJava,
+      StructType(StructField("_graft_pi", IntegerType) +:
+        refs.map(StructField(_, StringType))))
+    val hit = local
+      .select(col("_graft_pi") +: refs.map(r => col(r).cast(types(r).dataType)): _*)
+      .filter(coalesce(pred, lit(false))).collect().map(r => tuples(r.getInt(0))).toSet
+    Some(snap.files.filter(f => hit.contains(refsOrig.map(f.parts))))
   }
 
-  /** DELETE WHERE `pred` — the arbitrary-predicate form of [[delete]]
-    * (r15): multi-column conjuncts/disjuncts, SQL null semantics (a
-    * row whose predicate evaluates NULL survives, exactly like
-    * `DELETE WHERE` in SQL). Copy-on-write at file granularity: only
-    * files the conjuncts' stats cannot exclude are rewritten, the
-    * rest carry by reference; partitioned layouts rewrite layout-
-    * preserving. The single-column band form ([[delete]]) remains the
-    * fast path with its DROP-PARTITION metadata-only shape.
+  /** DELETE WHERE `pred`: multi-column conjuncts/disjuncts, SQL null
+    * semantics (a row whose predicate evaluates NULL survives, exactly
+    * like `DELETE WHERE` in SQL). Copy-on-write at file granularity:
+    * only files the conjuncts' stats cannot exclude are rewritten
+    * WITHOUT their matching rows, the rest carry by reference, and a
+    * rewrite left empty writes nothing (the file simply leaves the live
+    * set); partitioned layouts rewrite layout-preserving. Old snapshots
+    * stay readable (immutable files + manifest isolation).
+    *
+    * METADATA-ONLY fast path (the DROP PARTITION shape): a predicate
+    * over partition columns only matches each file on EVERY row or on
+    * none ([[partitionMatches]]), so matching files leave the live set
+    * as a pure manifest remove — zero data IO, zero jobs, an O(delta)
+    * commit; at 100 TB a retention delete must never rewrite a byte.
     */
   def deleteWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column, statsCols: Seq[String]): MergeResult = {
@@ -3627,9 +3351,16 @@ object TxTable {
     val snap = resolveSnapshot(table, parent)
     val live = snap.files
     val parts = partitionColsOf(snap)
+    val whole = if (parts.isEmpty) None else partitionMatches(spark, table, snap, pred)
+    if (whole.exists(_.isEmpty)) return MergeResult(parent, 0, live.size)
+    if (whole.isDefined) {
+      val gone = whole.get.map(_.path).toSet
+      val kept = live.filterNot(f => gone.contains(f.path))
+      val v = commitOp(table, parent, snap, kept, snap.batches, "delete" -> "")
+      return MergeResult(v, gone.size, kept.size)
+    }
     val (touched, untouched) = pruneByPredicate(spark, table, snap, pred)
     if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    val slot = f"v${parent + 1}%08d-d"
     // predicates are written in the LOGICAL view; rows where the
     // predicate is TRUE go, NULL/FALSE stay
     val touchedDf = toLogical(snap, rawRead(spark, table, touched))
@@ -3639,19 +3370,23 @@ object TxTable {
     val clustered =
       if (clusterCols.isEmpty) kept.repartition(math.max(1, touched.size))
       else kept.repartitionByRange(math.max(1, touched.size), clusterCols: _*)
-    val written = writeFiles(spark, table, slot, toPhysical(snap, clustered),
-      statsCols.map(originalName(snap, _)), parts)
+    val written = writeFiles(spark, table, newSlot(parent, "d"),
+      toPhysical(snap, clustered), statsCols.map(originalName(snap, _)), parts)
     val v = commitOp(table, parent, snap, untouched ++ written,
       snap.batches, "delete" -> "")
     MergeResult(v, touched.size, untouched.size)
   }
 
-  /** UPDATE … SET WHERE `pred` — the arbitrary-predicate form of
-    * [[update]] (r15): matched rows get the SET expressions, same-file
-    * bystanders carry through, stats-excluded files by reference. SET
-    * columns must not be read by the predicate (same contract as the
-    * band form — the rewrite's skipping stats must keep bounding the
-    * values the predicate saw).
+  /** UPDATE … SET WHERE `pred`: copy-on-write at file granularity —
+    * matched rows get the SET expressions, same-file bystanders carry
+    * through unchanged, stats-excluded files carry by reference, and
+    * zero candidate files is a NO-OP (no new version — the Delta
+    * UPDATE fast path). `set` maps column → new-value expression over
+    * the row's existing columns (so `price -> col("price") * 1.1`
+    * works); a SET on a partition column moves the row to its new
+    * value's directory. SET columns must not be read by the predicate:
+    * the rewrite's skipping stats must keep bounding the values the
+    * predicate saw. Rows whose predicate is NULL are never updated.
     */
   def updateWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column,
@@ -3660,7 +3395,9 @@ object TxTable {
     val parent = latestVersion(table)
     val snap = resolveSnapshot(table, parent)
     val live = snap.files
-    val refs = predicateRefs(spark, table, snap, pred)
+    val refs =
+      if (live.isEmpty) Set.empty[String]
+      else resolvedFilter(spark, table, snap, pred).condition.references.map(_.name).toSet
     val clash = set.keySet.intersect(refs)
     require(clash.isEmpty,
       s"UPDATE must not rewrite columns its own predicate reads ($clash) — " +
@@ -3668,7 +3405,6 @@ object TxTable {
     val parts = partitionColsOf(snap)
     val (touched, untouched) = pruneByPredicate(spark, table, snap, pred)
     if (touched.isEmpty) return MergeResult(parent, 0, live.size)
-    val slot = f"v${parent + 1}%08d-u"
     val touchedDf = toLogical(snap, rawRead(spark, table, touched))
     val matches = coalesce(pred, lit(false))
     val updated = set.foldLeft(touchedDf) { case (df, (c, v)) =>
@@ -3680,18 +3416,37 @@ object TxTable {
     val clustered =
       if (clusterCols.isEmpty) updated.repartition(math.max(1, touched.size))
       else updated.repartitionByRange(math.max(1, touched.size), clusterCols: _*)
-    val written = writeFiles(spark, table, slot, toPhysical(snap, clustered),
-      statsCols.map(originalName(snap, _)), parts)
+    val written = writeFiles(spark, table, newSlot(parent, "u"),
+      toPhysical(snap, clustered), statsCols.map(originalName(snap, _)), parts)
     val v = commitOp(table, parent, snap, untouched ++ written,
       snap.batches, "update" -> "")
     MergeResult(v, touched.size, untouched.size)
   }
 
-  /** DELETE WHERE `pred` via DELETION VECTORS — the arbitrary-
-    * predicate form of [[deleteWithDV]] (r15): no data file rewritten,
-    * matching rows tombstone into a sidecar dataset, SQL null
-    * semantics (NULL-predicate rows survive). Stats pruning bounds the
-    * scan to files the conjuncts cannot exclude.
+  /** DELETE WHERE `pred` via DELETION VECTORS — the MERGE-ON-READ
+    * delete tier beside [[deleteWhere]]'s copy-on-write (Delta's
+    * deletion-vector shape): no data file is rewritten; instead each
+    * touched file's matching PHYSICAL ROW POSITIONS (parquet row
+    * indexes) are recorded against its manifest entry and every read
+    * filters them out ([[rawRead]]). At 100 TB this is the GDPR-purge
+    * shape — k scattered rows across k files must not rewrite k whole
+    * files. SQL null semantics (NULL-predicate rows survive); stats
+    * pruning bounds the scan to files the conjuncts cannot exclude.
+    * Old snapshots are untouched (the DV lives in the NEW version's
+    * entries only); [[compact]]/[[compactPartitioned]]/the mutation
+    * rewrites MATERIALIZE DVs (they read through [[rawRead]]) and the
+    * rewritten files carry none; [[changesBetween]] surfaces DV'd rows
+    * as deletes; the streaming source treats a DV commit as a content
+    * change (append-only abort unless ignoreChanges). Stats keep
+    * describing the physical file — conservative bounds, never wrong.
+    * Positions live in per-file SIDECAR files written and read
+    * executor-side ([[DvStore]], r15): the driver sees only per-file
+    * counts, reads filter scan-locally with no broadcast, and
+    * accumulated tombstones have no per-table ceiling — `maxDvRows` is
+    * a per-delete advisory that a bigger delete belongs to copy-on-
+    * write. A lost version race leaves the attempt's sidecar dataset
+    * as unreferenced garbage until [[vacuum]]; the delete re-runs
+    * cheaply under [[withConflictRetry]] (no data write).
     */
   def deleteWithDVWhere(spark: SparkSession, table: String,
       pred: org.apache.spark.sql.Column,
@@ -3702,14 +3457,56 @@ object TxTable {
     val (touched, _) = pruneByPredicate(spark, table, snap, pred)
     if (touched.isEmpty) return MergeResult(parent, 0, live.size)
     val partCols = touched.flatMap(_.parts.keys).distinct.sorted
-    // key and position attach in PHYSICAL space, the predicate applies
-    // in the LOGICAL view — the key columns ride through the rename
+    // raw scan WITH row positions, old DVs NOT applied: positions are
+    // physical. Key and position attach in PHYSICAL space, the
+    // predicate applies in the LOGICAL view — the key columns ride
+    // through the rename
     val keyed = scanEntries(spark, table, touched, withMeta = true)
       .withColumn("_t_key", dvKeyCol(partCols))
       .withColumn("_t_pos", col("_dv_pos"))
     val hits = toLogical(snap, keyed).filter(coalesce(pred, lit(false)))
       .select(col("_t_key"), col("_t_pos"))
-    dvDeleteCore(spark, table, parent, snap, touched, partCols, hits, maxDvRows)
+    // already-tombstoned rows re-match the predicate, so the FRESH set
+    // anti-joins the existing tombstones out (executor-side — a
+    // repeated/overlapping DV delete neither re-counts dead rows toward
+    // the cap, nor reports them rewritten, nor commits a no-op version)
+    val oldDvd = touched.filter(_.hasDv)
+    val fresh =
+      (if (oldDvd.isEmpty) hits
+       else hits.join(tombstonesDF(spark, table, oldDvd, partCols),
+         Seq("_t_key", "_t_pos"), "left_anti")).persist()
+    try {
+      // O(touched files) driver rows — never positions
+      val freshCounts: Map[String, Long] = fresh.groupBy(col("_t_key"))
+        .agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      if (freshCounts.isEmpty) return MergeResult(parent, 0, live.size)
+      val total = freshCounts.values.sum
+      require(total <= maxDvRows,
+        s"deleteWithDVWhere matched $total fresh rows (> maxDvRows=$maxDvRows) " +
+          s"— a deletion vector this large defeats merge-on-read; use " +
+          s"deleteWhere (copy-on-write) for band deletes")
+      // the NEW sidecar dataset carries each changed file's COMPLETE
+      // tombstone set (fresh ∪ its previous positions — disjoint by the
+      // anti-join), so an entry always references exactly ONE dataset
+      val ref = s"_dv/dv-${java.util.UUID.randomUUID().toString.take(12)}"
+      val changedOld = oldDvd.filter(f =>
+        freshCounts.contains(dvKeyOf(f, partCols)))
+      val full =
+        if (changedOld.isEmpty) fresh
+        else fresh.unionByName(tombstonesDF(spark, table, changedOld, partCols))
+      writeDvDataset(spark, table, ref, full)
+      val newFiles = live.map { f =>
+        freshCounts.get(dvKeyOf(f, partCols)) match {
+          case Some(n) =>
+            f.copy(dv = Seq.empty, dvRef = ref, dvCount = f.dvRows + n)
+          case None => f
+        }
+      }
+      val v = commitOp(table, parent, snap, newFiles, snap.batches,
+        "dv_delete" -> "")
+      MergeResult(v, freshCounts.size, live.size - freshCounts.size)
+    } finally { fresh.unpersist(); () }
   }
 
   // ---------------------------------------------------------------- zorder
@@ -3772,9 +3569,8 @@ object TxTable {
       s"$table is hive-partitioned — zorder would silently de-partition " +
         s"it; use zorderPartition (OPTIMIZE … WHERE ZORDER)")
     val df = toLogical(snap, rawRead(spark, table, snap.files))
-    val slot = f"v${parent + 1}%08d-z"
     val laid = zLayoutN(df, cols, numFiles)
-    val written = writeFiles(spark, table, slot, toPhysical(snap, laid),
+    val written = writeFiles(spark, table, newSlot(parent, "z"), toPhysical(snap, laid),
       statsCols.map(originalName(snap, _)))
     commitOp(table, parent, snap, written, snap.batches, "zorder" -> "")
   }
@@ -3799,27 +3595,19 @@ object TxTable {
     }
     require(target.nonEmpty, s"no files match partition spec $spec in $table")
     val df = toLogical(snap, rawRead(spark, table, target))
-    val slot = f"v${parent + 1}%08d-z"
-    val laid = zLayout(df, colA, colB, numFiles)
+    val laid = zLayoutN(df, Seq(colA, colB), numFiles)
     commitOp(table, parent, snap,
-      others ++ writeFiles(spark, table, slot, toPhysical(snap, laid),
+      others ++ writeFiles(spark, table, newSlot(parent, "z"), toPhysical(snap, laid),
         statsCols.map(originalName(snap, _)),
         partitionCols.map(originalName(snap, _))), snap.batches,
       "zorder" -> "")
   }
 
-  /** The z-curve layout core shared by [[zorder]] and
-    * [[zorderPartition]]: rank-quantize both columns (bucket-rank
-    * device — no single-partition window), interleave, range-partition
-    * and sort by the curve key.
-    */
-  private def zLayout(df: DataFrame, colA: String, colB: String,
-      numFiles: Int): DataFrame =
-    zLayoutN(df, Seq(colA, colB), numFiles)
-
-  /** [[zLayout]] over 1-4 columns (r16): one stats pass for every
-    * column's bounds, a bucket-rank quantization per column, one
-    * interleaved curve key.
+  /** The z-curve layout core shared by [[zorderCols]] and
+    * [[zorderPartition]] over 1-4 columns: one stats pass for every
+    * column's bounds, a bucket-rank quantization per column (no
+    * single-partition window), one interleaved curve key, then
+    * range-partition and sort by it.
     */
   private def zLayoutN(df: DataFrame, cols: Seq[String],
       numFiles: Int): DataFrame = {
@@ -4011,8 +3799,7 @@ object TxTable {
     val parent = latestVersion(table)
     val snap = resolveSnapshot(table, parent)
     if (snap.batches.contains(batchId)) return false
-    val slot = f"v${parent + 1}%08d-b$batchId"
-    val written = writeFiles(spark, table, slot,
+    val written = writeFiles(spark, table, newSlot(parent, s"b$batchId"),
       toPhysical(snap, df), statsCols.map(originalName(snap, _)))
     enforceChecksWritten(spark, table, snap, written,
       s"streaming append into $table")
@@ -4031,7 +3818,6 @@ object TxTable {
   def compact(spark: SparkSession, table: String, statsCols: Seq[String],
       targetFiles: Int = 4): Int = {
     val parent = latestVersion(table)
-    val slot = f"v${parent + 1}%08d-c"
     val snap = resolveSnapshot(table, parent)
     // a flat rewrite would silently DE-PARTITION a hive-partitioned
     // live set (directory layout + parts metadata lost) — same refusal
@@ -4045,7 +3831,7 @@ object TxTable {
     // a compact is also the garbage collector for dropped data)
     val df = toLogical(snap, rawRead(spark, table, snap.files))
     commitOp(table, parent, snap,
-      writeFiles(spark, table, slot,
+      writeFiles(spark, table, newSlot(parent, "c"),
         toPhysical(snap, df).repartition(targetFiles),
         statsCols.map(originalName(snap, _))), snap.batches,
       "compact" -> "")
@@ -4239,7 +4025,7 @@ object TxTable {
         col("o_orderstatus").as("status"))
     create(spark, t, base.repartitionByRange(8, col("k")), Seq("k"))
     val mk = base.agg(max(col("k"))).head().getLong(0)
-    delete(spark, t, "k", (mk / 4).toString, (mk / 2).toString, Seq("k"))
+    deleteWhere(spark, t, col("k").between(mk / 4, mk / 2), Seq("k"))
     read(spark, t).groupBy(col("status"))
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("id_sum"))
       .orderBy(col("status"))
@@ -4269,7 +4055,7 @@ object TxTable {
         col("o_orderstatus").as("status"))
     create(spark, t, base.repartitionByRange(8, col("k")), Seq("k"))
     val mk = base.agg(max(col("k"))).head().getLong(0)
-    deleteWithDV(spark, t, "k", (mk / 4).toString, (mk / 2).toString)
+    deleteWithDVWhere(spark, t, col("k").between(mk / 4, mk / 2))
     read(spark, t).groupBy(col("status"))
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("id_sum"))
       .orderBy(col("status"))
@@ -4332,7 +4118,7 @@ object TxTable {
         pmod(col("o_orderkey"), lit(10)).cast("long").as("bucket"))
     create(spark, t, base.repartitionByRange(8, col("k")), Seq("k"))
     val mk = base.agg(max(col("k"))).head().getLong(0)
-    update(spark, t, "k", (mk / 4).toString, (mk / 2).toString,
+    updateWhere(spark, t, col("k").between(mk / 4, mk / 2),
       Map("status" -> lit("UPD"), "bucket" -> (col("bucket") + 100L)), Seq("k"))
     read(spark, t).groupBy(col("status"))
       .agg(count(lit(1)).as("n_rows"), sum(col("k")).as("id_sum"),
@@ -4793,7 +4579,7 @@ object TxTable {
         .select((col("id") + mk).as("k"), lit("ins").as("tag")))
     merge(spark, t, updates, "k", Seq("k"))
     val vMerge = latestVersion(t)
-    deleteWithDV(spark, t, "k", (mk / 4).toString, (mk / 2).toString)
+    deleteWithDVWhere(spark, t, col("k").between(mk / 4, mk / 2))
     val vDv = latestVersion(t)
     tableChanges(spark, t, 1, vMerge).withColumn("w", lit("w1"))
       .unionByName(tableChanges(spark, t, vMerge, vDv).withColumn("w", lit("w2")))

@@ -311,30 +311,37 @@ object EventStreams {
       // targets (links impossible) fall back to the copying create;
       // the partially-linked tree is removed first so the fallback
       // writes into a clean root.
-      // r17 (ADVICE): verify the target is absent or EMPTY before the
-      // clone so the cross-device fallback's cleanup can never destroy
-      // pre-placed user content under the replica root (e.g. a nested
-      // checkpoint dir) — the old create()-only path never deleted
-      // anything, and the fallback must not either.
+      // The target must be absent, empty, or hold only the debris of an
+      // earlier seed that never published a version (a crash during the
+      // clone or the copying fallback): nothing but the table's own
+      // data/, _idx/, _dv/ and _log/ trees. Debris is removed and the
+      // seed re-runs, so a re-run recovers by itself; any other content
+      // (user files, a nested checkpoint dir) refuses, so neither the
+      // cleanup nor the fallback can destroy it.
+      import scala.jdk.CollectionConverters._
       val root = java.nio.file.Paths.get(replicaTable)
+      def clear(): Unit = if (java.nio.file.Files.isDirectory(root)) {
+        val s = java.nio.file.Files.walk(root)
+        try s.iterator().asScala.toSeq.reverse
+          .foreach(java.nio.file.Files.deleteIfExists(_))
+        finally s.close()
+      }
       if (java.nio.file.Files.isDirectory(root)) {
         val s = java.nio.file.Files.list(root)
-        try require(!s.iterator().hasNext,
-          s"replica target $replicaTable exists and is not empty")
-        finally s.close()
+        val foreign =
+          try s.iterator().asScala.map(_.getFileName.toString).filterNot(n =>
+            Set("data", "_idx", "_dv", "_log").contains(n) &&
+              java.nio.file.Files.isDirectory(root.resolve(n))).toList
+          finally s.close()
+        require(foreign.isEmpty, s"replica target $replicaTable exists and " +
+          s"holds content other than an unpublished seed's debris: $foreign")
+        clear()
       }
       try TxTable.cloneTable(spark, sourceTable, replicaTable, v0)
       catch {
         case scala.util.control.NonFatal(_) =>
-          // the target was empty above, so everything under it is
-          // clone debris — safe to remove before the copying fallback
-          if (java.nio.file.Files.isDirectory(root)) {
-            import scala.jdk.CollectionConverters._
-            val s = java.nio.file.Files.walk(root)
-            try s.iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.deleteIfExists(_))
-            finally s.close()
-          }
+          // everything under the root is now clone debris
+          clear()
           TxTable.create(spark, replicaTable,
             TxTable.read(spark, sourceTable, version = v0), statsCols)
       }

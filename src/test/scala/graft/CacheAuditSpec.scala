@@ -28,7 +28,7 @@ class CacheAuditSpec extends SparkSpecBase {
       "streaming/EventStreams.scala", // foreachBatch try/finally unpersist
       "operators/Similarity.scala", // OPQ training sample, unpersisted after collect
       "operators/Dedup.scala",      // cluster loop pins; final round -> CacheScope.register
-      "sources/TxTable.scala",      // dvDeleteCore's fresh-hits pin + pinned(), try/finally unpersist
+      "sources/TxTable.scala",      // deleteWithDVWhere's fresh-hits pin + pinned(), try/finally unpersist
       "ScaleRehearsal.scala")       // standalone main, session stopped at exit
     val offenders = Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
@@ -40,6 +40,30 @@ class CacheAuditSpec extends SparkSpecBase {
     assert(offenders.isEmpty,
       s"unclassified .persist() sites (route through CacheScope.cached " +
         s"or allowlist with an in-scope unpersist): $offenders")
+  }
+
+  test("static audit: data slots are named only by newSlot (no version-numbered slot literal in sources/)") {
+    // every write lands in a writer-unique slot; a slot spelled from a
+    // version number alone collides with a crashed attempt's files (or a
+    // concurrent writer's) and wedges every re-run. Version numbers are
+    // formatted only where the log names its records.
+    val allowed = Set("newSlot", "versionFile", "checkpointFile")
+    val defLine = "\\bdef (\\w+)".r
+    val root = Paths.get("src/main/scala/graft/sources")
+    val offenders = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        var inDef = ""
+        Files.readAllLines(p).asScala.zipWithIndex.flatMap { case (line, i) =>
+          defLine.findFirstMatchIn(line).foreach(m => inDef = m.group(1))
+          if ((line.contains("%08d") || line.contains("\"v00000001\"")) &&
+              !allowed.contains(inDef))
+            Some(s"${root.relativize(p)}:${i + 1} (in $inDef)")
+          else None
+        }
+      }.toList
+    assert(offenders.isEmpty, s"version-numbered slot literals outside " +
+      s"$allowed: $offenders")
   }
 
   test("dynamic audit: cache-using query sweep + drain leaves zero persisted RDDs") {

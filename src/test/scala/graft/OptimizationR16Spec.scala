@@ -66,7 +66,8 @@ class OptimizationR16Spec extends SparkSpecBase {
     assert(entries.size == 3)
     // independent re-derivation of what the read-back pass recorded:
     // per written file, rows + cast-to-string min/max + null counts
-    val slot = spark.read.parquet(s"$t/data/v00000001")
+    val slotDir = entries.head.path.split('/').take(2).mkString("/") // data/<slot>
+    val slot = spark.read.parquet(s"$t/$slotDir")
     val expect = slot.groupBy(input_file_name().as("f"))
       .agg(count(lit(1)).as("rows"),
         statsCols.flatMap(c => Seq(

@@ -59,7 +59,8 @@ class OptimizationR17Spec extends SparkSpecBase {
     // independent re-derivation of what the read-back pass recorded:
     // per file, rows + cast-to-string min/max + null counts over data
     // AND inferred partition columns, plus the recorded field order
-    val slot = spark.read.parquet(s"$t/data/v00000001")
+    val slotDir = entries.head.path.split('/').take(2).mkString("/") // data/<slot>
+    val slot = spark.read.parquet(s"$t/$slotDir")
     val allCols = (statsCols ++ Seq("p", "tag")).distinct
     val expect = slot.groupBy(input_file_name().as("f"))
       .agg(count(lit(1)).as("rows"),

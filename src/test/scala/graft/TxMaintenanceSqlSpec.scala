@@ -20,7 +20,7 @@ class TxMaintenanceSqlSpec extends SparkSpecBase {
     TxTable.create(spark, t, (1L to 50L).map(i => (i, "x")).toDF("id", "tag"),
       Seq("id"))
     TxTable.append(spark, t, Seq((51L, "y")).toDF("id", "tag"), Seq("id"))
-    TxTable.delete(spark, t, "id", "10", "20", Seq("id"))
+    TxTable.deleteWhere(spark, t, col("id").between(10L, 20L), Seq("id"))
     val h = spark.sql(s"DESCRIBE HISTORY '$t'").collect()
     assert(h.map(_.getInt(0)).toSeq == Seq(1, 2, 3))
     assert(h.map(_.getString(1)).toSeq == Seq("create", "append", "delete"))
@@ -67,7 +67,7 @@ class TxMaintenanceSqlSpec extends SparkSpecBase {
     val t = tmpTable()
     TxTable.create(spark, t, (1L to 20L).map(i => (i, "x")).toDF("id", "tag"),
       Seq("id"))
-    TxTable.delete(spark, t, "id", "1", "15", Seq("id"))
+    TxTable.deleteWhere(spark, t, col("id").between(1L, 15L), Seq("id"))
     assert(TxTable.read(spark, t).count() == 5)
     val v = spark.sql(s"RESTORE '$t' TO VERSION 1").head().getInt(0)
     assert(v == 3)
@@ -90,7 +90,8 @@ class TxMaintenanceSqlSpec extends SparkSpecBase {
     assert(r.getInt(0) == 1 && r.getLong(1) == 4)
     // zero rewrite: the same file names with the same byte sizes now
     // live under the versioned layout; the originals are gone
-    val slot = java.nio.file.Paths.get(dir, "data", "v00000001")
+    val slot = java.nio.file.Paths.get(dir,
+      TxTable.manifest(dir, 1).files.head.path.split('/').take(2): _*)
     val moved = scala.jdk.CollectionConverters.IteratorHasAsScala(
       Files.list(slot).iterator()).asScala
       .filter(_.getFileName.toString.endsWith(".parquet"))
@@ -211,7 +212,7 @@ class TxMaintenanceSqlSpec extends SparkSpecBase {
       (1L to 400L).map(i => (i, i % 7)).toDF("id", "v")
         .repartitionByRange(4, col("id")), Seq("id"))
     TxTable.addCheckConstraint(spark, src, "v_ok", "v >= 0")
-    TxTable.deleteWithDV(spark, src, "id", "10", "20")
+    TxTable.deleteWithDVWhere(spark, src, col("id").between(10L, 20L))
     val v = spark.sql(s"CLONE '$src' TO '$dst'").head().getInt(0)
     assert(v == 1, "history collapses to one version")
     // byte-identity: the clone's files are the SAME inodes (hard links)
@@ -235,10 +236,10 @@ class TxMaintenanceSqlSpec extends SparkSpecBase {
       TxTable.append(spark, dst, Seq((500L, -1L)).toDF("id", "v"), Seq("id")) }
     assert(e.getMessage.contains("v_ok"), e.getMessage)
     // divergence: mutating one side never moves the other
-    TxTable.delete(spark, dst, "id", "100", "200", Seq("id"))
+    TxTable.deleteWhere(spark, dst, col("id").between(100L, 200L), Seq("id"))
     assert(TxTable.read(spark, src).filter(col("id").between(100, 200))
       .count() == 101)
-    TxTable.delete(spark, src, "id", "300", "399", Seq("id"))
+    TxTable.deleteWhere(spark, src, col("id").between(300L, 399L), Seq("id"))
     assert(TxTable.read(spark, dst).filter(col("id").between(300, 399))
       .count() == 100)
     // time-travel clone (before the vacuum narrows src's window)

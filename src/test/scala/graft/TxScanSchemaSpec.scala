@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.sources.TxTable
@@ -27,30 +25,6 @@ class TxScanSchemaSpec extends SparkSpecBase {
     Files.createTempDirectory("graft_scan").resolve("t").toString
 
   private val mapper = new ObjectMapper()
-
-  /** Spark jobs `body` launches on this thread (job-group scoped, so
-    * no other work in the session counts).
-    */
-  private def jobsOf[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"scan-schema-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "scan schema spec")
-    try {
-      val a = body
-      org.apache.spark.GraftMetricsBridge.drainListeners(sc)
-      (a, n.get)
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
-  }
 
   /** A byte copy of table `t` whose log records carry no recorded
     * types — every entry legacy, so every scan infers.
@@ -183,7 +157,7 @@ class TxScanSchemaSpec extends SparkSpecBase {
   test("DV'd table: deletion vectors apply on the recorded-schema scan") {
     val t = tmpTable()
     TxTable.create(spark, t, rows(1, 60).repartitionByRange(3, col("id")), Seq("id"))
-    TxTable.deleteWithDV(spark, t, "id", "10", "14")
+    TxTable.deleteWithDVWhere(spark, t, col("id").between(10L, 14L))
     TxTable.append(spark, t, rows(61, 70), Seq("id"))
     assert(TxTable.manifest(t, TxTable.latestVersion(t)).files.exists(_.hasDv))
     assert(TxTable.read(spark, t).count() == 65)
@@ -193,7 +167,7 @@ class TxScanSchemaSpec extends SparkSpecBase {
   test("cloned table: the clone's entries carry their recorded types") {
     val src = tmpTable()
     TxTable.create(spark, src, rows(1, 40).repartitionByRange(2, col("id")), Seq("id"))
-    TxTable.deleteWithDV(spark, src, "id", "3", "4")
+    TxTable.deleteWithDVWhere(spark, src, col("id").between(3L, 4L))
     TxTable.renameColumn(src, "name", "label")
     val t = tmpTable()
     TxTable.cloneTable(spark, src, t)

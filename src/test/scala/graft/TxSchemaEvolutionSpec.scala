@@ -63,7 +63,7 @@ class TxSchemaEvolutionSpec extends SparkSpecBase {
     assert(now.filter(col("id") <= 40L && col("extra").isNotNull).count() == 0)
     // the evolving append DECLARED the column: even after a mutation
     // rewrites away every file that carried it, the schema keeps it
-    val res = TxTable.delete(spark, t, "id", "41", "45", Seq("id"))
+    val res = TxTable.deleteWhere(spark, t, col("id").between(41L, 45L), Seq("id"))
     assert(res.version > 0)
     assert(TxTable.read(spark, t).columns.contains("extra"),
       "declared column survives losing every file that carried values")

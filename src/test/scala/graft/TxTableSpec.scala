@@ -70,7 +70,7 @@ class TxTableSpec extends SparkSpecBase {
     TxTable.create(spark, t, lo, Seq("id"))
     TxTable.append(spark, t, hi, Seq("id"))
     val before = TxTable.manifest(t, TxTable.latestVersion(t)).files
-    val res = TxTable.delete(spark, t, "id", "40", "60", Seq("id"))
+    val res = TxTable.deleteWhere(spark, t, col("id").between(40L, 60L), Seq("id"))
     assert(res.rewritten == 1 && res.untouched == 1, res.toString)
     val after = TxTable.manifest(t, res.version).files
     val hiFile = before.find(_.stats("id").minLong == 100001L).get
@@ -84,10 +84,10 @@ class TxTableSpec extends SparkSpecBase {
     assert(TxTable.read(spark, t, version = res.version - 1)
       .filter(col("id").between(40L, 60L)).count() == 21)
     // a band matching nothing is a no-op: same version, no commit
-    val noop = TxTable.delete(spark, t, "id", "5000", "6000", Seq("id"))
+    val noop = TxTable.deleteWhere(spark, t, col("id").between(5000L, 6000L), Seq("id"))
     assert(noop.version == res.version && noop.rewritten == 0)
     // a band swallowing a whole file leaves it out of the live set
-    val res2 = TxTable.delete(spark, t, "id", "100001", "100100", Seq("id"))
+    val res2 = TxTable.deleteWhere(spark, t, col("id").between(100001L, 100100L), Seq("id"))
     assert(TxTable.read(spark, t).count() == 79)
     assert(TxTable.manifest(t, res2.version).files
       .forall(_.stats("id").maxLong <= 100L), "emptied file must leave the live set")
@@ -317,7 +317,7 @@ class TxTableSpec extends SparkSpecBase {
     val q3 = startMemStream("tx_stream_abort", ignoreChanges = false)
     try {
       q3.processAllAvailable() // snapshot 1..18 lands
-      TxTable.delete(spark, t, "id", "1", "3", Seq("id"))
+      TxTable.deleteWhere(spark, t, col("id").between(1L, 3L), Seq("id"))
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q3.processAllAvailable()
       }
@@ -335,7 +335,7 @@ class TxTableSpec extends SparkSpecBase {
       // read back from the manifest diff
       val beforeFiles =
         TxTable.manifest(t, TxTable.latestVersion(t)).files.map(_.path).toSet
-      TxTable.delete(spark, t, "id", "4", "6", Seq("id"))
+      TxTable.deleteWhere(spark, t, col("id").between(4L, 6L), Seq("id"))
       val afterM = TxTable.manifest(t, TxTable.latestVersion(t))
       val addedPaths = afterM.files.map(_.path).filterNot(beforeFiles)
       val expectedDup =
@@ -552,7 +552,7 @@ class TxTableSpec extends SparkSpecBase {
     TxTable.create(spark, t, lo, Seq("k"))
     TxTable.append(spark, t, hi, Seq("k"))
     val before = TxTable.manifest(t, TxTable.latestVersion(t)).files
-    val res = TxTable.update(spark, t, "k", "40", "60",
+    val res = TxTable.updateWhere(spark, t, col("k").between(40L, 60L),
       Map("status" -> lit("new"), "w" -> (col("w") + 100L)), Seq("k"))
     assert(res.rewritten == 1 && res.untouched == 1, res.toString)
     val hiFile = before.find(_.stats("k").minLong == 100001L).get
@@ -569,10 +569,10 @@ class TxTableSpec extends SparkSpecBase {
     // old snapshot unaffected; predicate-column SET is refused
     assert(TxTable.read(spark, t, version = 2).filter(col("status") === "new").count() == 0)
     intercept[IllegalArgumentException] {
-      TxTable.update(spark, t, "k", "1", "2", Map("k" -> lit(0L)), Seq("k"))
+      TxTable.updateWhere(spark, t, col("k").between(1L, 2L), Map("k" -> lit(0L)), Seq("k"))
     }
     // zero intersecting files: NO-OP, no new version
-    val noop = TxTable.update(spark, t, "k", "900000", "900100",
+    val noop = TxTable.updateWhere(spark, t, col("k").between(900000L, 900100L),
       Map("status" -> lit("x")), Seq("k"))
     assert(noop.version == res.version && noop.rewritten == 0)
   }
@@ -613,7 +613,7 @@ class TxTableSpec extends SparkSpecBase {
         pool.submit(new java.util.concurrent.Callable[Int] {
           def call(): Int = {
             barrier.await() // maximize commit-window overlap
-            TxTable.appendConcurrent(spark, t,
+            TxTable.append(spark, t,
               (w * 100L until w * 100L + 10L).toDF("id"), Seq("id"))
           }
         })
@@ -650,16 +650,16 @@ class TxTableSpec extends SparkSpecBase {
       val fApp = pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int = {
           b1.await()
-          TxTable.appendConcurrent(spark, t,
+          TxTable.append(spark, t,
             (1001L to 1010L).map(i => (i, "app")).toDF("id", "v"), Seq("id"))
         }
       })
       val fMrg = pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int = {
           b1.await()
-          TxTable.mergeConcurrent(spark, t,
+          TxTable.withConflictRetry(TxTable.merge(spark, t,
             (Seq((50L, "new")) ++ (201L to 205L).map(i => (i, "ins"))).toDF("id", "v"),
-            "id", Seq("id")).version
+            "id", Seq("id"))).version
         }
       })
       assert(Set(fApp.get(), fMrg.get()) == Set(2, 3),
@@ -679,9 +679,9 @@ class TxTableSpec extends SparkSpecBase {
         pool2.submit(new java.util.concurrent.Callable[Int] {
           def call(): Int = {
             b2.await()
-            TxTable.mergeConcurrent(spark, t,
+            TxTable.withConflictRetry(TxTable.merge(spark, t,
               band.map(i => (i, s"band${band.head}")).toDF("id", "v"),
-              "id", Seq("id")).version
+              "id", Seq("id"))).version
           }
         })
       }
@@ -1450,10 +1450,12 @@ class TxTableSpec extends SparkSpecBase {
       Seq((9L, 3L, "upd3")).toDF("id", "dt", "tag"), "id", Seq("id"))
     assert(mr2.rewritten == 1, s"dt bounds [3,3] must touch only dt=3: $mr2")
 
-    // METADATA-ONLY partition delete: dt in [3,3] drops whole files as
-    // pure manifest removes — zero data IO, no new paths
+    // METADATA-ONLY partition delete: dt = 3 drops whole files as
+    // pure manifest removes — zero data IO, no new paths, no job
     val preDel = files().map(_.path).toSet
-    val dr = TxTable.delete(spark, t, "dt", "3", "3", Seq("id"))
+    val (dr, drJobs) =
+      jobsOf(TxTable.deleteWhere(spark, t, col("dt") === 3L, Seq("id")))
+    assert(drJobs == 0, s"a partition-only delete launched $drJobs Spark jobs")
     assert(dr.rewritten == 1 && files().map(_.path).toSet.subsetOf(preDel),
       "partition delete must write no new files")
     assert(rows().forall(_._2 != 3L) && rows().size == 7)
@@ -1464,7 +1466,7 @@ class TxTableSpec extends SparkSpecBase {
     // content-column DELETE inside a partitioned table: only the
     // intersecting partition's file rewrites, layout preserved
     val preDel2 = files()
-    val dr2 = TxTable.delete(spark, t, "id", "4", "4", Seq("id"))
+    val dr2 = TxTable.deleteWhere(spark, t, col("id") === 4L, Seq("id"))
     assert(dr2.rewritten == 1 && dr2.untouched == 1, s"$dr2")
     val afterDel2 = files()
     assert(afterDel2.filter(_.parts("dt") == "1").map(_.path).toSet ==
@@ -1476,14 +1478,14 @@ class TxTableSpec extends SparkSpecBase {
 
     // UPDATE inside a partitioned table: bystanders carry through,
     // disjoint partitions by reference
-    val ur = TxTable.update(spark, t, "id", "5", "5",
+    val ur = TxTable.updateWhere(spark, t, col("id") === 5L,
       Map("tag" -> lit("u5")), Seq("id"))
     assert(ur.rewritten == 1 && ur.untouched == 1, s"$ur")
     assert(rows().contains((5L, 2L, "u5")) && rows().contains((6L, 2L, "base")))
 
     // UPDATE may move rows ACROSS partitions (SET on a partition
     // column): the rewrite routes them to their new value's directory
-    TxTable.update(spark, t, "id", "6", "6",
+    TxTable.updateWhere(spark, t, col("id") === 6L,
       Map("dt" -> lit(9L)), Seq("id"))
     val dt9 = TxTable.readPartition(spark, t, Map("dt" -> "9"))
     assert(dt9.select(col("id")).as[Long].collect().toSeq == Seq(6L))
@@ -1495,6 +1497,35 @@ class TxTableSpec extends SparkSpecBase {
     assert(TxTable.readPartition(spark, t, Map("dt" -> "1")).count() == 4)
   }
 
+  test("partition-only DELETE (Scala or SQL) is a zero-job manifest remove; a predicate mixing in a data column rewrites one file") {
+    import spark.implicits._
+    val t = tmpTable()
+    // one file per dt dir: dt 1 holds ids 1-3, dt 2 ids 4-6, dt 3 ids 7-9
+    TxTable.createPartitioned(spark, t,
+      (1L to 9L).map(i => (i, (i - 1) / 3 + 1, "base")).toDF("id", "dt", "tag")
+        .repartition(1), Seq("dt"), Seq("id"))
+    spark.sql("DROP TABLE IF EXISTS tx_part_delete")
+    spark.sql(s"CREATE TABLE tx_part_delete USING `graft-tx` OPTIONS (path '$t')")
+    try {
+      val v1Paths = TxTable.manifest(t, 1).files.map(_.path).toSet
+      val (_, sqlJobs) = jobsOf(spark.sql("DELETE FROM tx_part_delete WHERE dt = 3"))
+      assert(sqlJobs == 0, s"SQL partition delete launched $sqlJobs Spark jobs")
+      val v2 = TxTable.manifest(t, 2).files
+      assert(v2.size == 2 && v2.map(_.path).toSet.subsetOf(v1Paths),
+        "the dt=3 file leaves the live set, nothing is written")
+      // no partition matches: no job, no commit
+      val (noop, noopJobs) =
+        jobsOf(TxTable.deleteWhere(spark, t, col("dt") > 5L, Seq("id")))
+      assert(noopJobs == 0 && noop.version == 2 && noop.rewritten == 0, s"$noop")
+      // a data column in the predicate: row-level rewrite of dt=2 only
+      val mixed = TxTable.deleteWhere(spark, t,
+        col("dt") === 2L && col("id") === 4L, Seq("id"))
+      assert(mixed.rewritten == 1 && mixed.untouched == 1, s"$mixed")
+      assert(TxTable.read(spark, t).select(col("id")).as[Long].collect().toSet ==
+        Set(1L, 2L, 3L, 5L, 6L))
+    } finally { spark.sql("DROP TABLE IF EXISTS tx_part_delete"); () }
+  }
+
   test("deletion vectors: point deletes write no data files; reads/prunes/SQL anti-join the tombstones; change feed shows deletes; rewrites materialize; old snapshots unaffected") {
     import spark.implicits._
     val t = tmpTable()
@@ -1502,7 +1533,7 @@ class TxTableSpec extends SparkSpecBase {
     TxTable.create(spark, t, base.repartitionByRange(4, col("id")), Seq("id"))
     val v1Files = TxTable.manifest(t, 1).files
     // DV delete of a 3-row band: only the covering file gains tombstones
-    val r = TxTable.deleteWithDV(spark, t, "id", "10", "12")
+    val r = TxTable.deleteWithDVWhere(spark, t, col("id").between(10L, 12L))
     assert(r.version == 2 && r.rewritten == 1 && r.untouched == 3, s"$r")
     val v2Files = TxTable.manifest(t, 2).files
     assert(v2Files.map(_.path).toSet == v1Files.map(_.path).toSet,
@@ -1527,7 +1558,7 @@ class TxTableSpec extends SparkSpecBase {
     assert(feed.filter(col("_change") === "delete").select("id").as[Long]
       .collect().toSet == Set(10L, 11L, 12L))
     // a second DV delete on the same file ACCUMULATES positions
-    TxTable.deleteWithDV(spark, t, "id", "14", "14")
+    TxTable.deleteWithDVWhere(spark, t, col("id") === 14L)
     assert(TxTable.read(spark, t).count() == 96)
     // detail accounts live rows and tombstones
     val d = TxTable.detail(spark, t).head()
@@ -1552,7 +1583,7 @@ class TxTableSpec extends SparkSpecBase {
       q.processAllAvailable()
       assert(spark.table("tx_dv_stream").count() == 96,
         "snapshot batches apply deletion vectors")
-      TxTable.deleteWithDV(spark, t, "id", "20", "20")
+      TxTable.deleteWithDVWhere(spark, t, col("id") === 20L)
       intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
       }
@@ -1566,7 +1597,7 @@ class TxTableSpec extends SparkSpecBase {
       q2.processAllAvailable()
       val before = spark.table("tx_dv_stream_ic").count()
       assert(before == 95)
-      TxTable.deleteWithDV(spark, t, "id", "21", "21")
+      TxTable.deleteWithDVWhere(spark, t, col("id") === 21L)
       q2.processAllAvailable()
       assert(spark.table("tx_dv_stream_ic").count() == before,
         "a DV version adds no files — nothing resurfaces under ignoreChanges")
@@ -1585,7 +1616,7 @@ class TxTableSpec extends SparkSpecBase {
       .repartition(1)
     TxTable.createPartitioned(spark, t, base, Seq("dt"), Seq("id"))
     val prePaths = TxTable.manifest(t, 1).files.map(_.path).toSet
-    val r = TxTable.deleteWithDV(spark, t, "id", "5", "5")
+    val r = TxTable.deleteWithDVWhere(spark, t, col("id") === 5L)
     assert(r.rewritten == 1, s"only dt=2's file intersects [5,5]: $r")
     val post = TxTable.manifest(t, 2).files
     assert(post.map(_.path).toSet == prePaths, "no files written")
@@ -1663,7 +1694,7 @@ class TxTableSpec extends SparkSpecBase {
         Seq((5L, "upd"), (6L, "upd"), (21L, "ins")).toDF("id", "tag"),
         "id", Seq("id"))
       val vMerge = TxTable.latestVersion(t)
-      TxTable.deleteWithDV(spark, t, "id", "7", "8")
+      TxTable.deleteWithDVWhere(spark, t, col("id").between(7L, 8L))
       val vDv = TxTable.latestVersion(t)
       q.processAllAvailable()
       val delta = {
@@ -1734,9 +1765,10 @@ class TxTableSpec extends SparkSpecBase {
     val t = tmpTable()
     TxTable.create(spark, t,
       (1L to 100L).toDF("id").repartitionByRange(4, col("id")), Seq("id"))
-    val fa = Future(TxTable.appendConcurrent(spark, t,
+    val fa = Future(TxTable.append(spark, t,
       (101L to 110L).toDF("id"), Seq("id")))
-    val fd = Future(TxTable.deleteWithDVConcurrent(spark, t, "id", "5", "7"))
+    val fd = Future(TxTable.withConflictRetry(
+      TxTable.deleteWithDVWhere(spark, t, col("id").between(5L, 7L))))
     Await.result(fa, 120.seconds)
     Await.result(fd, 120.seconds)
     val ids = TxTable.read(spark, t).select(col("id")).as[Long].collect().toSet
@@ -1783,7 +1815,7 @@ class TxTableSpec extends SparkSpecBase {
     val bands = Seq((1000000L, 2599999L), (5000000L, 6599999L),
       (9000000L, 10599999L))
     bands.foreach { case (lo, hi) =>
-      val r = TxTable.deleteWithDV(spark, t, "id", lo.toString, hi.toString)
+      val r = TxTable.deleteWithDVWhere(spark, t, col("id").between(lo, hi))
       assert(r.rewritten >= 1, s"band [$lo,$hi]: $r")
     }
     val deleted = bands.map { case (lo, hi) => hi - lo + 1 }.sum
@@ -1932,18 +1964,18 @@ class TxTableSpec extends SparkSpecBase {
     TxTable.create(spark, t,
       (1L to 100L).map(i => (i, s"p$i")).toDF("id", "payload")
         .repartitionByRange(4, col("id")), Seq("id"))
-    val r1 = TxTable.deleteWithDV(spark, t, "id", "10", "14")
+    val r1 = TxTable.deleteWithDVWhere(spark, t, col("id").between(10L, 14L))
     assert(r1.version == 2 && r1.rewritten == 1)
     val vAfter = TxTable.latestVersion(t)
     // the identical band again: every matching row is already dead —
     // no file's DV changes, so NO commit happens at all
-    val r2 = TxTable.deleteWithDV(spark, t, "id", "10", "14")
+    val r2 = TxTable.deleteWithDVWhere(spark, t, col("id").between(10L, 14L))
     assert(r2.version == vAfter && TxTable.latestVersion(t) == vAfter,
       s"a no-op DV delete must not commit an empty version: $r2")
     // an OVERLAPPING band: only the genuinely fresh rows count toward
     // the cap — maxDvRows = 3 admits exactly the 3 new positions
     // (15, 16, 17) even though the band re-matches 5 dead rows
-    val r3 = TxTable.deleteWithDV(spark, t, "id", "10", "17", maxDvRows = 3)
+    val r3 = TxTable.deleteWithDVWhere(spark, t, col("id").between(10L, 17L), maxDvRows = 3)
     assert(r3.rewritten == 1, s"$r3")
     assert(TxTable.read(spark, t).select(col("id")).as[Long].collect().toSet ==
       ((1L to 100L).toSet -- (10L to 17L)))
@@ -1971,7 +2003,7 @@ class TxTableSpec extends SparkSpecBase {
       // action fold listed it under removes AND dv-changed, so its
       // surviving rows read on the delete side twice (phantom deletes)
       // and the cached CDF snapshot resurrected the removed path
-      TxTable.deleteWithDV(spark, t, "id", "3", "4")
+      TxTable.deleteWithDVWhere(spark, t, col("id").between(3L, 4L))
       TxTable.compact(spark, t, Seq("id"), targetFiles = 1)
       q.processAllAvailable()
       val delta1 = {
@@ -2048,10 +2080,10 @@ class TxTableSpec extends SparkSpecBase {
     assert(asOf.count() == 50, "timestampAsOf must read v1's snapshot")
     // metadata-only counts track every mutation tier without a scan
     assert(TxTable.countRows(t) == 90 && TxTable.countRows(t, 1) == 50)
-    TxTable.deleteWithDV(spark, t, "id", "5", "9")
+    TxTable.deleteWithDVWhere(spark, t, col("id").between(5L, 9L))
     assert(TxTable.countRows(t) == 85,
       "countRows must subtract deletion-vector tombstones")
-    TxTable.delete(spark, t, "id", "81", "90", Seq("id"))
+    TxTable.deleteWhere(spark, t, col("id").between(81L, 90L), Seq("id"))
     assert(TxTable.countRows(t) == 75)
     assert(TxTable.countRows(t) == TxTable.read(spark, t).count())
   }
@@ -2080,7 +2112,7 @@ class TxTableSpec extends SparkSpecBase {
         .toDF("id", "tag", "v"), "id", Seq("id"))
     var at = follow(1)
     // window B: a DV point delete (merge-on-read deletes in the feed)
-    TxTable.deleteWithDV(spark, src, "id", "10", "12")
+    TxTable.deleteWithDVWhere(spark, src, col("id").between(10L, 12L))
     at = follow(at)
     // window C: a keyed delete (deleteKeys — the CDC delete primitive)
     val dk = TxTable.deleteKeys(spark, src,
@@ -2089,7 +2121,7 @@ class TxTableSpec extends SparkSpecBase {
     at = follow(at)
     // window D: a copy-on-write band delete + another merge, applied
     // as ONE netted window (mixed ops — no pairing, plain diff)
-    TxTable.delete(spark, src, "id", "20", "22", Seq("id"))
+    TxTable.deleteWhere(spark, src, col("id").between(20L, 22L), Seq("id"))
     TxTable.merge(spark, src,
       Seq((1L, "upd2", -1.0)).toDF("id", "tag", "v"), "id", Seq("id"))
     follow(at)
@@ -2191,7 +2223,7 @@ class TxTableSpec extends SparkSpecBase {
       TxTable.merge(spark, src,
         Seq((3L, "upd", 30.0), (41L, "ins", 41.0)).toDF("id", "tag", "v"),
         "id", Seq("id"))
-      TxTable.delete(spark, src, "id", "10", "12", Seq("id"))
+      TxTable.deleteWhere(spark, src, col("id").between(10L, 12L), Seq("id"))
       q.processAllAvailable()
       assert(rows(rep) == rows(src), "replica follows live commits")
       assert(TxTable.latestVersion(rep) > seededV)
@@ -2238,7 +2270,7 @@ class TxTableSpec extends SparkSpecBase {
       TxTable.merge(spark, t, Seq((1L, -9.0)).toDF("id", "v"), "id", Seq("id"))
     }
     intercept[IllegalArgumentException] {
-      TxTable.update(spark, t, "id", "1", "1",
+      TxTable.updateWhere(spark, t, col("id") === 1L,
         Map("v" -> lit(-3.0)), Seq("id"))
     }
     intercept[IllegalArgumentException] {
@@ -2424,7 +2456,7 @@ class TxTableSpec extends SparkSpecBase {
     TxTable.createPartitioned(spark, t, base, Seq("pt"), Seq("id"))
     TxTable.addCheckConstraint(spark, t, "amt_nonneg", "amt >= 0")
     // DV-tombstone a band so a candidate file carries a deletion vector
-    TxTable.deleteWithDV(spark, t, "id", "90", "99")
+    TxTable.deleteWithDVWhere(spark, t, col("id").between(90L, 99L))
     val src = Seq(
       (10L, 1L, "d", "del", 0L),
       (30L, 1L, "u", "upd", 400L),
