@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.util.Tables
 
 /** Market-basket / graph-affinity analytics (SURVEY.md §2.B extension):
@@ -188,43 +189,94 @@ object Affinity {
     * join per round. Isolated nodes don't occur (every edge endpoint
     * has degree ≥ 1); dangling mass doesn't occur (undirected ⇒ out-deg
     * = deg ≥ 1). Output: (id, deg, pr_fixed) — pr_fixed ≈ rank × 10¹².
+    *
+    * An edge list within [[graft.util.Local.maxRows]] (Spark's broadcast
+    * threshold) with integral, non-null ids is solved on the driver instead
+    * ([[ranksLocal]]: the same integer expressions, in Long) and
+    * returned as a LocalRelation — the co-purchase graph at sf0.1 is
+    * 7146 directed edges, where each distributed round is two Spark
+    * stages of fixed scheduling cost over a few thousand rows.
     */
   def pagerankOn(edges: DataFrame, iters: Int = PrIters): DataFrame = {
-    // localCheckpoint() makes the iteration base explicit: every
-    // iteration joins this edge list, and without it correctness-of-cost
-    // hangs on Catalyst's ReuseExchange deduplicating `iters + 1`
-    // identical subtrees — one nondeterministic expression or AQE replan
-    // away from recomputing the upstream pair explosion per round (the
-    // same contract dedup_cluster pins at Dedup.clustersOn). Checkpoint,
-    // NOT persist(): measured at sf0.1, the columnar cache doubles the
-    // query (7.4 s vs 3.7 s un-pinned) because every scan pays columnar
-    // encode/decode that ReuseExchange never charged, while the eager
-    // row-level checkpoint (2.5-2.7 s) materializes once AND truncates
-    // the lineage, so the 5 iteration plans stay shallow.
-    val e = edges.select(explode(array(
+    val e = symmetricEdges(edges)
+    solvedLocally(e, StructType(Seq(StructField("deg", LongType, nullable = false),
+        StructField("pr_fixed", LongType)))) { (g, deg) =>
+      val n = g.size.toLong
+      val r = ranksLocal(g, deg, iters, Array.fill(g.size)(PrScale / n),
+        Array.fill(g.size)((15 * (PrScale / n)) / 100))
+      i => Seq[Any](deg(i), r(i))
+    }.getOrElse {
+      val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      val nTotal = deg.select(count(lit(1)).as("n_nodes"))
+      // every frame below carries (id, deg, r); base = (15 · (S div N)) div 100
+      var ranks = deg.crossJoin(broadcast(nTotal))
+        .select(col("u").as("id"), col("deg"),
+          expr(s"$PrScale DIV n_nodes").as("r"))
+      (1 to iters).foreach { _ =>
+        val sums = e
+          .join(ranks.select(col("id").as("u"), col("deg").as("du"), col("r")), Seq("u"))
+          .select(col("v"), expr("r DIV du").as("c"))
+          .groupBy(col("v")).agg(sum(col("c")).as("s"))
+        ranks = deg.crossJoin(broadcast(nTotal))
+          .join(sums, col("u") === col("v"), "left")
+          .select(col("u").as("id"), col("deg"),
+            (expr(s"(15 * ($PrScale DIV n_nodes)) DIV 100") +
+              expr("(85 * coalesce(s, 0)) DIV 100")).as("r"))
+      }
+      ranks.select(col("id"), col("deg"), col("r").as("pr_fixed"))
+    }
+  }
+
+  /** Both directions of an (a_item, b_item) edge list as (u, v),
+    * materialized by an eager localCheckpoint() — the iteration base of
+    * [[pagerankOn]] and [[pprOn]], and the one frame their driver-side
+    * gate reads. Every distributed iteration joins this edge list:
+    * without the pin, correctness-of-cost hangs on Catalyst's
+    * ReuseExchange deduplicating `iters + 1` identical subtrees — one
+    * nondeterministic expression or AQE replan away from recomputing
+    * the upstream pair explosion per round. Checkpoint, NOT persist():
+    * measured at sf0.1, the columnar cache doubles the query (7.4 s vs
+    * 3.7 s un-pinned) because every scan pays columnar encode/decode
+    * that ReuseExchange never charged, while the eager row-level
+    * checkpoint (2.5-2.7 s) materializes once AND truncates the
+    * lineage, so the iteration plans stay shallow.
+    */
+  private def symmetricEdges(edges: DataFrame): DataFrame =
+    edges.select(explode(array(
         struct(col("a_item").as("u"), col("b_item").as("v")),
         struct(col("b_item").as("u"), col("a_item").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint()
-    val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    val nTotal = deg.select(count(lit(1)).as("n_nodes"))
-    // every frame below carries (id, deg, r); base = (15 · (S div N)) div 100
-    var ranks = deg.crossJoin(broadcast(nTotal))
-      .select(col("u").as("id"), col("deg"),
-        expr(s"$PrScale DIV n_nodes").as("r"))
-    (1 to iters).foreach { _ =>
-      val sums = e
-        .join(ranks.select(col("id").as("u"), col("deg").as("du"), col("r")), Seq("u"))
-        .select(col("v"), expr("r DIV du").as("c"))
-        .groupBy(col("v")).agg(sum(col("c")).as("s"))
-      ranks = deg.crossJoin(broadcast(nTotal))
-        .join(sums, col("u") === col("v"), "left")
-        .select(col("u").as("id"), col("deg"),
-          (expr(s"(15 * ($PrScale DIV n_nodes)) DIV 100") +
-            expr("(85 * coalesce(s, 0)) DIV 100")).as("r"))
+
+  /** The driver-side gate of the rank operators: when the checkpointed
+    * (u, v) list `e` fits ([[graft.util.Local.graphIfFits]]), `solve`
+    * turns the collected graph and its node degrees into per-node values
+    * for the columns of `rest`, and the (id, rest…) rows come back as a
+    * LocalRelation. None leaves the caller on its distributed path.
+    */
+  private def solvedLocally(e: DataFrame, rest: StructType)(
+      solve: (graft.util.Local.Graph, Array[Long]) => (Int => Seq[Any])): Option[DataFrame] =
+    graft.util.Local.graphIfFits(e).map { g =>
+      val deg = new Array[Long](g.size)
+      g.src.foreach(i => deg(i) += 1)
+      val cols = solve(g, deg)
+      e.sparkSession.createDataFrame(
+        java.util.Arrays.asList(g.ids.indices.map(i => Row.fromSeq(g.ids(i) +: cols(i))): _*),
+        StructType(e.schema("u").copy(name = "id") +: rest.fields))
     }
-    ranks.select(col("id"), col("deg"), col("r").as("pr_fixed"))
-  }
+
+  /** `iters` fixed rounds of the rank recurrence over a collected graph,
+    * from `init`: r'(x) = teleport(x) + (85 · Σ_{(u,x)} r(u) div deg(u))
+    * div 100. Every operand is non-negative, so Long `/` is exactly the
+    * distributed rounds' `DIV`.
+    */
+  private def ranksLocal(g: graft.util.Local.Graph, deg: Array[Long], iters: Int,
+      init: Array[Long], teleport: Array[Long]): Array[Long] =
+    (1 to iters).foldLeft(init) { (r, _) =>
+      val s = new Array[Long](g.size)
+      g.src.indices.foreach(k => s(g.dst(k)) += r(g.src(k)) / deg(g.src(k)))
+      Array.tabulate(g.size)(x => teleport(x) + (85 * s(x)) / 100)
+    }
 
   /** q52_pagerank testdata binding: PageRank over the support-≥2
     * co-purchase graph.
@@ -268,40 +320,47 @@ object Affinity {
     * integer fixed-point contract as [[pagerankOn]] (scale 10^12,
     * floor division both engines — operands non-negative), same
     * per-round shape (one edge⋈rank join + per-node sum, checkpointed
-    * iteration base), only the teleport term changes: seeds get
-    * (15 · S/|seeds|)/100, everyone else 0. Fixed [[PrIters]] rounds,
-    * fully value-oracled against the unrolled SQL twin.
+    * iteration base) and the same driver-side small path, only the
+    * teleport term changes: seeds get (15 · S/|seeds|)/100, everyone
+    * else 0. Fixed [[PrIters]] rounds, fully value-oracled against the
+    * unrolled SQL twin. `nSeeds` must be ≥ 1.
     * Output: (id, deg, is_seed, ppr_fixed).
     */
   def pprOn(edges: DataFrame, iters: Int = PrIters,
       nSeeds: Int = PprSeeds): DataFrame = {
-    val e = edges.select(explode(array(
-        struct(col("a_item").as("u"), col("b_item").as("v")),
-        struct(col("b_item").as("u"), col("a_item").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .localCheckpoint()
-    val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-    val seeds = deg.orderBy(col("deg").desc, col("u")).limit(nSeeds)
-      .select(col("u").as("id"), lit(1).as("is_seed"))
-    val base = deg.select(col("u").as("id"), col("deg"))
-      .join(broadcast(seeds), Seq("id"), "left")
-      .select(col("id"), col("deg"),
-        coalesce(col("is_seed"), lit(0)).as("is_seed"))
-      .localCheckpoint()
-    val teleport = expr(s"(15 * ($PrScale DIV $nSeeds)) DIV 100") * col("is_seed")
-    var ranks = base.withColumn("r",
-      expr(s"$PrScale DIV $nSeeds") * col("is_seed"))
-    (1 to iters).foreach { _ =>
-      val sums = e
-        .join(ranks.select(col("id").as("u"), col("deg").as("du"), col("r")), Seq("u"))
-        .select(col("v"), expr("r DIV du").as("c"))
-        .groupBy(col("v")).agg(sum(col("c")).as("s"))
-      ranks = base
-        .join(sums, col("id") === col("v"), "left")
-        .select(col("id"), col("deg"), col("is_seed"),
-          (teleport + expr("(85 * coalesce(s, 0)) DIV 100")).as("r"))
+    require(nSeeds >= 1, s"personalized PageRank needs at least one seed, got $nSeeds")
+    val e = symmetricEdges(edges)
+    solvedLocally(e, StructType(Seq(StructField("deg", LongType, nullable = false),
+        StructField("is_seed", IntegerType, nullable = false), StructField("ppr_fixed", LongType)))) { (g, deg) =>
+      val seeds = (0 until g.size).sortBy(i => (-deg(i), g.order(i))).take(nSeeds).toSet
+      val isSeed = Array.tabulate(g.size)(i => if (seeds(i)) 1 else 0)
+      val r = ranksLocal(g, deg, iters, isSeed.map(s => (PrScale / nSeeds) * s),
+        isSeed.map(s => ((15 * (PrScale / nSeeds)) / 100) * s))
+      i => Seq[Any](deg(i), isSeed(i), r(i))
+    }.getOrElse {
+      val deg = e.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      val seeds = deg.orderBy(col("deg").desc, col("u")).limit(nSeeds)
+        .select(col("u").as("id"), lit(1).as("is_seed"))
+      val base = deg.select(col("u").as("id"), col("deg"))
+        .join(broadcast(seeds), Seq("id"), "left")
+        .select(col("id"), col("deg"),
+          coalesce(col("is_seed"), lit(0)).as("is_seed"))
+        .localCheckpoint()
+      val teleport = expr(s"(15 * ($PrScale DIV $nSeeds)) DIV 100") * col("is_seed")
+      var ranks = base.withColumn("r",
+        expr(s"$PrScale DIV $nSeeds") * col("is_seed"))
+      (1 to iters).foreach { _ =>
+        val sums = e
+          .join(ranks.select(col("id").as("u"), col("deg").as("du"), col("r")), Seq("u"))
+          .select(col("v"), expr("r DIV du").as("c"))
+          .groupBy(col("v")).agg(sum(col("c")).as("s"))
+        ranks = base
+          .join(sums, col("id") === col("v"), "left")
+          .select(col("id"), col("deg"), col("is_seed"),
+            (teleport + expr("(85 * coalesce(s, 0)) DIV 100")).as("r"))
+      }
+      ranks.select(col("id"), col("deg"), col("is_seed"), col("r").as("ppr_fixed"))
     }
-    ranks.select(col("id"), col("deg"), col("is_seed"), col("r").as("ppr_fixed"))
   }
 
   /** q70_ppr testdata binding: restart walk over the support-≥2

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.TextFns
 import graft.util.Tables
 
@@ -665,22 +666,24 @@ object Dedup {
     * (singletons cluster with themselves). This is the step that turns
     * pairwise near-dup evidence into "keep one per cluster" decisions.
     *
-    * Distributed FRONTIER label propagation over the EDGE-INDUCED
-    * subgraph only: singletons (no near-dup edge) can never change
-    * label, so the iteration runs on the nodes that appear in a pair —
-    * a tiny fraction of a real corpus — and singletons join back as
-    * their own cluster at the end. Each round, only labels that
-    * IMPROVED last round propagate to their neighbors (a node's min
-    * can only drop via a neighbor whose min dropped — standard delta
-    * iteration); edges are hash-partitioned on the probe key once and
-    * reused every round. Converges in O(component diameter) rounds.
-    * Frames are persisted and counted per round BOTH to detect the
-    * fixpoint and to truncate lineage (without it the plan doubles
-    * every round). Near-dup components are shallow in practice, so
-    * rounds ≈ 3–5 at any corpus scale.
+    * Only the EDGE-INDUCED subgraph is labelled: singletons (no near-dup
+    * edge) can never change label, so they join back as their own
+    * cluster at the end. Both edge directions are materialized once
+    * (persisted); then the graph's size picks the solver:
+    *  - SMALL PATH: a graph within [[graft.util.Local.maxRows]]
+    *    (Spark's broadcast threshold) with integral, non-null ids is
+    *    collected ([[graft.util.Local.graphIfFits]]) and labelled on the
+    *    driver by union-find with the minimum id as root — the fixpoint
+    *    propagation reaches and the oracle's recursive closure computes
+    *    — and joins back as a broadcast LocalRelation. Near-dup
+    *    graphs are a tiny fraction of a corpus (256 pairs over 5000 docs
+    *    at sf0.1), so this is the common case; it has no round cap.
+    *  - DISTRIBUTED PATH ([[propagatedLabels]]): FRONTIER label
+    *    propagation, O(component diameter) rounds. Rounds past its cap
+    *    fail loudly rather than return unconverged labels; that
+    *    `require` applies to this path only.
     */
   def clustersOn(pairs: DataFrame, allIds: DataFrame): DataFrame = {
-    val nPart = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Both edge directions come from ONE evaluation of `pairs` via a
     // scan-side explode — a union of (a,b) and (b,a) projections would
     // run the (expensive, unpersisted) pair-generation subtree once per
@@ -691,7 +694,56 @@ object Dedup {
         struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
       .persist()
-    // The heavy candidate-pair build materializes HERE, under AQE.
+    // the heavy candidate-pair build materializes HERE, under AQE, by
+    // the gate's own read of the persisted edges
+    val labels = graft.util.Local.graphIfFits(edgesRaw) match {
+      case Some(g) =>
+        edgesRaw.unpersist()
+        broadcast(componentLabels(pairs.sparkSession, g, edgesRaw.schema("u")))
+      case None => propagatedLabels(edgesRaw)
+    }
+    allIds.join(labels, Seq("id"), "left")
+      .select(col("id").as("doc_id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
+  }
+
+  /** Union-find over a collected edge list: (id, lbl) per node, lbl =
+    * the minimum id of its component, ids typed as `idField`.
+    */
+  private def componentLabels(spark: SparkSession, g: graft.util.Local.Graph,
+      idField: StructField): DataFrame = {
+    val parent = Array.tabulate(g.size)(identity)
+    def find(x: Int): Int = {
+      var r = x
+      while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
+      r
+    }
+    g.src.indices.foreach { k =>
+      val (ru, rv) = (find(g.src(k)), find(g.dst(k)))
+      if (ru != rv) {
+        if (g.order(ru) < g.order(rv)) parent(rv) = ru else parent(ru) = rv
+      }
+    }
+    val rows = g.ids.indices.map(i => Row(g.ids(i), g.ids(find(i))))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
+      idField.copy(name = "id"), idField.copy(name = "lbl"))))
+  }
+
+  /** [[clustersOn]]'s distributed path: (id, lbl) for every node of the
+    * persisted edge list (which it takes over and unpersists).
+    *
+    * Distributed FRONTIER label propagation: each round, only labels
+    * that IMPROVED last round propagate to their neighbors (a node's
+    * min can only drop via a neighbor whose min dropped — standard
+    * delta iteration); edges are hash-partitioned on the probe key once
+    * and reused every round. Converges in O(component diameter) rounds.
+    * Frames are persisted and counted per round BOTH to detect the
+    * fixpoint and to truncate lineage (without it the plan doubles
+    * every round). Near-dup components are shallow in practice, so
+    * rounds ≈ 3–5 at any corpus scale.
+    */
+  private def propagatedLabels(edgesRaw: DataFrame): DataFrame = {
+    val spark = edgesRaw.sparkSession
+    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val edgeRows = edgesRaw.count()
     // Iteration width from the MEASURED near-dup-graph size, capped at
     // the session width — the driver-side analog of the AQE partition
@@ -725,7 +777,6 @@ object Dedup {
     // with spark.newSession()).
     labels.count() // materializes edges + initial labels under AQE
     edgesRaw.unpersist() // re-keyed copy is the one the loop reads
-    val spark = pairs.sparkSession
     val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
     val partWas = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -773,9 +824,7 @@ object Dedup {
     // the FINAL round's cache is referenced by the returned plan (labels
     // is a view over it) — hand it to CacheScope for the caller's drain
     prevRound.foreach(graft.util.CacheScope.register)
-    // singletons never entered the iteration — they cluster with themselves
-    allIds.join(labels, Seq("id"), "left")
-      .select(col("id").as("doc_id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
+    labels
   }
 
   /** dedup_cluster testdata binding: components of the jaccard ≥ 0.5

@@ -4674,7 +4674,11 @@ object TxTable {
 
   /** Delete data files referenced by NO manifest ≥ `keepFromVersion`
     * and drop the older version records — bounding time travel to the
-    * kept window, reclaiming the copy-on-write garbage. Before any
+    * kept window, reclaiming the copy-on-write garbage. A data slot
+    * (`data/<slot>/`) or DV dataset (`_dv/<ref>/`) left without a
+    * parquet file goes too, with its write bookkeeping (`_SUCCESS`,
+    * checksums) — one slot per write would otherwise leave a dead
+    * directory per rewritten commit for good. Before any
     * record drops, the horizon version's full snapshot is materialized
     * as a checkpoint SIDECAR (unless its own record is already a full
     * checkpoint), so every retained version stays resolvable once its
@@ -4696,6 +4700,17 @@ object TxTable {
     }
     val deleted = reclaimable(table, keepFromVersion)
     deleted.foreach(rel => Files.deleteIfExists(Paths.get(table, rel)))
+    deleted.map(Paths.get(_)).filter(p => p.getNameCount > 2 &&
+        Set("data", "_dv").contains(p.getName(0).toString))
+      .map(p => Paths.get(table).resolve(p.subpath(0, 2))).distinct
+      .foreach { dir =>
+        val tree = Files.walk(dir)
+        try {
+          val paths = tree.iterator().asScala.toSeq
+          if (!paths.exists(_.getFileName.toString.endsWith(".parquet")))
+            paths.reverse.foreach(Files.deleteIfExists(_))
+        } finally tree.close()
+      }
     (1 until keepFromVersion).foreach { v =>
       Files.deleteIfExists(versionFile(table, v))
       Files.deleteIfExists(checkpointFile(table, v))

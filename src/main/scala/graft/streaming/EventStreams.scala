@@ -283,8 +283,10 @@ object EventStreams {
     * .TxTable.applyChanges]]): a replica graft-tx table FOLLOWS a
     * source table's change feed as a structured stream. If the
     * replica does not exist it is seeded from the source's current
-    * snapshot, and the feed subscribes from that exact version — no
-    * gap, no replayed snapshot. Each micro-batch lands as ONE
+    * snapshot v0, and the feed subscribes from v0 + 1 (startingVersion
+    * is inclusive) — no gap, no replayed snapshot: the first
+    * micro-batch is empty and leaves the seeded files as they are.
+    * Each micro-batch lands as ONE
     * applyChanges commit keyed by the BATCH ID in the replica's
     * ledger, so the restart replay of the last uncommitted batch
     * (foreachBatch's at-least-once delivery) re-applies as a zero-job
@@ -348,7 +350,7 @@ object EventStreams {
     }
     spark.readStream.format("graft-tx").option("path", sourceTable)
       .option("readChangeFeed", "true")
-      .option("startingVersion", v0.toString)
+      .option("startingVersion", (v0 + 1).toString)
       .load()
       .writeStream.option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>

@@ -831,6 +831,31 @@ class AnalyticsOpsSpec extends SparkSpecBase {
     assert(Affinity.trianglesOn(edges).count() == 0L)
   }
 
+  test("pagerankOn / pprOn: the driver and distributed paths return identical typed rows") {
+    import spark.implicits._
+    def both(edges: org.apache.spark.sql.DataFrame): Unit =
+      Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+        Affinity.pagerankOn(_), Affinity.pprOn(_)).foreach { op =>
+        val (local, dist) = onBothPaths {
+          val out = op(edges)
+          (out.schema.map(f => (f.name, f.dataType)), out.collect().map(_.toSeq).toSet)
+        }
+        assert(local == dist, s"driver ${local} vs distributed ${dist}")
+      }
+    both(Affinity.copurchase(spark, SfDir))
+    // INT ids, negative ids, a degree tie for the last seed slot
+    both(Seq((-3, 1), (1, 2), (2, -3), (2, 7), (-8, 7)).toDF("a_item", "b_item"))
+    both(Seq.empty[(Long, Long)].toDF("a_item", "b_item"))
+  }
+
+  test("pagerankOn on the driver: the job count does not grow with the round count") {
+    val edges = Affinity.copurchase(spark, SfDir)
+    def jobs(iters: Int): Int = jobsOf(Affinity.pagerankOn(edges, iters).collect())._2
+    // each distributed round is a join + a sum shuffle (Spark stages);
+    // rounds over a collected edge list run none
+    assert(jobs(1) == jobs(5))
+  }
+
   test("khopOn counts 1-hop and 2-hop reach on a path graph") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a_item", "b_item")

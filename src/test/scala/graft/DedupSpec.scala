@@ -85,13 +85,57 @@ class DedupSpec extends SparkSpecBase {
       val ids = (0L until n.toLong).toDF("id")
       val pd = Dedup.clustersPdOn(pairsDf, ids).collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1))).toMap
-      val lp = Dedup.clustersOn(pairsDf, ids).collect()
-        .map(r => (r.getLong(0).toInt, r.getLong(1))).toMap
+      // clustersOn on both of its solvers: driver union-find (default
+      // config) and distributed propagation (threshold -1)
+      val (local, lp) = onBothPaths(Dedup.clustersOn(pairsDf, ids).collect()
+        .map(r => (r.getLong(0).toInt, r.getLong(1))).toMap)
       (0 until n).foreach { i =>
         assert(pd(i) == truth(i), s"trial $trial: contraction mislabeled node $i")
         assert(lp(i) == truth(i), s"trial $trial: propagation mislabeled node $i")
+        assert(local(i) == truth(i), s"trial $trial: driver union-find mislabeled node $i")
       }
     }
+  }
+
+  test("clustersOn: INT ids, negative ids and an empty pair set give the same labels on both paths") {
+    import spark.implicits._
+    // INT-typed ids stay INT on both paths (cluster_id is typed like the id)
+    val intPairs = Seq((3, 1), (1, 7), (10, 11)).toDF("a_id", "b_id")
+    val intIds = Seq(1, 3, 5, 7, 10, 11).toDF("id")
+    val (intLocal, intDist) = onBothPaths {
+      val out = Dedup.clustersOn(intPairs, intIds)
+      assert(out.schema.map(_.dataType.typeName) == Seq("integer", "integer"), out.schema)
+      out.collect().map(r => (r.getInt(0), r.getInt(1))).toMap
+    }
+    val intWant = Map(1 -> 1, 3 -> 1, 5 -> 5, 7 -> 1, 10 -> 10, 11 -> 10)
+    assert(intLocal == intWant && intDist == intWant, s"$intLocal / $intDist")
+    // negative ids: the component minimum is the most negative id
+    val negPairs = Seq((-5L, 2L), (2L, -9L), (4L, -1L)).toDF("a_id", "b_id")
+    val negIds = Seq(-9L, -5L, -1L, 0L, 2L, 4L).toDF("id")
+    val (negLocal, negDist) = onBothPaths(Dedup.clustersOn(negPairs, negIds).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap)
+    val negWant = Map(-9L -> -9L, -5L -> -9L, 2L -> -9L, -1L -> -1L, 4L -> -1L, 0L -> 0L)
+    assert(negLocal == negWant && negDist == negWant, s"$negLocal / $negDist")
+    // no pairs at all: every id is its own cluster
+    val noPairs = Seq.empty[(Long, Long)].toDF("a_id", "b_id")
+    val (emptyLocal, emptyDist) = onBothPaths(Dedup.clustersOn(noPairs, negIds).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toMap)
+    val selfWant = negIds.as[Long].collect().map(i => i -> i).toMap
+    assert(emptyLocal == selfWant && emptyDist == selfWant, s"$emptyLocal / $emptyDist")
+  }
+
+  test("clustersOn on the driver: the job count does not grow with the component diameter") {
+    import spark.implicits._
+    def pathJobs(nodes: Int): Int = {
+      val pairs = (0L until nodes - 1L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      val ids = (0L until nodes.toLong).toDF("id")
+      val (labels, jobs) = jobsOf(Dedup.clustersOn(pairs, ids).collect())
+      assert(labels.forall(_.getLong(1) == 0L), s"$nodes-node path must label to its minimum")
+      jobs
+    }
+    // distributed propagation pays jobs per round, O(diameter) rounds;
+    // union-find on the driver pays none
+    assert(pathJobs(3) == pathJobs(15))
   }
 
   test("bag dedup: word order is invisible, multiplicity is not") {

@@ -22,16 +22,6 @@ class PlanAuditSpec extends SparkSpecBase {
 
   private def q(name: String): DataFrame = SparkEntry.queries(name)(spark, SfDir)
 
-  private def withConf(k: String, v: String)(body: => Unit): Unit = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body
-    finally old match {
-      case Some(o) => spark.conf.set(k, o)
-      case None    => spark.conf.unset(k)
-    }
-  }
-
   test("q2_filter_project: filters push to the parquet scan") {
     val p = planOf(q("q2_filter_project"))
     assert(p.contains("PushedFilters:"), p)
@@ -358,13 +348,28 @@ class PlanAuditSpec extends SparkSpecBase {
     // lineage, so the final plan contains NO explosion subtree at all:
     // iterations scan the materialized RDD. (persist() would also pin
     // the base but measured 2x slower — columnar encode/decode on every
-    // scan; see pagerankOn's doc.)
+    // scan; see pagerankOn's doc.) The distributed path is the one
+    // that iterates over the checkpoint: threshold -1 selects it.
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val p = planOf(q("q52_pagerank"))
+      val explosions = p.linesIterator.count(_.contains("flatten(transform(sequence"))
+      assert(explosions == 0,
+        s"copurchase pair explosion survived the checkpoint boundary:\n$p")
+      assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
+        s"iterations should scan the checkpointed edge list:\n$p")
+    }
+    // default config: the graph fits, the rounds ran on the driver, and
+    // the operator returns a LocalRelation — no explosion, no shuffle;
+    // the binding adds only its output sort's range exchange on top
+    val core = planOf(graft.operators.Affinity.pagerankOn(graft.operators.Affinity.copurchaseOn(
+      graft.util.Tables.lineitem(spark, SfDir), "l_orderkey", "l_partkey", 2L)))
+    assert(core.contains("LocalTableScan") && !core.contains("Exchange") &&
+      !core.contains("flatten(transform(sequence"), s"small-graph PageRank should plan as a local scan:\n$core")
     val p = planOf(q("q52_pagerank"))
-    val explosions = p.linesIterator.count(_.contains("flatten(transform(sequence"))
-    assert(explosions == 0,
-      s"copurchase pair explosion survived the checkpoint boundary:\n$p")
-    assert(p.contains("ExistingRDD") || p.contains("Scan ExistingRDD"),
-      s"iterations should scan the checkpointed edge list:\n$p")
+    val exchanges = p.linesIterator.count(_.trim.matches("""\(\d+\) Exchange.*"""))
+    assert(!p.contains("flatten(transform(sequence") && p.contains("LocalTableScan") &&
+      exchanges == 1 && p.contains("rangepartitioning(id"),
+      s"q52 on the driver path should be its local scan plus the output sort:\n$p")
   }
 
   test("text_repetition: pure scan-side plan — no exchange at all before the output sort") {

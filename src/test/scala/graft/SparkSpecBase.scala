@@ -12,6 +12,25 @@ trait SparkSpecBase extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSpecBase.session
 
+  /** `body` with session conf `k` set to `v`, restored after. */
+  def withConf[A](k: String, v: String)(body: => A): A = {
+    val old = spark.conf.getOption(k)
+    spark.conf.set(k, v)
+    try body
+    finally old match {
+      case Some(o) => spark.conf.set(k, o)
+      case None    => spark.conf.unset(k)
+    }
+  }
+
+  /** `body` under both solvers of the graph operators that gate on
+    * [[graft.util.Local.collectIfFits]]: the session default (small
+    * graphs solve on the driver) and a disabled broadcast threshold
+    * (the distributed path). Returns (driver, distributed) results.
+    */
+  def onBothPaths[A](body: => A): (A, A) =
+    (body, withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body))
+
   /** Spark jobs `body` launches on this thread (job-group scoped, so
     * no other work in the session counts).
     */

@@ -544,6 +544,42 @@ class TxTableSpec extends SparkSpecBase {
     intercept[Exception] { TxTable.read(spark, t, version = 1).count() }
   }
 
+  test("vacuum removes the slot directories it empties and leaves live slots as they are") {
+    import spark.implicits._
+    def slots(t: String): Map[String, Set[String]] = {
+      val data = java.nio.file.Paths.get(t, "data")
+      val s = java.nio.file.Files.list(data)
+      try s.iterator().asScala.map { dir =>
+        val w = java.nio.file.Files.walk(dir)
+        try dir.getFileName.toString -> w.iterator().asScala
+          .map(p => dir.relativize(p).toString).toSet
+        finally w.close()
+      }.toMap finally s.close()
+    }
+    val flat = tmpTable()
+    TxTable.create(spark, flat, (1L to 40L).map(i => (i, "a")).toDF("id", "v").repartition(4), Seq("id"))
+    TxTable.append(spark, flat, Seq((41L, "b")).toDF("id", "v"), Seq("id"))
+    TxTable.merge(spark, flat, Seq((1L, "c")).toDF("id", "v"), "id", Seq("id"))
+    TxTable.compact(spark, flat, Seq("id"), targetFiles = 1)
+    val part = tmpTable()
+    TxTable.createPartitioned(spark, part,
+      (1L to 40L).map(i => (i, i % 3)).toDF("id", "dt"), Seq("dt"), Seq("id"))
+    TxTable.appendPartitioned(spark, part, Seq((41L, 0L)).toDF("id", "dt"), Seq("dt"), Seq("id"))
+    TxTable.compactPartitioned(spark, part, Seq("dt"), Seq("id"))
+    for (t <- Seq(flat, part)) {
+      val latest = TxTable.latestVersion(t)
+      val live = TxTable.manifest(t, latest).files.map(_.path.split("/")(1)).toSet
+      val before = slots(t)
+      assert(before.keySet != live, s"compaction left no dead slot to reclaim in $t")
+      val rows = TxTable.read(spark, t).count()
+      TxTable.vacuum(t, latest)
+      val after = slots(t)
+      assert(after.keySet == live, s"dead slots survived vacuum: ${after.keySet -- live}")
+      assert(live.forall(sl => after(sl) == before(sl)), "vacuum touched a live slot")
+      assert(TxTable.read(spark, t).count() == rows)
+    }
+  }
+
   test("update applies SET at file granularity: matched rows rewritten, same-file bystanders identical, disjoint files by reference") {
     import spark.implicits._
     val t = tmpTable()
@@ -2218,11 +2254,21 @@ class TxTableSpec extends SparkSpecBase {
     try {
       q.processAllAvailable()
       assert(rows(rep) == rows(src), "seeded replica matches the source")
+      // the feed starts AFTER the cloned version: the seed micro-batch
+      // reads nothing and the replica still holds exactly the clone's files
+      assert(q.recentProgress.head.numInputRows == 0L,
+        s"seed batch replayed the snapshot: ${q.recentProgress.head.numInputRows} rows")
+      def paths(t: String, v: Int) = TxTable.manifest(t, v).files.map(_.path).toSet
+      assert(paths(rep, TxTable.latestVersion(rep)) == paths(rep, 1),
+        "the seed batch rewrote cloned data files")
       val seededV = TxTable.latestVersion(rep)
-      // live commits flow through: merge + band delete in one window
+      // live commits flow through: merge, exactly-once append and band
+      // delete in one window
       TxTable.merge(spark, src,
         Seq((3L, "upd", 30.0), (41L, "ins", 41.0)).toDF("id", "tag", "v"),
         "id", Seq("id"))
+      TxTable.appendBatchExactlyOnce(spark, src,
+        Seq((50L, "app", 50.0)).toDF("id", "tag", "v"), 7L, Seq("id"))
       TxTable.deleteWhere(spark, src, col("id").between(10L, 12L), Seq("id"))
       q.processAllAvailable()
       assert(rows(rep) == rows(src), "replica follows live commits")
