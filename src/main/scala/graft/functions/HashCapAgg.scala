@@ -2,19 +2,22 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, GraftBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, ShortType}
 
 /** The deterministic df-CAP as a bounded AGGREGATE: per group, the `k`
-  * smallest DISTINCT BIGINT values under the library's pinned LCG-hash
-  * order ((x·1103515245 + 12345) mod 1000000007, ties on x) —
-  * `graft_hashcap(col, k)` → ARRAY<BIGINT> in that order.
+  * smallest DISTINCT integral values under the library's pinned
+  * LCG-hash order ((x·1103515245 + 12345) mod 1000000007, ties on x) —
+  * `graft_hashcap(col, k)` → ARRAY<BIGINT> in that order. TINYINT,
+  * SMALLINT and INT input widens to BIGINT as it is read, so the hash
+  * and order are the BIGINT ones; callers that need the input's type
+  * back cast the elements.
   *
   * This is the NN-Descent/LSH cap policy (neighbor caps, bucket
   * membership caps) that previously ran as `distinct` + a
@@ -37,10 +40,11 @@ case class HashCapAgg(child: Expression, k: Int,
 
   require(k > 0, "graft_hashcap requires k > 0")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires BIGINT input, got ${child.dataType.catalogString}")
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ByteType | ShortType | IntegerType | LongType => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires integral input, got ${t.catalogString}")
+  }
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
@@ -51,7 +55,7 @@ case class HashCapAgg(child: Expression, k: Int,
   override def update(set: java.util.TreeSet[java.lang.Long], input: InternalRow)
       : java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
-    if (v != null) add(set, v.asInstanceOf[Long])
+    if (v != null) add(set, v.asInstanceOf[Number].longValue)
     set
   }
 
@@ -121,6 +125,14 @@ object HashCapAgg {
         if (c != 0) c else java.lang.Long.compare(a, b)
       }
     }
+
+  /** `df` with the columns `cols` (ids drawn from a cap array) cast
+    * back to the capped input's id type `t`; BIGINT ids pass through
+    * with the plan untouched.
+    */
+  def castBack(df: DataFrame, cols: Seq[String], t: DataType): DataFrame =
+    if (t == LongType) df
+    else df.withColumns(cols.map(c => c -> df.col(c).cast(t)).toMap)
 
   /** Column-API entry point (aggregate usage: `df.groupBy(...).agg(...)`). */
   def column(c: Column, k: Int): Column =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-import graft.util.Tables
+import graft.util.{Fixpoint, Tables}
 
 /** Market-basket / graph-affinity analytics (SURVEY.md §2.B extension):
   * co-occurrence mining over order baskets and triangle counting over
@@ -487,37 +487,27 @@ object Affinity {
     *
     * Scale shape per round: one degree aggregate over the (shrinking)
     * edge set + two semi-joins against the surviving-node set — all
-    * keyed shuffles on the graph, which only shrinks; rounds end in an
-    * eager localCheckpoint (same plan-growth reasoning as
-    * [[Dedup.clustersPdOn]]), with an early exit when a round removes
-    * nothing. Output: (item, core_deg) for nodes surviving all peels.
+    * keyed shuffles on the graph, which only shrinks. Each peel is one
+    * [[graft.util.Fixpoint]] round: one eager localCheckpoint whose
+    * observed edge count is the fixpoint test, with an early exit when
+    * a peel removes nothing. Output: (item, core_deg) for nodes
+    * surviving all peels.
     */
   def kcorePeelOn(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     def sym(e: DataFrame): DataFrame = e.select(explode(array(
         struct(col("u"), col("v")),
         struct(col("v").as("u"), col("u").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
-    var e = edges.select(col("a_item").as("u"), col("b_item").as("v"))
-      .localCheckpoint(true)
-    var nE = e.count()
-    var r = 0
-    while (r < rounds && nE > 0) {
-      val alive = sym(e).groupBy(col("u")).agg(count(lit(1)).as("deg"))
+    val e0 = Fixpoint.materialize(edges.select(col("a_item").as("u"), col("b_item").as("v")))
+    val core = Fixpoint.run("kcorePeelOn", e0, rounds) { (e, _) =>
+      val alive = sym(e.df).groupBy(col("u")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("u").as("n"))
-      // r17: the surviving-edge count rides the checkpoint
-      // materialization as an observe() metric — one action per peel
-      val obs = e
+      Fixpoint.materialize(e.df
         .join(alive.select(col("n").as("u")), Seq("u"), "left_semi")
         .join(alive.select(col("n").as("v")), Seq("v"), "left_semi")
-        .select(col("u"), col("v"))
-        .observe(s"kcore_$r", count(lit(1)).as("n"))
-      val next = obs.localCheckpoint(true)
-      val nNext = obs.queryExecution.observedMetrics(s"kcore_$r").getLong(0)
-      e = next
-      if (nNext == nE) r = rounds // fixpoint: remaining rounds are no-ops
-      else { nE = nNext; r += 1 }
-    }
-    sym(e).groupBy(col("u").as("item")).agg(count(lit(1)).as("core_deg"))
+        .select(col("u"), col("v")))
+    } (_.metric == _.metric) // a peel that keeps every edge: later peels are no-ops
+    sym(core.df).groupBy(col("u").as("item")).agg(count(lit(1)).as("core_deg"))
   }
 
   /** q56_kcore testdata binding: the 2-core of the support-≥2
@@ -574,12 +564,15 @@ object Affinity {
     *
     * The H-index rides a window: neighbors sorted by value desc, rank
     * r, H = max(least(r, value)) — all integer arithmetic, so the
-    * oracle unrolls bit-identically. Rounds end in an eager
-    * localCheckpoint (plan-growth contract, as [[kcorePeelOn]]); the
-    * one scalar read per round is the standard iterative-driver
-    * fixpoint check, not a collect of data. The bound: measured
-    * convergence is round 21 at sf0.001, 10 at sf0.01, 5 at sf0.1
-    * (BIGGER graphs converge FASTER here — convergence tracks the
+    * oracle unrolls bit-identically. Each round is one
+    * [[graft.util.Fixpoint]] round (one eager localCheckpoint), and its
+    * fixpoint test is the observed SUM of the values: the h-index
+    * sequence never rises at any node (a node's H is at most its
+    * neighbor count, its starting value, and H is monotone in the
+    * neighbors' values), so an unchanged sum means no value changed.
+    * Round 0's sum is the degree total, which is e's row count. The
+    * bound: measured convergence is round 21 at sf0.001, 10 at sf0.01,
+    * 5 at sf0.1 (BIGGER graphs converge FASTER here — convergence tracks the
     * depth of h-value cascades, and the small graph's long pendant
     * chains out-depth the dense one's cliques), so the bound carries
     * real margin, the early exit keeps actual cost at the convergence
@@ -591,34 +584,20 @@ object Affinity {
     */
   def corenessOn(edges: DataFrame, iters: Int = CorenessIters): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = edges.select(explode(array(
+    val e = Fixpoint.materialize(edges.select(explode(array(
         struct(col("a_item").as("u"), col("b_item").as("v")),
         struct(col("b_item").as("u"), col("a_item").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .localCheckpoint()
-    // r17 (guide §1.2): ONE action per round — the fixpoint test rides
-    // the round's own checkpoint materialization: the prior core table
-    // joins in as c_prev (the same join the separate changed-probe ran)
-    // and the changed count lands as an observe() metric, replacing the
-    // per-round limit(1).count() job.
-    var core = e.groupBy(col("u")).agg(count(lit(1)).as("c"))
-    var r = 0
-    while (r < iters) {
-      val byV = core.select(col("u").as("v"), col("c").as("cv"))
-      val obs = e.join(byV, Seq("v"))
+      .select(col("p.u").as("u"), col("p.v").as("v")))
+    val degrees = Fixpoint.Round(e.df.groupBy(col("u")).agg(count(lit(1)).as("c")), e.metric)
+    val core = Fixpoint.run("corenessOn", degrees, iters) { (core, _) =>
+      val byV = core.df.select(col("u").as("v"), col("c").as("cv"))
+      Fixpoint.materialize(e.df.join(byV, Seq("v"))
         .withColumn("rk", row_number().over(
           Window.partitionBy(col("u")).orderBy(col("cv").desc, col("v"))))
         .groupBy(col("u"))
-        .agg(max(least(col("rk").cast("long"), col("cv"))).as("c"))
-        .join(core.withColumnRenamed("c", "c_prev"), Seq("u"))
-        .observe(s"core_$r", count(when(col("c") =!= col("c_prev"), lit(1))).as("n"))
-      val next = obs.localCheckpoint()
-      val changed = obs.queryExecution.observedMetrics(s"core_$r").getLong(0)
-      core = next.select(col("u"), col("c"))
-      if (changed == 0) r = iters // fixpoint: remaining rounds are no-ops
-      else r += 1
-    }
-    core.select(col("u").as("item"), col("c").as("coreness"))
+        .agg(max(least(col("rk").cast("long"), col("cv"))).as("c")), sum(col("c")))
+    } (_.metric == _.metric)
+    core.df.select(col("u").as("item"), col("c").as("coreness"))
   }
 
   /** q59_coreness testdata binding: full core decomposition of the
@@ -674,6 +653,8 @@ object Affinity {
     * classic LPA reproducibility fix). Per round: one edge⋈label join,
     * one (node, label) count, one node-key window top-1 — all riding
     * the node-key shuffle, O(K) rounds total, labels integer-only.
+    * Each round is one [[graft.util.Fixpoint]] round (one eager
+    * localCheckpoint); there is no early exit.
     * The community coarsening step between the pairwise near-dup tier
     * (connected components) and global structure (pagerank/k-core):
     * components give "are these linked at all", LPA gives "which
@@ -687,20 +668,21 @@ object Affinity {
     val edges = pairs.select(col("a_item").as("u"), col("b_item").as("v"))
       .unionByName(pairs.select(col("b_item").as("u"), col("a_item").as("v")))
       .localCheckpoint()
-    var labels = edges.select(col("u").as("id")).distinct()
+    val seeds = edges.select(col("u").as("id")).distinct()
       .select(col("id"), col("id").as("lbl"))
     val wTop = Window.partitionBy(col("u"))
       .orderBy(col("cnt").desc, col("nlbl"))
-    (1 to CommunityIters).foreach { _ =>
-      labels = edges
-        .join(labels.select(col("id").as("v"), col("lbl").as("nlbl")), Seq("v"))
-        .groupBy(col("u"), col("nlbl")).agg(count(lit(1)).as("cnt"))
-        .withColumn("rn", row_number().over(wTop))
-        .filter(col("rn") === 1)
-        .select(col("u").as("id"), col("nlbl").as("lbl"))
-        .localCheckpoint() // truncate the per-round lineage (q52 pin)
-    }
-    labels.select(col("id").as("item"), col("lbl").as("community"))
+    // exactly CommunityIters rounds, no early exit: the oracle replays K
+    val labels = Fixpoint.run("communityLpOn", Fixpoint.Round(seeds, 0L), CommunityIters) {
+      (labels, _) =>
+        Fixpoint.materialize(edges
+          .join(labels.df.select(col("id").as("v"), col("lbl").as("nlbl")), Seq("v"))
+          .groupBy(col("u"), col("nlbl")).agg(count(lit(1)).as("cnt"))
+          .withColumn("rn", row_number().over(wTop))
+          .filter(col("rn") === 1)
+          .select(col("u").as("id"), col("nlbl").as("lbl")))
+    } ((_, _) => false)
+    labels.df.select(col("id").as("item"), col("lbl").as("community"))
   }
 
   /** q64_community_lp testdata binding: communities of the support-≥2
@@ -774,6 +756,8 @@ object Affinity {
       .groupBy(col("a_right"), col("b_right"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
+      .transform(graft.functions.HashCapAgg.castBack(_, Seq("a_right", "b_right"),
+        uv.schema("v").dataType))
   }
 
   /** q60_bipartite_proj testdata binding: customer→part engagement
@@ -824,11 +808,13 @@ object Affinity {
     * visited set), one node-keyed equi-join + distinct + one anti-join
     * against the visited table, all shuffles keyed on the node id; the
     * frontier (and so per-round work) is bounded by the reachable
-    * ball's growth, never |V|·rounds. Rounds end in an eager
-    * localCheckpoint — the [[pagerankOn]] lineage-truncation contract —
-    * and exit early once a frontier empties. Hop distances are small
-    * integers; min-dist confluence makes the result independent of
-    * visit order, which is what lets the unrolled oracle match exactly.
+    * ball's growth, never |V|·rounds. Each round is one
+    * [[graft.util.Fixpoint]] round: the distance table is materialized
+    * by one eager localCheckpoint, the new frontier is its rows at
+    * distance i, and the loop exits early once a round adds no row.
+    * Hop distances are small integers; min-dist confluence makes the
+    * result independent of visit order, which is what lets the
+    * unrolled oracle match exactly.
     * Output: (id, dist) for nodes reached within [[BfsRounds]] hops.
     */
   def bfsOn(edges: DataFrame, sources: DataFrame, rounds: Int = BfsRounds): DataFrame = {
@@ -837,28 +823,15 @@ object Affinity {
         struct(col("b_item").as("u"), col("a_item").as("v")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"))
       .localCheckpoint(true)
-    // r17 (guide §1.2): ONE action per round — the new frontier rides
-    // the distance table's checkpoint (its rows are exactly dist == i),
-    // and the convergence count rides the same materialization as an
-    // observe() metric; the r16 form paid three actions per round
-    // (frontier checkpoint, frontier count, dist checkpoint).
-    var dist = sources.select(col("id"), lit(0L).as("dist")).localCheckpoint(true)
-    var frontier = dist.select(col("id"))
-    var i = 1
-    var frontierN = frontier.count()
-    while (i <= rounds && frontierN > 0) {
-      val next = e.join(frontier.select(col("id").as("u")), Seq("u"))
+    val dist0 = Fixpoint.materialize(sources.select(col("id"), lit(0L).as("dist")))
+    Fixpoint.run("bfsOn", dist0, rounds) { (dist, i) =>
+      val frontier = dist.df.filter(col("dist") === i - 1L).select(col("id").as("u"))
+      val next = e.join(frontier, Seq("u"))
         .select(col("v").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
+        .join(dist.df, Seq("id"), "left_anti")
         .select(col("id"), lit(i.toLong).as("dist"))
-      val obs = dist.unionAll(next).observe(s"bfs_$i",
-        count(when(col("dist") === i.toLong, lit(1))).as("n"))
-      dist = obs.localCheckpoint(true)
-      frontierN = obs.queryExecution.observedMetrics(s"bfs_$i").getLong(0)
-      frontier = dist.filter(col("dist") === i.toLong).select(col("id"))
-      i += 1
-    }
-    dist
+      Fixpoint.materialize(dist.df.unionAll(next))
+    } (_.metric == _.metric).df // an empty frontier adds no row
   }
 
   /** q65_bfs testdata binding: hop distance from the item-id ≡ 0
@@ -920,10 +893,12 @@ object Affinity {
     * min aggregate over the relaxed candidates, one left-outer
     * improvement filter, one min-merge of the distance table; every
     * shuffle keys on the node id, per-round work tracks the frontier
-    * size, rounds end in eager localCheckpoint (lineage truncation)
-    * and exit early on an empty frontier. Integer distances with
-    * min-confluence → partition-order-independent → exact unrolled
-    * oracle.
+    * size. A round materializes twice through
+    * [[graft.util.Fixpoint.materialize]]: the improved set, whose
+    * observed row count is the fixpoint test, then the merged distance
+    * table (skipped once nothing improved); the loop exits early on an
+    * empty frontier. Integer distances with min-confluence →
+    * partition-order-independent → exact unrolled oracle.
     * Output: (id, dist) for nodes reached within [[SsspRounds]]
     * relaxation rounds.
     */
@@ -934,32 +909,20 @@ object Affinity {
         struct(col("b_item").as("u"), col("a_item").as("v"), col("w")))).as("p"))
       .select(col("p.u").as("u"), col("p.v").as("v"), col("p.w").as("w"))
       .localCheckpoint(true)
-    // r17 (guide §1.2): the improved-set count rides the improved
-    // frame's own checkpoint materialization as an observe() metric —
-    // two actions per round where the r16 form paid three (improved
-    // checkpoint, improved count, dist checkpoint).
-    var dist = sources.select(col("id"), lit(0L).as("dist")).localCheckpoint(true)
-    var frontier = dist
-    var i = 1
-    var frontierN = frontier.count()
-    while (i <= rounds && frontierN > 0) {
+    // state: (distance table, the frontier that improved last round)
+    val dist0 = Fixpoint.materialize(sources.select(col("id"), lit(0L).as("dist")))
+    Fixpoint.run("ssspOn", (dist0.df, dist0), rounds) { case ((dist, frontier), _) =>
       val relaxed = e.join(
-          frontier.select(col("id").as("u"), col("dist").as("du")), Seq("u"))
+          frontier.df.select(col("id").as("u"), col("dist").as("du")), Seq("u"))
         .select(col("v").as("id"), (col("du") + col("w")).as("nd"))
         .groupBy(col("id")).agg(min(col("nd")).as("nd"))
-      val obs = relaxed.join(dist, Seq("id"), "left_outer")
+      val improved = Fixpoint.materialize(relaxed.join(dist, Seq("id"), "left_outer")
         .filter(col("dist").isNull || col("nd") < col("dist"))
-        .select(col("id"), col("nd").as("dist"))
-        .observe(s"sssp_$i", count(lit(1)).as("n"))
-      val improved = obs.localCheckpoint(true)
-      frontierN = obs.queryExecution.observedMetrics(s"sssp_$i").getLong(0)
-      frontier = improved
-      dist = dist.unionAll(improved)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      i += 1
-    }
-    dist
+        .select(col("id"), col("nd").as("dist")))
+      if (improved.metric == 0) (dist, improved)
+      else (Fixpoint.materialize(dist.unionAll(improved.df)
+        .groupBy(col("id")).agg(min(col("dist")).as("dist"))).df, improved)
+    } ((_, next) => next._2.metric == 0)._1
   }
 
   /** q66_sssp testdata binding: cost 1000 div n_baskets per
@@ -1112,6 +1075,7 @@ object Affinity {
       .filter(col("u") < col("w"))
       .groupBy(col("u"), col("w")).agg(count(lit(1)).as("cn"))
       .filter(col("cn") >= minCommon)
+      .transform(graft.functions.HashCapAgg.castBack(_, Seq("u", "w"), und.schema("n").dataType))
     cand
       // candidates are canonical u < w, so anti-join against the
       // CANONICALIZED edge list (least/greatest) — a caller passing

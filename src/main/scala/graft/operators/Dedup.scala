@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StructField, StructType}
 import graft.functions.TextFns
-import graft.util.Tables
+import graft.util.{Fixpoint, Tables}
 
 /** Document deduplication family (SURVEY.md §2.C).
   *
@@ -673,35 +673,44 @@ object Dedup {
     *  - SMALL PATH: a graph within [[graft.util.Local.maxRows]]
     *    (Spark's broadcast threshold) with integral, non-null ids is
     *    collected ([[graft.util.Local.graphIfFits]]) and labelled on the
-    *    driver by union-find with the minimum id as root — the fixpoint
-    *    propagation reaches and the oracle's recursive closure computes
-    *    — and joins back as a broadcast LocalRelation. Near-dup
-    *    graphs are a tiny fraction of a corpus (256 pairs over 5000 docs
-    *    at sf0.1), so this is the common case; it has no round cap.
-    *  - DISTRIBUTED PATH ([[propagatedLabels]]): FRONTIER label
-    *    propagation, O(component diameter) rounds. Rounds past its cap
-    *    fail loudly rather than return unconverged labels; that
-    *    `require` applies to this path only.
+    *    driver by union-find with the minimum id as root — the closure
+    *    the oracle's recursive query computes — and joins back as a
+    *    broadcast LocalRelation. Near-dup graphs are a tiny fraction of
+    *    a corpus (256 pairs over 5000 docs at sf0.1), so this is the
+    *    common case.
+    *  - DISTRIBUTED PATH: star contraction over the persisted edges
+    *    ([[clustersPdOn]]'s labelling), O(log² n) rounds whatever the
+    *    component diameter.
     */
-  def clustersOn(pairs: DataFrame, allIds: DataFrame): DataFrame = {
+  def clustersOn(pairs: DataFrame, allIds: DataFrame): DataFrame =
+    clustered(pairs, allIds, driverIfFits = true)
+
+  /** [[clustersOn]] and [[clustersPdOn]]: the labelling, then the join
+    * back onto every id.
+    */
+  private def clustered(pairs: DataFrame, allIds: DataFrame,
+      driverIfFits: Boolean): DataFrame = {
     // Both edge directions come from ONE evaluation of `pairs` via a
     // scan-side explode — a union of (a,b) and (b,a) projections would
     // run the (expensive, unpersisted) pair-generation subtree once per
     // branch: only the agg exchanges get ReusedExchange, the post-shuffle
     // join/filter work is duplicated.
-    val edgesRaw = pairs.select(explode(array(
+    val edges = pairs.select(explode(array(
         struct(col("a_id").as("u"), col("b_id").as("v")),
         struct(col("b_id").as("u"), col("a_id").as("v")))).as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"))
-      .persist()
-    // the heavy candidate-pair build materializes HERE, under AQE, by
-    // the gate's own read of the persisted edges
-    val labels = graft.util.Local.graphIfFits(edgesRaw) match {
-      case Some(g) =>
-        edgesRaw.unpersist()
-        broadcast(componentLabels(pairs.sparkSession, g, edgesRaw.schema("u")))
-      case None => propagatedLabels(edgesRaw)
-    }
+    val labels =
+      if (!driverIfFits) starLabels(edges)
+      else {
+        // the heavy candidate-pair build materializes HERE, under AQE,
+        // by the gate's own read of the persisted edges
+        val pinned = edges.persist()
+        try graft.util.Local.graphIfFits(pinned) match {
+          case Some(g) =>
+            broadcast(componentLabels(pairs.sparkSession, g, pinned.schema("u")))
+          case None => starLabels(pinned)
+        } finally pinned.unpersist()
+      }
     allIds.join(labels, Seq("id"), "left")
       .select(col("id").as("doc_id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
   }
@@ -726,105 +735,6 @@ object Dedup {
     val rows = g.ids.indices.map(i => Row(g.ids(i), g.ids(find(i))))
     spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
       idField.copy(name = "id"), idField.copy(name = "lbl"))))
-  }
-
-  /** [[clustersOn]]'s distributed path: (id, lbl) for every node of the
-    * persisted edge list (which it takes over and unpersists).
-    *
-    * Distributed FRONTIER label propagation: each round, only labels
-    * that IMPROVED last round propagate to their neighbors (a node's
-    * min can only drop via a neighbor whose min dropped — standard
-    * delta iteration); edges are hash-partitioned on the probe key once
-    * and reused every round. Converges in O(component diameter) rounds.
-    * Frames are persisted and counted per round BOTH to detect the
-    * fixpoint and to truncate lineage (without it the plan doubles
-    * every round). Near-dup components are shallow in practice, so
-    * rounds ≈ 3–5 at any corpus scale.
-    */
-  private def propagatedLabels(edgesRaw: DataFrame): DataFrame = {
-    val spark = edgesRaw.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val edgeRows = edgesRaw.count()
-    // Iteration width from the MEASURED near-dup-graph size, capped at
-    // the session width — the driver-side analog of the AQE partition
-    // coalescing that is deliberately off inside the loop. The graph is
-    // orders of magnitude smaller than the corpus (it holds only
-    // near-dup pairs), so iterating at the corpus's configured shuffle
-    // width pays per-round task-dispatch cost over near-empty
-    // partitions: measured at sf0.1 local[32], 32-wide rounds over a
-    // ~50-edge graph more than double the whole operator's wall time.
-    val iterPart = math.max(1, math.min(nPart, math.ceil(edgeRows / 65536.0).toInt))
-    val edges = edgesRaw.repartition(iterPart, col("v")).persist()
-    var labels = edges.select(col("u").as("id")).distinct()
-      .select(col("id"), col("id").as("lbl")).persist()
-    var delta = labels
-    var prevRound: Option[DataFrame] = None
-    var changed = 1L
-    var iter = 0
-    val maxIter = 20
-    val debug = sys.env.contains("GRAFT_CLUSTER_DEBUG")
-    var t0 = System.nanoTime()
-    // AQE off for the iteration only: each round's frames are tiny views
-    // over caches, but AQE re-optimizes every shuffle stage into extra
-    // scheduler round-trips — measurable fixed cost per round that buys
-    // nothing on already-materialized kilobyte inputs. The HEAVY stage —
-    // the candidate-pair build feeding `edges` — is materialized first,
-    // while AQE is still on (it's the part that needs runtime
-    // coalescing/skew handling at corpus scale). Restored after.
-    // CAVEAT: session-scoped conf — queries running CONCURRENTLY on
-    // this session during the loop would also plan without AQE (the
-    // harnesses are sequential; parallel-job callers should isolate
-    // with spark.newSession()).
-    labels.count() // materializes edges + initial labels under AQE
-    edgesRaw.unpersist() // re-keyed copy is the one the loop reads
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // loop aggregations shuffle at the graph-sized width too
-    spark.conf.set("spark.sql.shuffle.partitions", iterPart.toString)
-    try {
-    while (changed > 0 && iter < maxIter) {
-      val nbrMin = edges
-        .join(delta.select(col("id").as("v"), col("lbl").as("vlbl")), Seq("v"))
-        .groupBy(col("u")).agg(min(col("vlbl")).as("nlbl"))
-      val next = labels
-        .join(nbrMin.select(col("u").as("id"), col("nlbl")), Seq("id"), "left")
-        .select(col("id"), least(col("lbl"), coalesce(col("nlbl"), col("lbl"))).as("lbl"),
-          col("lbl").as("prev"))
-        .persist()
-      // delta is a filter VIEW over next's cache (no second persist —
-      // one materialization per round; the count both detects the
-      // fixpoint and truncates lineage)
-      val nextDelta = next.filter(col("lbl") =!= col("prev"))
-        .select(col("id"), col("lbl"))
-      changed = nextDelta.count() // materializes next
-      if (debug) {
-        System.err.println(f"[cluster] round $iter: changed=$changed ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        t0 = System.nanoTime()
-      }
-      // previous round's frames are now fully consumed
-      labels.unpersist()
-      prevRound.foreach(_.unpersist())
-      prevRound = Some(next)
-      labels = next.select(col("id"), col("lbl")) // view over next's cache
-      delta = nextDelta
-      iter += 1
-    }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partWas)
-    }
-    // min-label propagation needs O(component diameter) rounds; a graph
-    // with diameter > maxIter would otherwise return silently-wrong
-    // unconverged labels (the oracle computes the full closure)
-    require(changed == 0,
-      s"label propagation did not converge in $maxIter rounds ($changed labels still changing); " +
-        "component diameter exceeds the round cap")
-    edges.unpersist()
-    // the FINAL round's cache is referenced by the returned plan (labels
-    // is a view over it) — hand it to CacheScope for the caller's drain
-    prevRound.foreach(graft.util.CacheScope.register)
-    labels
   }
 
   /** dedup_cluster testdata binding: components of the jaccard ≥ 0.5
@@ -852,66 +762,52 @@ object Dedup {
 
   /** Connected components via alternating LARGE-STAR / SMALL-STAR edge
     * rewrites (Kiveris et al., "Connected Components in MapReduce and
-    * Beyond", 2014 — a public algorithm): each round every node hooks
+    * Beyond", 2014 — a public algorithm), always distributed: the same
+    * contract, oracle and labelling as [[clustersOn]]'s distributed
+    * path, without its driver-side gate. Each round every node hooks
     * its larger (large-star) or not-larger (small-star) neighbors
     * directly onto the minimum of its closed neighborhood, so pointer
     * chains HALVE each round and the edge set converges to disjoint
-    * stars rooted at each component's minimum id in O(log² n) rounds —
-    * vs [[clustersOn]]'s O(component diameter). Same contract and
-    * oracle as clustersOn; this is the variant to reach for when the
-    * near-dup graph has DEEP components (chained paraphrase edits,
-    * template families), where diameter-bound propagation needs
-    * hundreds of rounds: a 1024-node path converges here in a handful
-    * of rounds (spec-exercised) where label propagation needs 1023 —
-    * more than clustersOn's round cap allows.
+    * stars rooted at each component's minimum id in O(log² n) rounds,
+    * whatever the component diameter: a 1024-node path converges in a
+    * handful of rounds (spec-exercised) where min-label propagation
+    * would need 1023. This is the solver for near-dup graphs with DEEP
+    * components (chained paraphrase edits, template families) and for
+    * merge graphs that can chain across batches (the streaming
+    * components sink).
+    */
+  def clustersPdOn(pairs: DataFrame, allIds: DataFrame): DataFrame =
+    clustered(pairs, allIds, driverIfFits = false)
+
+  /** Star contraction over a directed (u, v) edge frame: (id, lbl) for
+    * every node, lbl = the minimum id of its component.
     *
-    * Edge set is kept CANONICAL (lo < hi, distinct) so each round's
+    * The edge set is kept CANONICAL (lo < hi, distinct) so each round's
     * rewrite is two small aggregates + a distinct over the (tiny,
     * edge-induced) graph — the corpus itself never re-enters the loop.
-    * Each round ends in an EAGER localCheckpoint, not a persist: a
-    * round's plan references the previous round's frame ~6 times (sym
-    * twice, the two min-aggregates, the two star joins), so with
-    * persist alone the LOGICAL plan grows ~6× per round and Catalyst
-    * analysis goes exponential around round 10 even though execution
-    * hits the caches (measured: the 1024-node-path spec hangs).
-    * clustersOn tolerates persist because propagation references its
-    * prior round fewer times and near-dup graphs converge in ~4
-    * rounds; contraction's deeper round count needs the hard
-    * plan-truncation. The same measured iteration width applies (the
-    * graph is orders of magnitude smaller than the corpus).
+    * Each round is one [[graft.util.Fixpoint]] round: an eager
+    * localCheckpoint whose observed edge count is the fixpoint test (a
+    * round's plan references the previous round's frame ~6 times, so
+    * without the cut Catalyst analysis goes exponential around round
+    * 10). The first materialization runs under AQE — it is where the
+    * heavy pair build upstream executes — and the rounds run with AQE
+    * off at a width sized from the graph.
     */
-  def clustersPdOn(pairs: DataFrame, allIds: DataFrame): DataFrame = {
-    val spark = pairs.sparkSession
-    val nPart = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // canonical undirected edges, no self-loops
-    // Eager checkpoint: the heavy candidate-pair build materializes HERE,
-    // under AQE, and the loop below starts from a flat cached-scan plan.
-    val e0 = pairs.select(
-        least(col("a_id"), col("b_id")).as("lo"),
-        greatest(col("a_id"), col("b_id")).as("hi"))
-      .filter(col("lo") =!= col("hi")).distinct().localCheckpoint(true)
-    val edgeRows = e0.count()
-    val iterPart = math.max(1, math.min(nPart, math.ceil(edgeRows / 65536.0).toInt))
-    val aqeWas = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    val partWas = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", iterPart.toString)
-    var edges = e0
-    var nEdges = edgeRows
-    var converged = edgeRows == 0
-    var iter = 0
+  private def starLabels(edges: DataFrame): DataFrame = {
+    val spark = edges.sparkSession
+    val e0 = Fixpoint.materialize(edges.filter(col("u") < col("v"))
+      .select(col("u").as("lo"), col("v").as("hi")).distinct())
     // Star contraction converges in ~log n rounds in practice (the
     // proven worst case is O(log² n)); 50 is far beyond either for any
     // graph that fits on disk, and rounds on a converged-size graph are
     // milliseconds — the cap only turns a rewrite bug into a loud error.
-    val maxIter = 50
-    try {
-      while (!converged && iter < maxIter) {
+    val stars = onGraphSizedStages(spark, e0.metric) {
+      Fixpoint.run("star contraction", e0, 50, mustConverge = true) { (edges, _) =>
         // LARGE-STAR: center each node u over its full neighborhood; every
         // strictly larger neighbor re-hooks to m = min(Γ(u) ∪ {u}). Each
         // undirected edge {a<b} is emitted exactly once, from a's view,
         // as (m_a, b) — and m_a ≤ a < b keeps the output canonical.
-        val sym = edges.select(explode(array(
+        val sym = edges.df.select(explode(array(
             struct(col("lo").as("u"), col("hi").as("v")),
             struct(col("hi").as("u"), col("lo").as("v")))).as("e"))
           .select(col("e.u").as("u"), col("e.v").as("v"))
@@ -925,41 +821,50 @@ object Dedup {
         // canonical edges; the smaller neighbors (and the center itself)
         // all re-hook to the minimum smaller neighbor.
         val mOfHi = large.groupBy(col("hi")).agg(min(col("lo")).as("m"))
-        // Eager checkpoint materializes the round AND flattens its plan
-        // to a cached scan — see the scaladoc on why persist is not
-        // enough here.
-        val next = large.join(mOfHi, Seq("hi"))
+        Fixpoint.materialize(large.join(mOfHi, Seq("hi"))
           .select(explode(array(
             struct(col("m").as("nlo"), col("lo").as("nhi")),
             struct(col("m").as("nlo"), col("hi").as("nhi")))).as("e"))
           .select(col("e.nlo").as("lo"), col("e.nhi").as("hi"))
-          .filter(col("lo") =!= col("hi")).distinct().localCheckpoint(true)
-        val nNext = next.count()
+          .filter(col("lo") =!= col("hi")).distinct())
+      } { (prev, next) =>
         // Fixpoint = edge set unchanged. Both sets are distinct and
         // canonical, so equal counts + empty difference ⇔ equality; the
-        // except runs over the (tiny) cached graph frames.
-        // Both sides are checkpointed scans, so the except is a tiny
-        // graph-sized job. Freed RDD blocks are reclaimed by the
-        // ContextCleaner as rounds drop their references.
-        converged = nNext == nEdges && next.except(edges).isEmpty
-        edges = next
-        nEdges = nNext
-        iter += 1
+        // except runs over two checkpointed graph-sized frames.
+        next.metric == prev.metric && next.df.except(prev.df).isEmpty
       }
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", aqeWas)
-      spark.conf.set("spark.sql.shuffle.partitions", partWas)
     }
-    require(converged,
-      s"star contraction did not converge in $maxIter rounds — far beyond " +
-        "the O(log² n) bound for any real graph; indicates an edge-rewrite bug")
     // Fixpoint is a disjoint union of stars: every edge is (root, member)
     // with root = component minimum. Roots label themselves.
-    val labels = edges.select(col("hi").as("id"), col("lo").as("lbl"))
-      .union(edges.select(col("lo").as("id"), col("lo").as("lbl")))
+    stars.df.select(col("hi").as("id"), col("lo").as("lbl"))
+      .union(stars.df.select(col("lo").as("id"), col("lo").as("lbl")))
       .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
-    allIds.join(labels, Seq("id"), "left")
-      .select(col("id").as("doc_id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
+  }
+
+  /** `body` with AQE off and the shuffle width sized from a graph of
+    * `edgeRows` edges, session conf restored after. Each round's stages
+    * are tiny reads of checkpointed frames: AQE re-planning every one
+    * adds scheduler round-trips that buy nothing (measured at sf0.1:
+    * without the toggle dedup_cluster_pd ran ~1.5× the jobs, and
+    * slower), and the corpus-wide shuffle width pays per-round task
+    * dispatch over near-empty partitions (32-wide rounds over a
+    * ~50-edge graph more than doubled the operator's wall). CAVEAT:
+    * session-scoped conf — queries running CONCURRENTLY on this session
+    * would also plan this way (the harnesses are sequential;
+    * parallel-job callers should isolate with spark.newSession()).
+    */
+  private def onGraphSizedStages[A](spark: SparkSession, edgeRows: Long)(body: => A): A = {
+    val aqe = "spark.sql.adaptive.enabled"
+    val width = "spark.sql.shuffle.partitions"
+    val (aqeWas, widthWas) = (spark.conf.get(aqe, "true"), spark.conf.get(width))
+    val iterPart = math.max(1, math.min(widthWas.toInt, math.ceil(edgeRows / 65536.0).toInt))
+    spark.conf.set(aqe, "false")
+    spark.conf.set(width, iterPart.toString)
+    try body
+    finally {
+      spark.conf.set(aqe, aqeWas)
+      spark.conf.set(width, widthWas)
+    }
   }
 
   /** dedup_cluster_pd testdata binding: same component semantics (and

@@ -1310,9 +1310,10 @@ object Similarity {
     * against a BROADCAST centroid table (k·dims rows — constant, never
     * grows with the corpus) and aggregates per (vec, cid) with map-side
     * combine — O(N·k·d) work, one shuffle on vec id; the update is one
-    * groupBy(cid, d) over N·d slim rows. Seeds are the k lowest-id
-    * vectors (deterministic; k-means|| would replace the seeding step
-    * at scale without touching the iteration shape). Empty clusters
+    * groupBy(cid, d) over N·d slim rows. Seeds are the vectors with
+    * ids 0..k−1, each seeding the cid equal to its id; ids outside
+    * [0, k) seed nothing (deterministic; k-means|| would replace the
+    * seeding step at scale without touching the iteration shape). Empty clusters
     * drop out of the centroid table exactly as the oracle's arithmetic
     * does. Output: (vec_id, cluster, dist2_fixed).
     */
@@ -1380,7 +1381,8 @@ object Similarity {
         .agg(sums.head, sums.tail: _*)
         .select(col("id"), least(packed: _*).as("amin"))
     }
-    // seeding: the k lowest ids (kmeans' documented policy), or —
+    // seeding: ids 0..k−1 as cids 0..k−1 (kmeans' documented policy;
+    // negative ids are no cid and seed nothing), or —
     // hashSeeds — the k lowest SQUARED-LCG-hash ids, remapped to cid
     // 0..k−1. The hash scatter matters when low ids correlate with a
     // data pattern: RQ's residual stage measured ZERO stage-2 gain on
@@ -1401,7 +1403,8 @@ object Similarity {
         v.join(broadcast(seeds), Seq("id"))
           .select(col("cid"), col("d"), col("qx").as("cq"))
       } else {
-        v.filter(col("id") < k).select(col("id").as("cid"), col("d"), col("qx").as("cq"))
+        v.filter(col("id") >= 0 && col("id") < k)
+          .select(col("id").as("cid"), col("d"), col("qx").as("cq"))
       })
     (1 to iters).foreach { _ =>
       val assign = assignTo(cents).select(col("id"), pmod(col("amin"), lit(16L)).as("cid"))
@@ -1609,8 +1612,8 @@ object Similarity {
   }
 
   /** The shared Lloyd loop of every PQ consumer ([[pqOn]], [[pqAdcOn]],
-    * [[ivfPq]]): seed each subspace's codebook from the k lowest-id
-    * vectors' subvectors, then `iters` rounds of broadcast-codebook
+    * [[ivfPq]]): seed each subspace's codebook from the subvectors of
+    * ids 0..k−1 (cid = id), then `iters` rounds of broadcast-codebook
     * assignment + (sub, cid, d) centroid means. All integers; the
     * codebook rows ride the driver between rounds (constant size).
     */
@@ -1620,7 +1623,7 @@ object Similarity {
     def collectCents(df: DataFrame): Array[org.apache.spark.sql.Row] =
       df.select(col("sub").cast("int"), col("cid").cast("long"),
         col("d").cast("int"), col("cq").cast("long")).collect()
-    var cents = collectCents(v.filter(col("id") < k)
+    var cents = collectCents(v.filter(col("id") >= 0 && col("id") < k)
       .select(col("sub"), col("id").as("cid"), col("d"), col("qx").as("cq")))
     (1 to iters).foreach { _ =>
       val assign = pqAssign(v, pqCentsWideLocal(spark, cents, k), k)

@@ -848,6 +848,29 @@ class AnalyticsOpsSpec extends SparkSpecBase {
     both(Seq.empty[(Long, Long)].toDF("a_item", "b_item"))
   }
 
+  test("khopOn / bipartiteProjectOn / linkPredOn take INT and negative ids, keep their type, match BIGINT") {
+    import spark.implicits._
+    // the INT/negative-id graph of the pagerank case above: the hub caps
+    // (HashCapAgg) read it widened to BIGINT, in the BIGINT order
+    val intEdges = Seq((-3, 1), (1, 2), (2, -3), (2, 7), (-8, 7)).toDF("a_item", "b_item")
+    val longEdges = intEdges.select(col("a_item").cast("long"), col("b_item").cast("long"))
+    val ops = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+        Seq[String])](
+      ("khopOn", Affinity.khopOn(_), Seq("id")),
+      ("bipartiteProjectOn",
+        Affinity.bipartiteProjectOn(_, "a_item", "b_item", minShared = 1L), Seq("a_right", "b_right")),
+      ("linkPredOn", e => Affinity.linkPredOn(
+        e.select(col("a_item").as("a"), col("b_item").as("b")), minCommon = 1L), Seq("u", "w")))
+    ops.foreach { case (name, op, idCols) =>
+      val onInt = op(intEdges)
+      idCols.foreach(c => assert(onInt.schema(c).dataType.typeName == "integer", s"$name: ${onInt.schema}"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select(df.columns.map(c => col(c).cast("long")): _*).collect().map(_.toSeq).toSet
+      val got = rows(onInt)
+      assert(got.nonEmpty && got == rows(op(longEdges)), s"$name: INT $got vs BIGINT ${rows(op(longEdges))}")
+    }
+  }
+
   test("pagerankOn on the driver: the job count does not grow with the round count") {
     val edges = Affinity.copurchase(spark, SfDir)
     def jobs(iters: Int): Int = jobsOf(Affinity.pagerankOn(edges, iters).collect())._2

@@ -27,7 +27,7 @@ class CacheAuditSpec extends SparkSpecBase {
       "util/CacheScope.scala",      // the registry's own persist
       "streaming/EventStreams.scala", // foreachBatch try/finally unpersist
       "operators/Similarity.scala", // OPQ training sample, unpersisted after collect
-      "operators/Dedup.scala",      // cluster loop pins; final round -> CacheScope.register
+      "operators/Dedup.scala",      // clustersOn's gate pin, try/finally unpersist
       "sources/TxTable.scala",      // deleteWithDVWhere's fresh-hits pin + pinned(), try/finally unpersist
       "ScaleRehearsal.scala")       // standalone main, session stopped at exit
     val offenders = Files.walk(root).iterator().asScala

@@ -44,18 +44,24 @@ class DedupSpec extends SparkSpecBase {
   test("pointer-doubling clustering matches label propagation on the testdata graph") {
     val lp = Dedup.cluster(spark, SfDir).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val pd = Dedup.clusterPd(spark, SfDir).collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    assert(pd == lp, "star contraction must produce the same components as propagation")
+    assert(pd == lp, "star contraction must produce the same components as clustersOn")
   }
 
   test("pointer-doubling clustering converges on a 1024-node path (diameter beyond propagation's cap)") {
     import spark.implicits._
-    // path 0-1-2-...-1023: one component, diameter 1023. clustersOn's
-    // O(diameter) rounds would blow its cap; star contraction needs ~log n.
+    // path 0-1-2-...-1023: one component, diameter 1023. Min-label
+    // propagation would need 1023 rounds; star contraction needs ~log n.
     val pairs = (0L until 1023L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     val ids = (0L to 1023L).toDF("id")
-    val labels = Dedup.clustersPdOn(pairs, ids).collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(labels.length == 1024)
-    assert(labels.forall(_._2 == 0L), "every path node must label to the component min")
+    def check(labels: Array[(Long, Long)]): Unit = {
+      assert(labels.length == 1024)
+      assert(labels.forall(_._2 == 0L), "every path node must label to the component min")
+    }
+    check(Dedup.clustersPdOn(pairs, ids).collect().map(r => (r.getLong(0), r.getLong(1))))
+    // clustersOn's distributed path on the same deep component
+    check(withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      Dedup.clustersOn(pairs, ids).collect().map(r => (r.getLong(0), r.getLong(1)))
+    })
   }
 
   test("both clustering algorithms match a union-find ground truth on random graphs") {
@@ -86,12 +92,12 @@ class DedupSpec extends SparkSpecBase {
       val pd = Dedup.clustersPdOn(pairsDf, ids).collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1))).toMap
       // clustersOn on both of its solvers: driver union-find (default
-      // config) and distributed propagation (threshold -1)
+      // config) and distributed star contraction (threshold -1)
       val (local, lp) = onBothPaths(Dedup.clustersOn(pairsDf, ids).collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1))).toMap)
       (0 until n).foreach { i =>
         assert(pd(i) == truth(i), s"trial $trial: contraction mislabeled node $i")
-        assert(lp(i) == truth(i), s"trial $trial: propagation mislabeled node $i")
+        assert(lp(i) == truth(i), s"trial $trial: distributed clustersOn mislabeled node $i")
         assert(local(i) == truth(i), s"trial $trial: driver union-find mislabeled node $i")
       }
     }
@@ -126,16 +132,29 @@ class DedupSpec extends SparkSpecBase {
 
   test("clustersOn on the driver: the job count does not grow with the component diameter") {
     import spark.implicits._
+    def path(nodes: Int) = ((0L until nodes - 1L).map(i => (i, i + 1)).toDF("a_id", "b_id"),
+      (0L until nodes.toLong).toDF("id"))
     def pathJobs(nodes: Int): Int = {
-      val pairs = (0L until nodes - 1L).map(i => (i, i + 1)).toDF("a_id", "b_id")
-      val ids = (0L until nodes.toLong).toDF("id")
+      val (pairs, ids) = path(nodes)
       val (labels, jobs) = jobsOf(Dedup.clustersOn(pairs, ids).collect())
       assert(labels.forall(_.getLong(1) == 0L), s"$nodes-node path must label to its minimum")
       jobs
     }
-    // distributed propagation pays jobs per round, O(diameter) rounds;
-    // union-find on the driver pays none
+    // the distributed path pays jobs per round; union-find on the
+    // driver pays none
     assert(pathJobs(3) == pathJobs(15))
+    // the distributed path's rounds end in checkpoints, so the frame it
+    // returns plans over the last round only, whatever the diameter (a
+    // persist-only loop's plan doubled every round: 185 nodes for 3, 12,533 for 9)
+    def planNodes(nodes: Int): Int = {
+      val (pairs, ids) = path(nodes)
+      val out = Dedup.clustersOn(pairs, ids)
+      assert(out.collect().forall(_.getLong(1) == 0L), s"$nodes-node path must label to its minimum")
+      out.queryExecution.logical.collect { case n => n }.size
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      assert(planNodes(3) == planNodes(9))
+    }
   }
 
   test("bag dedup: word order is invisible, multiplicity is not") {

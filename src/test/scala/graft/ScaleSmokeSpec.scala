@@ -68,12 +68,13 @@ class ScaleSmokeSpec extends SparkSpecBase {
     val ids = docs.select(col("doc_id").as("id"))
     val t0 = System.nanoTime()
     val pd = Dedup.clustersPdOn(pairs, ids)
-    // same partition: compare against propagation labels, not just counts
+    // same partition: compare against clustersOn's labels (driver
+    // union-find when the graph fits), not just counts
     val lp = Dedup.clustersOn(pairs, ids)
     val diff = pd.select(col("doc_id"), col("cluster_id").as("pd"))
       .join(lp.select(col("doc_id"), col("cluster_id").as("lp")), Seq("doc_id"))
       .filter(col("pd") =!= col("lp")).count()
-    assert(diff == 0, s"$diff docs labeled differently by contraction vs propagation")
+    assert(diff == 0, s"$diff docs labeled differently by contraction vs clustersOn")
     val secs = (System.nanoTime() - t0) / 1e9
     info(f"20k-doc star contraction + equivalence check: $secs%.1f s")
     assert(secs < 120, f"star contraction too slow at 20k docs: $secs%.1f s")

@@ -304,4 +304,21 @@ class SimilaritySpec extends SparkSpecBase {
       .orderBy("rk").collect().map(_.getAs[Long]("vec_id")).toSeq
     assert(pure == Seq(1L, 2L, 3L), pure.toString)
   }
+
+  test("kmeansOn / pqOn seed only from ids in [0, k): negative ids are clustered, never seeds") {
+    import spark.implicits._
+    // ids -3..40: the seed filter must skip -3..-1 (no cid), as the
+    // pivot it replaced did, rather than index a centroid slot with them
+    val vecs = (-3L to 40L).map { id =>
+      (id, Array.tabulate(16)(d => (((id + 5) * 7 + d * 3) % 11 - 5).toFloat / 10f))
+    }.toDF("id", "vec")
+    val k = 4
+    val km = Similarity.kmeansOn(vecs, k = k).collect()
+    assert(km.map(_.getAs[Long]("vec_id")).sorted.toSeq == (-3L to 40L))
+    assert(km.forall { r => val c = r.getAs[Int]("cluster"); c >= 0 && c < k },
+      km.map(_.getAs[Int]("cluster")).distinct.toSeq)
+    val pq = Similarity.pqOn(vecs, subDim = 8, k = k).collect()
+    assert(pq.map(_.getAs[Long]("vec_id")).sorted.toSeq == (-3L to 40L))
+    spark.catalog.clearCache()
+  }
 }
