@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.util.Session
 
 /** Scale rehearsal main: the library's two candidate-generation
   * stacks at 10-100× the ScaleSmokeSpec sizes — the dry run for the
@@ -10,6 +11,10 @@ import org.apache.spark.sql.functions._
   *
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.ScaleRehearsal 2000000'
   *   SPARK_GRAFT_CPUS=32 sbt 'runMain graft.ScaleRehearsal ann 500000'
+  *
+  * Every mode but `catalog` (fixed at 4 cores) runs in the harness
+  * session ([[graft.util.Session.local]]) on SPARK_GRAFT_CPUS cores,
+  * 4 when unset, like Bench and Verify; the rehearsal sizes assume 32.
   *
   * All inputs are generated ON THE EXECUTORS (spark.range +
   * hash-derived values — a driver-side Seq would serialize hundreds
@@ -47,15 +52,7 @@ object ScaleRehearsal {
     if (args.headOption.contains("catalog")) { catalogMain(args.drop(1)); return }
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val planted = math.max(n / 100, 1L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // vocabulary scales with N so band-collision behavior mirrors a
     // real corpus (fixed small vocab at 2M docs would overload the
@@ -117,15 +114,7 @@ object ScaleRehearsal {
   private def wmhMain(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val planted = math.max(n / 100, 1L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val vocab = math.max(4000L, n / 50)
     val boiler = "terms conditions apply all rights reserved contact support"
     def words(idCol: String, from: Int) = expr(
@@ -181,15 +170,7 @@ object ScaleRehearsal {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val nProbes = if (args.length > 1) args(1).toInt else 512
     val k = 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val vec = expr(
       """transform(sequence(0, 63), j -> cast(
         |  (cast(pmod(hash(cast(id % 1000 as int), j), 2001) as double) - 1000.0) / 1000.0
@@ -250,15 +231,7 @@ object ScaleRehearsal {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val probesPerSide = 256
     val k = 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // 8-member clusters (id mod n/8): a node's exact top-k IS its 7
     // cluster mates, separated from every other cluster by the ±1.0
     // base components vs ±0.1 noise — so exact-top-k recall is a
@@ -366,15 +339,7 @@ object ScaleRehearsal {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val probesPerSide = 256
     val k = 4
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // same 8-member-cluster geometry as insertMain — a 10% spread
     // purge (id % 10) removes ~0.8 members per cluster, so most
     // clusters orphan and the repair has real re-linking to do
@@ -492,15 +457,7 @@ object ScaleRehearsal {
     val n = if (args.nonEmpty) args(0).toLong else 200000L
     val nProbes = if (args.length > 1) args(1).toInt else 512
     val k = 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     // 2-D latent grid → 64 sinusoidal features: v[j] = cos(a_j·u1 +
     // b_j·u2 + c_j), low integer frequencies so latent neighbors are
     // cosine neighbors (executor-generated, deterministic)
@@ -562,15 +519,7 @@ object ScaleRehearsal {
     // probe sets favor brute force, large ones the index
     val nProbes = if (args.length > 1) args(1).toInt else 32
     val k = 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
 
     // clustered geometry: centroid (id mod 1000) ± 0.1 noise per dim
     val vec = expr(
@@ -679,15 +628,7 @@ object ScaleRehearsal {
   private def selectMain(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 500000L
     val k = 5
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val vec = expr(
       """transform(sequence(0, 63), j -> cast(
         |  (cast(pmod(hash(cast(id % 1000 as int), j), 2001) as double) - 1000.0) / 1000.0
@@ -730,15 +671,7 @@ object ScaleRehearsal {
   private def bloomMain(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val evalN = math.max(n / 1000, 10L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val vocab = math.max(4000L, n / 50)
     def words(idCol: String, from: Int) = expr(
       s"transform(sequence($from, 30), j -> concat('w', pmod(hash($idCol, j), $vocab)))")
@@ -832,15 +765,7 @@ object ScaleRehearsal {
   private def pplMain(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toLong else 2000000L
     val saladEvery = 100L // 1% planted salad
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     val prose = expr(
       "concat_ws(' ', transform(sequence(1, 30), j -> concat('w', pmod(hash(id) + j, 500))))")
     val salad = expr(
@@ -905,15 +830,7 @@ object ScaleRehearsal {
     import graft.sources.TxTable
     val n = if (args.nonEmpty) args(0).toLong else 20000000L
     val files = 64
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpus)
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)
     }
@@ -1142,16 +1059,10 @@ object ScaleRehearsal {
     import graft.sources.TxTable
     val phase = args(0)
     val base = args(1)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.catalogImplementation", "hive")
-      .config("spark.sql.warehouse.dir", s"$base/warehouse")
-      .config("javax.jdo.option.ConnectionURL",
-        s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(4,
+      "spark.sql.catalogImplementation" -> "hive",
+      "spark.sql.warehouse.dir" -> s"$base/warehouse",
+      "javax.jdo.option.ConnectionURL" -> s"jdbc:derby:;databaseName=$base/metastore_db;create=true")
     phase match {
       case "write" =>
         val t = s"$base/tx_table"

@@ -1,5 +1,7 @@
 package graft.util
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
 
@@ -21,17 +23,33 @@ object Local {
     else math.min(threshold / math.max(1, df.schema.defaultSize), Int.MaxValue - 1L)
   }
 
-  /** Every row of `df` when it holds at most [[maxRows]] of them, read
-    * by one `limit(maxRows + 1).collect()`; None when it holds more or
-    * the threshold is disabled. Meant for a frame the caller has
-    * already materialized (cached or checkpointed): on None the caller
-    * runs its distributed path over that same frame, so the input
-    * upstream of it is never read twice.
+  /** Every row of `df` when it holds at most [[maxRows]] of them; None
+    * when it holds more or the threshold is disabled. One job reads
+    * every partition in parallel: each task counts its rows and returns
+    * them when they are within its even share of the budget. Spark's
+    * `limit(n).collect()` is one job per batch of partitions, and a
+    * coalesce to one partition would compute an unpinned frame in a
+    * single task. The driver holds at most about [[maxRows]] rows at
+    * once: a frame that fits with one partition over its share is read
+    * again whole, a second job only in that skewed case. Meant for a
+    * frame the caller has already materialized or pinned (cached or
+    * checkpointed): on None the caller runs its distributed path over
+    * that same frame, so the input upstream of it is never read twice.
     */
   def collectIfFits(df: DataFrame): Option[Array[Row]] = {
     val max = maxRows(df)
-    if (max <= 0) None
-    else Some(df.limit(max.toInt + 1).collect()).filter(_.length <= max)
+    if (max <= 0) return None
+    val rdd = df.rdd
+    val share = max / math.max(1, rdd.getNumPartitions) + 1
+    val parts = rdd.mapPartitions { rows =>
+      val kept = ArrayBuffer.empty[Row]
+      var n = 0L
+      rows.foreach { r => if (n < share) kept += r; n += 1 }
+      Iterator((n, if (n <= share) kept.toArray else Array.empty[Row]))
+    }.collect()
+    if (parts.map(_._1).sum > max) None
+    else if (parts.forall { case (n, kept) => kept.length == n }) Some(parts.flatMap(_._2))
+    else Some(df.collect())
   }
 
   /** A collected edge list, its nodes indexed in first-seen order:

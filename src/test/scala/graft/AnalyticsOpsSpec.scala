@@ -877,6 +877,24 @@ class AnalyticsOpsSpec extends SparkSpecBase {
     // each distributed round is a join + a sum shuffle (Spark stages);
     // rounds over a collected edge list run none
     assert(jobs(1) == jobs(5))
+    // the gate reads a multi-partition checkpoint in one job
+    val pinned = edges.repartition(4).localCheckpoint()
+    val (rows, reads) = jobsOf(graft.util.Local.collectIfFits(pinned))
+    assert(reads == 1)
+    assert(rows.map(_.length.toLong).contains(pinned.count()))
+  }
+
+  test("Local.collectIfFits: a skewed frame that fits is read whole, one row past the budget is None") {
+    withConf("spark.sql.autoBroadcastJoinThreshold", "1600") { // 100 (u, v) rows
+      def oneOfFour(n: Int) = spark.range(n).select(col("id").as("u"), col("id").as("v"))
+        .repartition(4, lit(0)).localCheckpoint()
+      val (skewed, budget, over) = (oneOfFour(60), oneOfFour(100), oneOfFour(101))
+      // 60 rows in one partition exceed its 26-row share: a second, whole read
+      val (rows, reads) = jobsOf(graft.util.Local.collectIfFits(skewed))
+      assert(rows.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 60L) && reads == 2)
+      assert(graft.util.Local.collectIfFits(budget).map(_.length).contains(100))
+      assert(graft.util.Local.collectIfFits(over).isEmpty)
+    }
   }
 
   test("khopOn counts 1-hop and 2-hop reach on a path graph") {

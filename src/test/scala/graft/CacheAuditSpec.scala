@@ -66,6 +66,24 @@ class CacheAuditSpec extends SparkSpecBase {
       s"$allowed: $offenders")
   }
 
+  test("static audit: one session builder and one SparkListener in src") {
+    // every main and spec plans under the same session conf, and one
+    // listener measures a run; a hand-copied builder or a second tally
+    // drifts from them
+    def hits(root: String, found: String => Boolean): List[String] =
+      Files.walk(Paths.get(root)).iterator().asScala
+        .filter(_.toString.endsWith(".scala"))
+        .flatMap(p => Files.readAllLines(p).asScala.zipWithIndex
+          .collect { case (l, i) if found(l) => s"$p:${i + 1}" })
+        .toList
+    val builders = hits("src", _.contains("SparkSession" + ".builder"))
+    assert(builders.nonEmpty && builders.forall(_.startsWith("src/main/scala/graft/util/Session.scala:")),
+      s"session builders outside util/Session.scala: $builders")
+    val listeners = hits("src/main", l => l.contains("extends SparkListener") || l.contains("new SparkListener"))
+    assert(listeners.size == 1 && listeners.head.startsWith("src/main/scala/graft/util/RunMetrics.scala:"),
+      s"SparkListener subclasses in src/main other than util/RunMetrics.scala: $listeners")
+  }
+
   test("dynamic audit: cache-using query sweep + drain leaves zero persisted RDDs") {
     // queries whose operators register caches (the leak class r7 found)
     val cacheUsers = Seq(
