@@ -55,34 +55,19 @@ case class HashCapAgg(child: Expression, k: Int,
   override def update(set: java.util.TreeSet[java.lang.Long], input: InternalRow)
       : java.util.TreeSet[java.lang.Long] = {
     val v = child.eval(input)
-    if (v != null) add(set, v.asInstanceOf[Number].longValue)
+    if (v != null) HashCapAgg.add(set, v.asInstanceOf[Number].longValue, k)
     set
   }
 
   override def merge(a: java.util.TreeSet[java.lang.Long],
       b: java.util.TreeSet[java.lang.Long]): java.util.TreeSet[java.lang.Long] = {
     val it = b.iterator()
-    while (it.hasNext) add(a, it.next())
+    while (it.hasNext) HashCapAgg.add(a, it.next(), k)
     a
   }
 
-  private def add(set: java.util.TreeSet[java.lang.Long], v: Long): Unit = {
-    if (set.size < k) { set.add(v); () }
-    else if (HashCapAgg.ByHashThenValue.compare(v, set.last()) < 0) {
-      // strictly smaller than the current k-th: evict it (equal means
-      // duplicate — TreeSet ordering is total on the value, so compare
-      // == 0 iff v is already present)
-      if (set.add(v)) { set.pollLast(); () }
-    }
-  }
-
-  override def eval(set: java.util.TreeSet[java.lang.Long]): Any = {
-    val out = new Array[Long](set.size)
-    val it = set.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    new GenericArrayData(out)
-  }
+  override def eval(set: java.util.TreeSet[java.lang.Long]): Any =
+    new GenericArrayData(HashCapAgg.values(set))
 
   override def serialize(set: java.util.TreeSet[java.lang.Long]): Array[Byte] = {
     val buf = ByteBuffer.allocate(4 + set.size * 8)
@@ -125,6 +110,36 @@ object HashCapAgg {
         if (c != 0) c else java.lang.Long.compare(a, b)
       }
     }
+
+  /** Admits `v` to the cap state `set` of at most `k` values. */
+  def add(set: java.util.TreeSet[java.lang.Long], v: Long, k: Int): Unit = {
+    if (set.size < k) { set.add(v); () }
+    else if (ByHashThenValue.compare(v, set.last()) < 0) {
+      // strictly smaller than the current k-th: evict it (equal means
+      // duplicate — TreeSet ordering is total on the value, so compare
+      // == 0 iff v is already present)
+      if (set.add(v)) { set.pollLast(); () }
+    }
+  }
+
+  private def values(set: java.util.TreeSet[java.lang.Long]): Array[Long] = {
+    val out = new Array[Long](set.size)
+    val it = set.iterator()
+    var i = 0
+    while (it.hasNext) { out(i) = it.next(); i += 1 }
+    out
+  }
+
+  /** The aggregate's result over `xs` outside a plan: the `k` smallest
+    * distinct values under [[ByHashThenValue]], in that order. Driver-side
+    * solvers cap with this, so they keep exactly the aggregate's members.
+    */
+  def cap(xs: Iterator[Long], k: Int): Array[Long] = {
+    require(k > 0, "graft_hashcap requires k > 0")
+    val set = new java.util.TreeSet[java.lang.Long](ByHashThenValue)
+    xs.foreach(add(set, _, k))
+    values(set)
+  }
 
   /** `df` with the columns `cols` (ids drawn from a cap array) cast
     * back to the capped input's id type `t`; BIGINT ids pass through

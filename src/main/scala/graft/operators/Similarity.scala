@@ -1,8 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import graft.util.{Cols, Tables}
 
 /** Embedding similarity search (SURVEY.md §2.C) over `embeddings`
@@ -1765,8 +1767,8 @@ object Similarity {
 
   /** embed_pca testdata binding: in-query deterministic training, top
     * [[PcaK]] axes, all vectors projected. Oracle = [[pcaSql]] with the
-    * PINNED sf0.01 axes (PcaAxesPinned, regenerated by
-    * graft.GenPcaAxes, drift-gated by OpqSpec).
+    * PINNED axes of the corpus it reads (PcaAxesPinned, one per testdata
+    * corpus, regenerated by graft.GenPcaAxes, drift-gated by OpqSpec).
     */
   def pca(spark: SparkSession, sfDir: String): DataFrame = {
     val vecs = Tables.embeddings(spark, sfDir)
@@ -1775,17 +1777,40 @@ object Similarity {
     pcaProjectOn(vecs, axes).transform(graft.util.Cols.verifySort(_, col("vec_id")))
   }
 
-  def pcaSql: String = {
-    val rows = PcaAxesPinned.Sf01.zipWithIndex.map { case (row, o) =>
-      s"(${o + 1}, [${row.map(f =>
-        new java.math.BigDecimal(f.toDouble).toPlainString).mkString(", ")}])"
+  /** The oracle rows `(fp, d, [floats])` of per-corpus pinned matrices
+    * (row d of corpus fp's matrix). Every float32 is exactly a finite
+    * decimal AND exactly a double, so emitting the EXACT expansion
+    * (BigDecimal of the widened value) makes DuckDB's decimal->double
+    * parse lossless -- the shortest float repr instead would
+    * double-round (decimal->double->float), which measured 1-ulp
+    * rotated-coordinate divergences.
+    */
+  private def pinnedRowsSql(byCorpus: Seq[(Long, Array[Array[Float]])]): String =
+    byCorpus.flatMap { case (fp, m) =>
+      m.zipWithIndex.map { case (row, o) =>
+        s"($fp, ${o + 1}, [${row.map(f =>
+          new java.math.BigDecimal(f.toDouble).toPlainString).mkString(", ")}])"
+      }
     }.mkString(",\n|  ")
+
+  /** The `corpus` CTE of the pinned-matrix oracles: the fingerprint
+    * their pins are keyed by, the fixed-point sum of the training sample
+    * (vec_id < 2048) as exact BIGINT.
+    */
+  private def corpusSql: String =
+    s"""corpus AS (SELECT CAST(sum(CAST(floor((CAST(x AS DOUBLE) + 1.0) * $KmQ.0 + 0.5)
+       |  AS BIGINT)) AS BIGINT) AS fp
+       |  FROM (SELECT unnest(embedding) AS x FROM embeddings WHERE vec_id < 2048))""".stripMargin
+
+  def pcaSql: String = {
+    val rows = pinnedRowsSql(PcaAxesPinned.ByCorpus)
     val pcs = (1 to PcaK).map(j =>
       s"CAST(sum(qp) FILTER (d = $j) AS BIGINT) AS pc$j").mkString(",\n| ")
-    s"""WITH rot(d, rw) AS (VALUES $rows),
+    s"""WITH rot(fp, d, rw) AS (VALUES $rows),
+       |$corpusSql,
        |p AS (SELECT vec_id, d,
        |  CAST(floor((${dotSql("embedding", "rw")} + 8.0) * 65536.0 + 0.5) AS BIGINT) AS qp
-       |  FROM embeddings, rot)
+       |  FROM embeddings, rot WHERE rot.fp = (SELECT fp FROM corpus))
        |SELECT vec_id,
        | $pcs
        |FROM p GROUP BY vec_id ORDER BY vec_id""".stripMargin
@@ -1919,9 +1944,10 @@ object Similarity {
        |  CAST(floor((CAST(embedding[d] AS DOUBLE) + 1.0) * $KmQ.0 + 0.5) AS BIGINT) AS qx
        |  FROM embeddings, generate_series(1, 64) AS g(d))""".stripMargin)
 
-  /** embed_opq value oracle: the PINNED sf0.01 rotation
-    * ([[OpqRotationPinned]], trained deterministically — exact integer
-    * moments + fixed-order driver Jacobi, regenerated by
+  /** embed_opq value oracle: the PINNED rotation of the corpus it reads
+    * ([[OpqRotationPinned]], one per testdata corpus, selected by the
+    * fingerprint of the training sample; trained deterministically —
+    * exact integer moments + fixed-order driver Jacobi, regenerated by
     * graft.GenOpqRotation, drift-gated by OpqSpec) applied in DuckDB
     * with the identical IEEE operation sequence as the Spark side:
     * rotated[d] = the [[dotSql]] double fold of the float vector
@@ -1931,19 +1957,12 @@ object Similarity {
     * IEEE fold, so the driver hash-matches end to end.
     */
   def opqSql: String = {
-    // every float32 is exactly a finite decimal AND exactly a double,
-    // so emitting the EXACT expansion (BigDecimal of the widened
-    // value) makes DuckDB's decimal->double parse lossless -- the
-    // shortest float repr instead would double-round (decimal->double
-    // ->float), which measured 1-ulp rotated-coordinate divergences
-    val rows = OpqRotationPinned.Sf01.zipWithIndex.map { case (row, o) =>
-      s"(${o + 1}, [${row.map(f =>
-        new java.math.BigDecimal(f.toDouble).toPlainString).mkString(", ")}])"
-    }.mkString(",\n|  ")
+    val rows = pinnedRowsSql(OpqRotationPinned.ByCorpus)
     pqPipelineSql(
-      s"""rot(d, rw) AS (VALUES $rows),
+      s"""rot(fp, d, rw) AS (VALUES $rows),
+         |$corpusSql,
          |rv AS (SELECT vec_id, d, CAST(${dotSql("embedding", "rw")} AS REAL) AS rx
-         |       FROM embeddings, rot),
+         |       FROM embeddings, rot WHERE rot.fp = (SELECT fp FROM corpus)),
          |v AS (SELECT vec_id AS id, (d - 1) // $PqSubDim AS sub, d,
          |  CAST(floor((CAST(rx AS DOUBLE) + 1.0) * $KmQ.0 + 0.5) AS BIGINT) AS qx FROM rv)""".stripMargin)
   }
@@ -2344,6 +2363,19 @@ object Similarity {
     * bound on exactly those stages. Per-round localCheckpoint
     * (lineage truncation) unchanged. Output: (u, nbr, cos_sim, rk) —
     * k rows per node, result-identical to the window/self-join form.
+    *
+    * Driver tier: when the pinned (vec_id, embedding) frame fits Spark's
+    * broadcast threshold in bytes ([[graft.util.Local.vectorsIfFits]]),
+    * it is collected once and the whole build — LSH seeds, far seeds,
+    * every round's cap → candidates → top-k — runs in the driver JVM
+    * ([[knnGraphLocal]], through the same kernels) and comes back as a
+    * LocalRelation: 3 jobs instead of 25 for 2000 vectors at sf0.1. The
+    * distributed rounds run otherwise, over the same cached frame, and
+    * for inputs whose semantics are Spark's own: null ids or
+    * embeddings, duplicate vec_ids, a zero-norm vector (Spark's divide
+    * then decides), or ids within the far steps of Long.MaxValue.
+    * `spark.sql.autoBroadcastJoinThreshold=-1` selects the distributed
+    * rounds for every input.
     */
   def knnGraphOn(vectors: DataFrame, k: Int = KnnGraphK,
       rounds: Int = KnnGraphRounds, cap: Int = KnnGraphCap,
@@ -2356,6 +2388,31 @@ object Similarity {
     // recall 0.000; planesFor's 10 planes restore it)
     val v = vectors.select(col("vec_id"), col("embedding"))
       .transform(graft.util.CacheScope.cached) // joined 2× per round + init
+    val g = graft.util.Local.vectorsIfFits(v)
+      .filter(_.ids.forall(_ <= Long.MaxValue - KnnGraphSteps.max)) // far seeds can't overflow
+      .map { vs =>
+        val id = v.schema("vec_id").nullable
+        // one partition, the shape AQE gives the distributed rounds' small
+        // output: a local scan spreads its rows over every core, and each
+        // downstream stage of a consumer (beam, HNSW, insert/delete) then
+        // pays a task per slice (measured +13% tasks on sim_graph_beam)
+        v.sparkSession.createDataFrame(
+          java.util.Arrays.asList(knnGraphLocal(vs, k, rounds, cap, initPlanes): _*),
+          StructType(Seq(StructField("u", LongType, id), StructField("nbr", LongType, id),
+            StructField("cos", DoubleType), StructField("rk", IntegerType, nullable = false))))
+          .coalesce(1)
+      }
+      .getOrElse(knnGraphDistributed(v, k, rounds, cap, initPlanes))
+    g.select(col("u"), col("nbr"), Cols.pround(col("cos"), 6).as("cos_sim"),
+      col("rk"))
+  }
+
+  /** [[knnGraphOn]]'s NN-Descent as Spark stages over the pinned
+    * (vec_id, embedding) frame `v`: (u, nbr, cos, rk), the last round
+    * checkpointed.
+    */
+  private def knnGraphDistributed(v: DataFrame, k: Int, rounds: Int, cap: Int,
+      initPlanes: Int): DataFrame = {
     val n = v.count()
     val uSide = v.select(col("vec_id").as("u"), col("embedding").as("uv"))
     val nSide = v.select(col("vec_id").as("nbr"), col("embedding").as("nv"))
@@ -2401,8 +2458,87 @@ object Similarity {
       g = scoreTopK(g.select(col("u"), col("nbr")).unionAll(cand))
         .localCheckpoint(true)
     }
-    g.select(col("u"), col("nbr"), Cols.pround(col("cos"), 6).as("cos_sim"),
-      col("rk"))
+    g
+  }
+
+  /** [[knnGraphOn]]'s NN-Descent over collected vectors, step for step
+    * with [[knnGraphDistributed]] and through the same kernels: buckets
+    * by [[graft.functions.SrpBucket]], caps by
+    * [[graft.functions.HashCapAgg.cap]], cosines by the
+    * [[graft.functions.FloatVecDot]] fold as `d / sqrt(na · nb)`, and the
+    * rank window's order (cos descending under Spark's double order —
+    * NaN first, −0.0 = 0.0 — then nbr). A far seed whose nbr is no
+    * vec_id is dropped, as the inner join drops it. (u, nbr, cos, rk)
+    * rows, ids as BIGINT.
+    */
+  private def knnGraphLocal(vs: graft.util.Local.Vectors, k: Int, rounds: Int, cap: Int,
+      initPlanes: Int): Seq[Row] = {
+    import scala.collection.mutable.{ArrayBuilder, LongMap}
+    val n = vs.size
+    val index = LongMap.empty[Int]
+    vs.ids.indices.foreach(i => index(vs.ids(i)) = i)
+    // each node's candidate nbrs, duplicates included (scoring dedups)
+    def fresh() = Array.fill(n)(new ArrayBuilder.ofInt)
+    def pairsWithin(ids: ArrayBuilder.ofLong, c: Int, into: Array[ArrayBuilder.ofInt]): Unit = {
+      val m = graft.functions.HashCapAgg.cap(ids.result().iterator, c).map(index)
+      for (a <- m; b <- m if a != b) into(a) += b
+    }
+    def before(c1: Double, x1: Int, c2: Double, x2: Int): Boolean = {
+      val c = SQLOrderingUtil.compareDoubles(c1, c2)
+      c > 0 || (c == 0 && vs.ids(x1) < vs.ids(x2))
+    }
+    // per node, its distinct candidates' top k: (nbr indices, cosines)
+    def topK(cands: Array[ArrayBuilder.ofInt]): Array[(Array[Int], Array[Double])] =
+      Array.tabulate(n) { u =>
+        val c = cands(u).result()
+        java.util.Arrays.sort(c)
+        val (nb, cs) = (new Array[Int](k max 0), new Array[Double](k max 0))
+        var m = 0
+        c.indices.filter(j => j == 0 || c(j) != c(j - 1)).foreach { j =>
+          val x = c(j)
+          val s = graft.functions.FloatVecDot.dot(vs.vecs(u), vs.vecs(x)) /
+            math.sqrt(vs.sq(u) * vs.sq(x))
+          var p = m
+          while (p > 0 && before(s, x, cs(p - 1), nb(p - 1))) p -= 1
+          if (p < k) {
+            m = math.min(m + 1, k)
+            System.arraycopy(nb, p, nb, p + 1, m - 1 - p)
+            System.arraycopy(cs, p, cs, p + 1, m - 1 - p)
+            nb(p) = x
+            cs(p) = s
+          }
+        }
+        (nb.take(m), cs.take(m))
+      }
+    val seeds = fresh()
+    (0 until KnnGraphInitTables).foreach { t =>
+      val buckets = LongMap.empty[ArrayBuilder.ofLong]
+      (0 until n).foreach { i =>
+        buckets.getOrElseUpdate(graft.functions.SrpBucket.bucket(
+          vs.vecs(i), initPlanes, t * initPlanes), new ArrayBuilder.ofLong) += vs.ids(i)
+      }
+      buckets.values.foreach(pairsWithin(_, KnnGraphBucketCap, seeds))
+    }
+    (0 until n).foreach { i =>
+      KnnGraphSteps.take(k).foreach { s =>
+        val nbr = (vs.ids(i) + s) % n
+        if (nbr != vs.ids(i)) index.get(nbr).foreach(seeds(i) += _)
+      }
+    }
+    var top = topK(seeds)
+    (1 to rounds).foreach { _ =>
+      val und = Array.fill(n)(new ArrayBuilder.ofLong)
+      val next = fresh()
+      for (u <- 0 until n; x <- top(u)._1) {
+        und(u) += vs.ids(x)
+        und(x) += vs.ids(u)
+        next(u) += x
+      }
+      und.foreach(pairsWithin(_, cap, next))
+      top = topK(next)
+    }
+    for (u <- 0 until n; r <- top(u)._1.indices)
+      yield Row(vs.ids(u), vs.ids(top(u)._1(r)), top(u)._2(r), r + 1)
   }
 
   /** sim_knn_graph testdata binding. */

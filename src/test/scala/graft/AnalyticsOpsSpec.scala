@@ -885,15 +885,31 @@ class AnalyticsOpsSpec extends SparkSpecBase {
   }
 
   test("Local.collectIfFits: a skewed frame that fits is read whole, one row past the budget is None") {
-    withConf("spark.sql.autoBroadcastJoinThreshold", "1600") { // 100 (u, v) rows
+    // 100 (u, v) rows: 24-byte UnsafeRows (null bits + two longs)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "2400") {
       def oneOfFour(n: Int) = spark.range(n).select(col("id").as("u"), col("id").as("v"))
         .repartition(4, lit(0)).localCheckpoint()
       val (skewed, budget, over) = (oneOfFour(60), oneOfFour(100), oneOfFour(101))
-      // 60 rows in one partition exceed its 26-row share: a second, whole read
+      // 60 rows in one partition exceed its 600-byte share: a second, whole read
       val (rows, reads) = jobsOf(graft.util.Local.collectIfFits(skewed))
       assert(rows.map(_.map(_.getLong(0)).sorted.toSeq).contains(0L until 60L) && reads == 2)
       assert(graft.util.Local.collectIfFits(budget).map(_.length).contains(100))
       assert(graft.util.Local.collectIfFits(over).isEmpty)
+    }
+  }
+
+  test("Local.collectIfFits budgets bytes: 64-float vectors the row rule admitted are None") {
+    // 200 (id, array<float>[64]) rows: Spark's defaultSize counts 12
+    // bytes a row (2400 in all), the UnsafeRows hold 296 each (59200)
+    val vectors = spark.range(200)
+      .select(col("id"), array((0 until 64).map(d => (col("id") + d).cast("float")): _*).as("v"))
+      .localCheckpoint()
+    assert(200L * vectors.schema.defaultSize <= 10000L)
+    withConf("spark.sql.autoBroadcastJoinThreshold", "10000") {
+      assert(graft.util.Local.collectIfFits(vectors).isEmpty)
+    }
+    withConf("spark.sql.autoBroadcastJoinThreshold", "59200") {
+      assert(graft.util.Local.collectIfFits(vectors).map(_.length).contains(200))
     }
   }
 

@@ -91,6 +91,26 @@ class OpqSpec extends SparkSpecBase {
       s"rotation drifted at ${diffs.take(3)} — regenerate OpqRotationPinned via graft.GenOpqRotation")
   }
 
+  test("embed_opq's and embed_pca's oracles replay what Spark trains on each testdata corpus") {
+    // each oracle selects its pinned matrix by the corpus fingerprint;
+    // one that holds only another corpus's matrix mismatches there
+    // (sf0.001 did, replaying the sf0.01 pins)
+    GenOpqRotation.Corpora.foreach { case (_, dir) =>
+      val e = graft.util.Tables.embeddings(spark, dir)
+      val fp = GenOpqRotation.corpusFp(e)
+      val v = e.select(col("vec_id").as("id"), col("embedding").as("vec"))
+      Seq(("embed_opq", Similarity.opqRotationOn(v), Similarity.opqSql),
+          ("embed_pca", Similarity.pcaEigenOn(v, 2048)._2.take(Similarity.PcaK), Similarity.pcaSql))
+        .foreach { case (q, fresh, sql) =>
+          val missing = fresh.indices.filterNot { i =>
+            val row = fresh(i).map(x => new java.math.BigDecimal(x.toFloat.toDouble).toPlainString)
+            sql.contains(row.mkString(s"($fp, ${i + 1}, [", ", ", "])"))
+          }
+          assert(missing.isEmpty, s"$q, $dir (fingerprint $fp): rows ${missing.take(3)} not in the oracle")
+        }
+    }
+  }
+
   test("pinned PCA axes match a fresh sf0.01 training run (embed_pca oracle drift gate)") {
     val fresh = Similarity.pcaEigenOn(
       graft.util.Tables.embeddings(spark, "/root/testdata/sf0.01")

@@ -321,4 +321,42 @@ class SimilaritySpec extends SparkSpecBase {
     assert(pq.map(_.getAs[Long]("vec_id")).sorted.toSeq == (-3L to 40L))
     spark.catalog.clearCache()
   }
+
+  test("knnGraphOn: the driver and distributed paths return the same rows and schema") {
+    import spark.implicits._
+    val e = graft.util.Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
+    val head = e.filter(col("vec_id") < 60)
+    def both(label: String, vectors: org.apache.spark.sql.DataFrame, driver: Boolean): Unit = {
+      assert(graft.util.Local.vectorsIfFits(vectors).isDefined == driver, label)
+      // the build is eager (checkpointed rounds): an error surfaces in the call
+      val (local, dist) = onBothPaths(scala.util.Try {
+        val g = Similarity.knnGraphOn(vectors)
+        (g.schema, g.collect().map(_.toSeq).toSet)
+      }.toEither.left.map(_.getClass))
+      assert(local == dist, s"$label: driver $local vs distributed $dist")
+      spark.catalog.clearCache()
+    }
+    both("sf0.001", e, driver = true)
+    both("INT ids", e.select(col("vec_id").cast("int").as("vec_id"), col("embedding")), driver = true)
+    // sparse and negative ids: most far seeds name no vec_id and drop
+    both("sparse ids", head.select((col("vec_id") * 7 - 200).as("vec_id"), col("embedding")),
+      driver = true)
+    // exact copies: equal cosines, ranked on nbr
+    both("duplicated vectors", head.unionAll(
+      head.select((col("vec_id") + 1000).as("vec_id"), col("embedding"))), driver = true)
+    both("empty", e.filter(lit(false)), driver = true)
+    // Spark's divide by the zero norm fails the build (ANSI) on both paths
+    val zero = Seq((1000L, Array.fill(64)(0f))).toDF("vec_id", "embedding")
+    both("a zero vector", head.unionAll(zero), driver = false)
+    val nulled = Seq((1000L, null: Array[Float])).toDF("vec_id", "embedding")
+    both("a null embedding", head.unionAll(nulled), driver = false)
+  }
+
+  test("knnGraphOn on the driver: the job count does not grow with the round count") {
+    val e = graft.util.Tables.embeddings(spark, SfDir)
+    def jobs(rounds: Int): Int = jobsOf(Similarity.knnGraphOn(e, rounds = rounds).collect())._2
+    val (one, three) = (jobs(1), jobs(3))
+    assert(one == three && three <= 3, s"rounds=1: $one jobs, rounds=3: $three")
+    spark.catalog.clearCache()
+  }
 }

@@ -34,11 +34,24 @@ rows (deterministic for an unchanged plan), input bytes within 2%,
 and still-zero shuffle. Pins recorded before r11 lack the signal →
 no exemption, wall gate stays authoritative (fail-closed). A
 shuffle-byte delta beyond jitter disqualifies the exemption, and the
-separate bytes gate still fails on byte growth. Exit 1 on any
-non-noise regression or failed query.
+separate bytes gate still fails on byte growth.
+
+JOB-COUNT GATE: per query, the second run's Spark job count (the
+sidecar's `layers.jobs`) against the `jobs` pins in
+tools/bench_baseline.json. Wall time at sf0.1 tracks jobs × ~80 ms, and
+a job count is not host noise, so a query that runs more than
+JOBS_TOLERANCE jobs over its pin is a JOBS problem even when its wall
+time looks fine. Queries without a pin are not gated. Exit 1 on any
+non-noise regression, JOBS problem or failed query.
 """
 import json
 import sys
+
+# Jobs a query may run over its pin. Two full 32-core refreshes of one
+# tree differ by at most this many jobs per query (AQE re-plans shuffle
+# stages from runtime sizes); a plan change that adds a stage per round
+# of an iterative operator adds several.
+JOBS_TOLERANCE = 2
 
 
 def load_bench(path):
@@ -84,17 +97,19 @@ def main():
         sbase = json.load(open(tooldir + "/shuffle_baseline.json"))
     except FileNotFoundError:
         print("(no shuffle_baseline.json — bytes gate skipped)")
-    snew = bench.get("shuffle")
-    if snew is None:
+    def same_run(key):
+        if key in bench:
+            return bench[key]
         try:
             full = json.load(open(tooldir + "/bench_last.json"))
-            if abs(full.get("value", -1) - bench.get("value", -2)) < 1e-6:
-                snew = full.get("shuffle", {})
-            else:
-                print("(bench_last.json is a different run; shuffle gate skipped)")
         except FileNotFoundError:
-            print("(no bench_last.json sidecar — shuffle gate skipped)")
-    snew = snew or {}
+            print(f"(no bench_last.json sidecar — {key} gate skipped)")
+            return {}
+        if abs(full.get("value", -1) - bench.get("value", -2)) < 1e-6:
+            return full.get(key, {})
+        print(f"(bench_last.json is a different run; {key} gate skipped)")
+        return {}
+    snew = same_run("shuffle") or {}
 
     def shuffle_identical(name):
         # "Identical" = unchanged within 0.2% (or 4 KiB, whichever is
@@ -184,6 +199,15 @@ def main():
             bad.append(
                 f"SHUFFLE {name}: {nw/1e6:.1f} MB written vs baseline "
                 f"{bw/1e6:.1f} MB ({nw/max(bw,1):.1f}x) — plan regression?")
+    # Job-count gate over the run's layers (the line itself carries
+    # none, so they come from its sidecar).
+    layers = same_run("layers") or {}
+    jbase = base.get("jobs", {})
+    for name in sorted(set(jbase) & set(layers)):
+        pin, jobs = jbase[name], layers[name].get("jobs")
+        if jobs is not None and jobs > pin + JOBS_TOLERANCE:
+            bad.append(f"JOBS    {name}: {jobs} jobs vs pinned {pin} "
+                       f"(tolerance {JOBS_TOLERANCE})")
     noise_note = f" ({noise} wall flags adjudicated NOISE)" if noise else ""
     print(f"\n{len(nq)} queries, {len(bad)} problems{noise_note}")
     if bad:

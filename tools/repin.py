@@ -6,16 +6,18 @@ Usage: repin.py [bench_last.json]
 - tools/bench_baseline.json: per query, min(existing pin, fresh) —
   the baseline keeps the best-KNOWN time; new queries enter at their
   fresh measurement. Queries absent from the fresh run keep their pin
-  (a filtered SPARK_GRAFT_ONLY run must not evict the rest).
-  EXCEPTION: when a query's shuffle READ/WRITE bytes changed beyond
-  jitter (the plan changed), the wall pin RESETS to the fresh
-  measurement — min() would keep the old plan's pin forever while the
-  byte-identity NOISE adjudication exempts every future wall flag
-  against it, silently disabling the wall gate for that query.
+  (a filtered SPARK_GRAFT_ONLY run must not evict the rest). No wall
+  pin ever goes up, a changed plan's included: a loaded-host reading
+  would loosen the gate (q68_link_pred read 2.1x its quiet pin on one
+  refresh), and a plan that is really slower shows as a NOISE
+  adjudication on every later check rather than being absorbed.
 - tools/shuffle_baseline.json: fresh bytes WHOLESALE for measured
   queries (bytes track the current plan — keeping stale bytes would
   make the NOISE adjudication compare against a plan that no longer
   exists), existing entries kept for unmeasured ones.
+- the `jobs` map of tools/bench_baseline.json: each measured query's
+  second-run job count (the sidecar's `layers.jobs`) WHOLESALE, like
+  the bytes; benchcheck's job gate compares against it.
 
 Prints every pin that moved. Refuses a fresh run with failures.
 """
@@ -33,29 +35,10 @@ def main():
         sb = json.load(open(tooldir + "/shuffle_baseline.json"))
     except FileNotFoundError:
         sb = {}
-    def close(x, y):
-        # same jitter tolerance as benchcheck's NOISE adjudication
-        return abs(x - y) <= max(4096, 0.002 * max(x, y))
-
-    def plan_changed(name):
-        old, new = sb.get(name), fresh.get("shuffle", {}).get(name)
-        if old is None or new is None:
-            return False
-        return not (close(old["read"], new["read"])
-                    and close(old["write"], new["write"]))
-
     moved = 0
     for name, t in fresh["queries"].items():
         old = bq["queries"].get(name)
-        if old is None:
-            new = t
-        elif plan_changed(name):
-            # accepted plan change: the old plan's pin is meaningless and
-            # min() would freeze it forever — reset to the new reality
-            print(f"pin {name}: plan changed (shuffle bytes moved) — reset")
-            new = t
-        else:
-            new = min(old, t)
+        new = t if old is None else min(old, t)
         if old is None or abs(new - old) > 1e-9:
             print(f"pin {name}: {old if old is not None else '(new)'} -> {new:.3f}")
             moved += 1
@@ -64,6 +47,12 @@ def main():
         if sb.get(name) != s:
             moved += 1
         sb[name] = s
+    jobs = bq.setdefault("jobs", {})
+    for name, layer in fresh.get("layers", {}).items():
+        if jobs.get(name) != layer["jobs"]:
+            print(f"jobs {name}: {jobs.get(name, '(new)')} -> {layer['jobs']}")
+            moved += 1
+        jobs[name] = layer["jobs"]
     json.dump(bq, open(tooldir + "/bench_baseline.json", "w"), indent=1, sort_keys=True)
     json.dump(sb, open(tooldir + "/shuffle_baseline.json", "w"), indent=1, sort_keys=True)
     print(f"{len(fresh['queries'])} measured, {moved} entries moved")
