@@ -8,18 +8,30 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructFiel
 import graft.util.{Cols, Tables}
 
 /** Embedding similarity search (SURVEY.md §2.C) over `embeddings`
-  * (64-dim float vectors).
+  * (64-dim float vectors), built as candidates → one rerank → one
+  * codebook trainer:
+  *
+  *  1. CANDIDATE GENERATORS produce slim (query, id) pairs: the
+  *     brute-force cross join (the correctness baseline, O(Q·N)), SRP
+  *     buckets ([[lshTopkOn]], multi-probe, and the multi-table
+  *     [[srpTables]] explode behind multi-table LSH, range search,
+  *     near-dup mining, hard negatives and the graph seeds), IVF cells,
+  *     PQ-ADC and Hamming codes, graph beams, and NN-Descent's
+  *     neighbor-of-neighbor proposals ([[proposals]]).
+  *  2. One EXACT RERANK scores the survivors by the FloatVecDot cosine
+  *     and keeps each partition's top k under the one rank policy
+  *     ([[topK]]: `row_number` over (score, then id ascending), ≤ k).
+  *     The NN-Descent build and its insert/delete maintenance share one
+  *     dedup-and-rank pass, [[scoreTopK]], and one bounded repair loop.
+  *  3. One fixed-point LLOYD TRAINER ([[Lloyd]]) learns every codebook:
+  *     k-means and RQ over cell key `d`, PQ/OPQ/PQ-ADC/IVF-PQ over
+  *     `(sub, d)`.
   *
   * Numeric portability: every dot product is an explicit left fold in
   * DOUBLE over index order — the same IEEE operation sequence in Spark
   * (`aggregate`/`zip_with`) and DuckDB (`list_reduce`/`list_transform`),
-  * so cosine values are bit-identical and fully value-oracled.
-  *
-  * Scale: brute-force is the correctness baseline (broadcast the query
-  * set, scan candidates once — embarrassingly parallel but O(Q·N)).
-  * The production path is [[lshAnn]]: sign-random-projection bucketing,
-  * candidates meet queries in a bucket equi-join — O(N) shuffle keyed by
-  * bucket, per-bucket top-k.
+  * so cosine values are bit-identical and fully value-oracled; codebooks
+  * are exact integer arithmetic.
   */
 object Similarity {
 
@@ -121,6 +133,28 @@ object Similarity {
       s"${signSql(s"($t * $p + i) * 64 + d - 1")})), (a, b) -> a + b) > 0 " +
       s"THEN (CAST(1 AS BIGINT) << i) ELSE CAST(0 AS BIGINT) END)), (a, b) -> a + b)"
 
+  /** The rank policy of every top-k here: `row_number` over `part`
+    * ordered by `score` (pass `col(s).desc` for similarities, the bare
+    * column for distances) then `id` ascending, as column `rk`, keeping
+    * rk ≤ k — the oracle's `ORDER BY score, id` window.
+    */
+  private def topK(df: DataFrame, part: String, score: Column, id: String, k: Int,
+      rk: String = "rk"): DataFrame =
+    df.withColumn(rk, row_number().over(Window.partitionBy(col(part)).orderBy(score, col(id))))
+      .filter(col(rk) <= k)
+
+  /** The multi-table SRP bucket explode: `df`'s `keep` columns plus one
+    * (t, b) row per table t, where table t buckets `vec` on planes
+    * t·p .. t·p+p−1 of the [[graft.functions.SrpBucket]] stream (the
+    * oracle's [[bucketTableSql]]).
+    */
+  private def srpTables(df: DataFrame, keep: Seq[String], vec: String, tables: Int,
+      p: Int): DataFrame =
+    df.withColumn("tb", explode(array((0 until tables).map(t =>
+        struct(lit(t).as("t"),
+          graft.functions.SrpBucket.column(col(vec), p, t * p).as("b"))): _*)))
+      .select(keep.map(col) ++ Seq(col("tb.t").as("t"), col("tb.b").as("b")): _*)
+
   /** Exact cosine top-k join: for each row of `queries` (`q_id`, `qv`)
     * the k highest-cosine rows of `candidates` (`c_id`, `cv`).
     * The query set is broadcast; the candidate scan is a single
@@ -128,25 +162,27 @@ object Similarity {
     * [[lshTopkOn]] when Q is large. Output: (q_id, c_id, cos_sim, rk).
     */
   def bruteforceTopkOn(queries: DataFrame, candidates: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    candidates.crossJoin(broadcast(queries))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topK(candidates.crossJoin(broadcast(queries))
+        .withColumn("cos", cosExpr("qv", "cv")), "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id"),
         Cols.pround(col("cos"), 6).as("cos_sim"),
         col("rk"))
   }
 
+  /** The testdata bindings' probe/candidate split of `embeddings` `e`:
+    * the vectors with vec_id < 8 probe as (q_id, qv), the rest are the
+    * candidates (c_id, cv).
+    */
+  private def probeSplit(e: DataFrame): (DataFrame, DataFrame) =
+    (e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
+      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")))
+
   /** sim_bruteforce_topk testdata binding: queries = vec_id < 8,
     * candidates = the rest, k = 5.
     */
   def bruteforceTopk(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    bruteforceTopkOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    bruteforceTopkOn(q, c, 5)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -186,11 +222,8 @@ object Similarity {
       } else queries.withColumn("bucket", home)
     val q = if (broadcastQueries) broadcast(q0) else q0
     val c = candidates.withColumn("bucket", bucketCol("cv", p))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    c.join(q, Seq("bucket"))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topK(c.join(q, Seq("bucket")).withColumn("cos", cosExpr("qv", "cv")),
+        "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id"), col("bucket"),
         Cols.pround(col("cos"), 6).as("cos_sim"),
         col("rk"))
@@ -200,11 +233,8 @@ object Similarity {
     * [[bruteforceTopk]], 8 planes, broadcast probes.
     */
   def lshAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    lshTopkOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5, nPlanes = 8, broadcastQueries = true)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    lshTopkOn(q, c, 5, nPlanes = 8, broadcastQueries = true)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -224,11 +254,8 @@ object Similarity {
     * (8 one-bit + 28 two-bit flips).
     */
   def lshMultiprobe(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    lshTopkOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5, nPlanes = 8, broadcastQueries = true, multiProbe = true)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    lshTopkOn(q, c, 5, nPlanes = 8, broadcastQueries = true, multiProbe = true)
       .select(col("q_id"), col("c_id"), col("cos_sim"), col("rk"))
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
@@ -255,6 +282,23 @@ object Similarity {
     */
   val IvfK = 128
 
+  /** The IVF bindings' cell table: the [[IvfK]] lowest-LCG-hash vectors
+    * of `e` as (cent_id, centv).
+    */
+  private def ivfCents(e: DataFrame): DataFrame =
+    e.orderBy(expr(s"(vec_id * 1000003 + 12289) % $P"), col("vec_id")).limit(IvfK)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
+
+  /** Flat exact cell assignment of `vectors` (c_id, cv) against the
+    * broadcast `cents` (cent_id, centv) as (c_id, cent_id): the argmax
+    * aggregation [[ivfRefineOn]] describes.
+    */
+  private def nearestCell(vectors: DataFrame, cents: DataFrame): DataFrame =
+    vectors.crossJoin(broadcast(cents))
+      .withColumn("ccos", cosExpr("cv", "centv"))
+      .groupBy(col("c_id"))
+      .agg(max_by(col("cent_id"), struct(col("ccos"), (-col("cent_id")).as("nid"))).as("cent_id"))
+
   /** Multi-table LSH ANN top-k: L independent SRP hash tables (table t
     * = planes t·p .. t·p+p−1), candidates meet queries in ANY table's
     * bucket, per-query top-k by true cosine over the deduped union.
@@ -274,33 +318,33 @@ object Similarity {
       tables: Int = 16, planesPerTable: Int = AutoPlanes,
       broadcastQueries: Boolean = false): DataFrame = {
     val p = resolvePlanes(planesPerTable, candidates)
-    def buckets(vecCol: String): Column = explode(array((0 until tables).map(t =>
-      struct(lit(t).as("t"),
-        graft.functions.SrpBucket.column(col(vecCol), p, t * p).as("b"))): _*))
-    val qb = queries.withColumn("tb", buckets("qv"))
-      .select(col("q_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val cb = candidates.withColumn("tb", buckets("cv"))
-      .select(col("c_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val cand = cb.join(if (broadcastQueries) broadcast(qb) else qb, Seq("t", "b"))
+    topK(multiTableScored(queries, candidates, tables, p, broadcastQueries),
+        "q_id", col("cos").desc, "c_id", k)
+      .select(col("q_id"), col("c_id"), Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
+  }
+
+  /** The multi-table LSH candidate generator behind [[multiTableTopkOn]]
+    * and [[rangeSearchOn]]: (q_id, c_id) pairs sharing ANY table's
+    * bucket, deduped on the slim ids, then rejoined to both vectors
+    * with their exact cosine `cos`.
+    */
+  private def multiTableScored(queries: DataFrame, candidates: DataFrame, tables: Int,
+      p: Int, broadcastQueries: Boolean): DataFrame = {
+    def q(df: DataFrame): DataFrame = if (broadcastQueries) broadcast(df) else df
+    srpTables(candidates, Seq("c_id"), "cv", tables, p)
+      .join(q(srpTables(queries, Seq("q_id"), "qv", tables, p)), Seq("t", "b"))
       .select(col("q_id"), col("c_id")).distinct()
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    cand
-      .join(if (broadcastQueries) broadcast(queries) else queries, Seq("q_id"))
+      .join(q(queries), Seq("q_id"))
       .join(candidates, Seq("c_id"))
       .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= k)
-      .select(col("q_id"), col("c_id"), Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
   }
 
   /** sim_lsh_multitable testdata binding: same probe/candidate split as
     * [[lshAnn]], 16 tables × 4 planes, k = 5.
     */
   def lshMultitable(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    multiTableTopkOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5, planesPerTable = 4, broadcastQueries = true)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    multiTableTopkOn(q, c, 5, planesPerTable = 4, broadcastQueries = true)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -335,9 +379,7 @@ object Similarity {
     val e = Tables.embeddings(spark, sfDir)
     val cand = e.filter(col("vec_id") >= 8 && col("label") >= 5)
       .select(col("vec_id").as("c_id"), col("embedding").as("cv"), col("label"))
-    multiTableTopkOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      cand.select(col("c_id"), col("cv")),
+    multiTableTopkOn(probeSplit(e)._1, cand.select(col("c_id"), col("cv")),
       5, tables = 16, planesPerTable = 4, broadcastQueries = true)
       .join(cand.select(col("c_id"), col("label")), Seq("c_id"))
       .select(col("q_id"), col("c_id"), col("label"), col("cos_sim"), col("rk"))
@@ -389,11 +431,8 @@ object Similarity {
     * split, k = 5.
     */
   def recallEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    recallEvalOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    recallEvalOn(q, c, 5)
       .transform(graft.util.Cols.verifySort(_, col("q_id")))
   }
 
@@ -467,11 +506,8 @@ object Similarity {
     * split, k = 5.
     */
   def mrlEval(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    mrlEvalOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    mrlEvalOn(q, c, 5)
       .orderBy(col("dims"))
   }
 
@@ -532,11 +568,9 @@ object Similarity {
     val q0 = queries.withColumn("bucket",
       graft.functions.SrpBucket.column(col("qv"), p, 0, 128))
     val q = if (broadcastQueries) broadcast(q0) else q0
-    val w = Window.partitionBy(col("q_id")).orderBy(col("dot").desc, col("c_id"))
-    c.join(q, Seq("bucket"))
-      .withColumn("dot", graft.functions.FloatVecDot.column(col("qv"), col("cv")))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= k)
+    topK(c.join(q, Seq("bucket"))
+        .withColumn("dot", graft.functions.FloatVecDot.column(col("qv"), col("cv"))),
+        "q_id", col("dot").desc, "c_id", k)
       .select(col("q_id"), col("c_id"), Cols.pround(col("dot"), 6).as("dot"), col("rk"))
   }
 
@@ -544,11 +578,8 @@ object Similarity {
     * 8 planes, k = 5.
     */
   def mipsAnn(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    mipsAnnOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      5, nPlanes = 8, broadcastQueries = true)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    mipsAnnOn(q, c, 5, nPlanes = 8, broadcastQueries = true)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -580,27 +611,18 @@ object Similarity {
     */
   def ivfAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    val cents = e
-      .orderBy(expr(s"(vec_id * 1000003 + 12289) % $P"), col("vec_id")).limit(IvfK)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
+    val cents = ivfCents(e)
     val wAssign = Window.partitionBy(col("c_id")).orderBy(col("ccos").desc, col("cent_id"))
-    val assigned = e.filter(col("vec_id") >= 8)
-      .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
-      .crossJoin(broadcast(cents))
+    val (q, c) = probeSplit(e)
+    val assigned = c.crossJoin(broadcast(cents))
       .withColumn("ccos", cosExpr("cv", "centv"))
       .withColumn("ark", row_number().over(wAssign)).filter(col("ark") === 1)
       .select(col("c_id"), col("cv"), col("cent_id"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cent_id"))
-    val probes = e.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("q_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", cosExpr("qv", "centv"))
-      .withColumn("prk", row_number().over(wProbe)).filter(col("prk") <= 2)
+    val probes = topK(q.crossJoin(broadcast(cents))
+        .withColumn("qcos", cosExpr("qv", "centv")), "q_id", col("qcos").desc, "cent_id", 2, "prk")
       .select(col("q_id"), col("qv"), col("cent_id"))
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    assigned.join(broadcast(probes), Seq("cent_id"))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= 5)
+    topK(assigned.join(broadcast(probes), Seq("cent_id"))
+        .withColumn("cos", cosExpr("qv", "cv")), "q_id", col("cos").desc, "c_id", 5)
       .select(col("q_id"), col("c_id"), col("cent_id"),
         Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
@@ -705,12 +727,8 @@ object Similarity {
       k: Int, nProbe: Int = IvfRefineProbes, shortlist: Int = IvfRefineR): DataFrame = {
     // flat exact assignment — right when |cells| is broadcast-small;
     // at large nlist use ivfRefineAssigned with an ANN-built map
-    val assign = candidates
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", cosExpr("cv", "centv"))
-      .groupBy(col("c_id"))
-      .agg(max_by(col("cent_id"), struct(col("ccos"), (-col("cent_id")).as("nid"))).as("cent_id"))
-    ivfRefineAssigned(queries, candidates, cents, assign, k, nProbe, shortlist)
+    ivfRefineAssigned(queries, candidates, cents, nearestCell(candidates, cents), k, nProbe,
+      shortlist)
   }
 
   /** [[ivfRefineOn]] with a caller-supplied cell assignment
@@ -729,40 +747,32 @@ object Similarity {
     // inverted file: (cell, candidate id, codes) — no raw vectors
     val assigned = withQuantNorm(candidates.join(assign, Seq("c_id")), "cv", "qc")
       .select(col("c_id"), col("qc"), col("cent_id"))
-    val wProbe = Window.partitionBy(col("q_id")).orderBy(col("qcos").desc, col("cent_id"))
-    val probes = withQuantNorm(queries, "qv", "qq")
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", cosExpr("qv", "centv"))
-      .withColumn("prk", row_number().over(wProbe)).filter(col("prk") <= nProbe)
+    val probes = topK(withQuantNorm(queries, "qv", "qq")
+        .crossJoin(broadcast(cents))
+        .withColumn("qcos", cosExpr("qv", "centv")), "q_id", col("qcos").desc, "cent_id",
+        nProbe, "prk")
       .select(col("q_id"), col("qq"), col("cent_id"))
     // stage 1: integer-score every probed candidate, shortlist top R
-    val wShort = Window.partitionBy(col("q_id")).orderBy(col("iscore").desc, col("c_id"))
-    val short = assigned.join(broadcast(probes), Seq("cent_id"))
-      .withColumn("iscore",
-        graft.functions.FloatVecDot.column(col("qq"), col("qc")).cast("long"))
-      .withColumn("srk", row_number().over(wShort)).filter(col("srk") <= shortlist)
+    val short = topK(assigned.join(broadcast(probes), Seq("cent_id"))
+        .withColumn("iscore",
+          graft.functions.FloatVecDot.column(col("qq"), col("qc")).cast("long")),
+        "q_id", col("iscore").desc, "c_id", shortlist, "srk")
       .select(col("q_id"), col("c_id"), col("cent_id"), col("iscore"))
     // stage 2: exact cosine for the R-row shortlist only — full vectors
     // re-enter here, never in the cell scan
-    val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    short
-      .join(candidates, Seq("c_id"))
-      .join(broadcast(queries), Seq("q_id"))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= k)
+    topK(short
+        .join(candidates, Seq("c_id"))
+        .join(broadcast(queries), Seq("q_id"))
+        .withColumn("cos", cosExpr("qv", "cv")), "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id"), col("cent_id"), col("iscore"),
         Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
   }
 
   def ivfRefine(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    val cents = e
-      .orderBy(expr(s"(vec_id * 1000003 + 12289) % $P"), col("vec_id")).limit(IvfK)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
-    ivfRefineOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      cents, 5)
+    val (q, c) = probeSplit(e)
+    val cents = ivfCents(e)
+    ivfRefineOn(q, c, cents, 5)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -778,15 +788,9 @@ object Similarity {
     */
   def ivfHealth(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    val cents = e
-      .orderBy(expr(s"(vec_id * 1000003 + 12289) % $P"), col("vec_id")).limit(IvfK)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
-    val assign = e.select(col("vec_id").as("c_id"), col("embedding").as("cv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", cosExpr("cv", "centv"))
-      .groupBy(col("c_id"))
-      .agg(max_by(col("cent_id"), struct(col("ccos"), (-col("cent_id")).as("nid"))).as("cent_id"))
-    assign.groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
+    val cents = ivfCents(e)
+    nearestCell(e.select(col("vec_id").as("c_id"), col("embedding").as("cv")), cents)
+      .groupBy(col("cent_id")).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells_used"),
         sum(col("n")).as("n_vectors"),
         max(col("n")).as("max_cell"),
@@ -882,22 +886,9 @@ object Similarity {
       tables: Int = 16, planesPerTable: Int = AutoPlanes,
       broadcastQueries: Boolean = false): DataFrame = {
     val p = resolvePlanes(planesPerTable, candidates)
-    def buckets(vecCol: String): Column = explode(array((0 until tables).map(t =>
-      struct(lit(t).as("t"),
-        graft.functions.SrpBucket.column(col(vecCol), p, t * p).as("b"))): _*))
-    val qb = queries.withColumn("tb", buckets("qv"))
-      .select(col("q_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val cb = candidates.withColumn("tb", buckets("cv"))
-      .select(col("c_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val cand = cb.join(if (broadcastQueries) broadcast(qb) else qb, Seq("t", "b"))
-      .select(col("q_id"), col("c_id")).distinct()
-    val wq = Window.partitionBy(col("q_id"))
-    cand
-      .join(if (broadcastQueries) broadcast(queries) else queries, Seq("q_id"))
-      .join(candidates, Seq("c_id"))
-      .withColumn("cos", cosExpr("qv", "cv"))
+    multiTableScored(queries, candidates, tables, p, broadcastQueries)
       .filter(col("cos") >= threshold)
-      .withColumn("n_matches", count(lit(1)).over(wq))
+      .withColumn("n_matches", count(lit(1)).over(Window.partitionBy(col("q_id"))))
       .select(col("q_id"), col("c_id"), Cols.pround(col("cos"), 6).as("cos_sim"),
         col("n_matches"))
   }
@@ -906,11 +897,8 @@ object Similarity {
     * split, radius cos >= 0.3, pinned 4-plane tables (oracle parity).
     */
   def rangeSearch(spark: SparkSession, sfDir: String): DataFrame = {
-    val e = Tables.embeddings(spark, sfDir)
-    rangeSearchOn(
-      e.filter(col("vec_id") < 8).select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      e.filter(col("vec_id") >= 8).select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      0.3, planesPerTable = 4, broadcastQueries = true)
+    val (q, c) = probeSplit(Tables.embeddings(spark, sfDir))
+    rangeSearchOn(q, c, 0.3, planesPerTable = 4, broadcastQueries = true)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("c_id")))
   }
 
@@ -949,10 +937,7 @@ object Similarity {
   def cosineNearDupOn(vectors: DataFrame, threshold: Double,
       tables: Int = 16, planesPerTable: Int = AutoPlanes): DataFrame = {
     val p = resolvePlanes(planesPerTable, vectors)
-    val b = vectors.withColumn("tb", explode(array((0 until tables).map(t =>
-        struct(lit(t).as("t"),
-          graft.functions.SrpBucket.column(col("vec"), p, t * p).as("b"))): _*)))
-      .select(col("id"), col("tb.t").as("t"), col("tb.b").as("b"))
+    val b = srpTables(vectors, Seq("id"), "vec", tables, p)
     val cand = b.select(col("id").as("a_id"), col("t"), col("b"))
       .join(b.select(col("id").as("b_id"), col("t"), col("b")), Seq("t", "b"))
       .filter(col("a_id") < col("b_id"))
@@ -1296,6 +1281,123 @@ object Similarity {
   val KmIters = 3
   val KmQ = 1048576L // 2^20 quantization steps
 
+  /** s² mod P — the mixing round that turns a (monotone) LCG value
+    * into a rank-scattering hash; exact int64 (s < 2^31 ⇒ s² < 2^62).
+    */
+  private def pow2ModP(s: Column): Column = (s * s) % P
+
+  /** The one fixed-point Lloyd trainer behind every codebook here:
+    * k-means and RQ train over the exploded (id, d, qx) stream (`part`
+    * empty, cell key `d`), PQ over (id, sub, d, qx) (`part` = sub, cell
+    * key (sub, d)) — every subspace at once, the subspace riding as one
+    * more key column. `qx` must be NON-NEGATIVE (the truncating `div`
+    * in the centroid mean diverges from DuckDB's flooring `//` on
+    * negatives — callers shift into non-negative range).
+    *
+    * The codebook is CONSTANT size (k·d ≤ 16·64 rows, corpus-
+    * independent), so it lives on the DRIVER between rounds as
+    * (part…, cid, d, cq) rows — one collect job per round, and a
+    * LocalRelation broadcasts without a job. Assignment runs against the
+    * PIVOTED codebook (cell → [cq_0 .. cq_{k−1}]): one broadcast join at
+    * the stream's row count plus a k-column aggregate whose argmin is a
+    * single packed key dist²·16 + cid (dist² < 2⁴⁸, so the pack is
+    * exact; ties → lowest cid), instead of exploding to N·d·k (cid,
+    * dist) rows. An empty cluster is a null column: its packed term is
+    * null and `least` skips it, exactly like the oracle's absent cid.
+    */
+  private final class Lloyd(v: DataFrame, part: Seq[String], k: Int) {
+    require(k <= 16, "argmin packing reserves 4 bits for the centroid id")
+    private val cell = part :+ "d"
+    private val byVec = "id" +: part
+    private def int(c: String) = StructField(c, IntegerType, nullable = false)
+    private def local(rows: Seq[Row], schema: StructType): DataFrame =
+      v.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+    private def collect(df: DataFrame): Array[Row] =
+      df.select(part.map(c => col(c).cast("int")) ++ Seq(col("cid").cast("long"),
+        col("d").cast("int"), col("cq").cast("long")): _*).collect()
+
+    /** The codebook rows as a (part…, cid, d, cq) frame. */
+    def narrow(cents: Array[Row]): DataFrame =
+      local(cents.toSeq, StructType(part.map(int) ++ Seq(
+        StructField("cid", LongType, nullable = false), int("d"),
+        StructField("cq", LongType, nullable = false))))
+
+    /** The driver-side twin of groupBy(cell).pivot(cid).agg(first(cq)):
+      * one row per cell, column i = centroid i's coordinate, null for an
+      * empty cluster.
+      */
+    private def wide(cents: Array[Row]): DataFrame = {
+      val p = part.length // a row is (part…, cid, d, cq)
+      val byCell = cents.groupBy(r => part.indices.map(r.getInt) :+ r.getInt(p + 1)).toSeq
+      val rows = byCell.sortBy(_._1)(Ordering.Implicits.seqOrdering[IndexedSeq, Int]).map {
+        case (key, rs) =>
+          val arr = new Array[Any](p + 1 + k)
+          key.copyToArray(arr)
+          rs.foreach(r => arr(p + 1 + r.getLong(p).toInt) = r.getLong(p + 2))
+          Row.fromSeq(arr.toIndexedSeq)
+      }
+      local(rows, StructType(cell.map(int) ++
+        (0 until k).map(i => StructField(i.toString, LongType, nullable = true))))
+    }
+
+    /** Each vector's (per subspace) packed argmin `amin` = dist²·16 + cid. */
+    def assign(cents: Array[Row]): DataFrame = {
+      val sums = (0 until k).map { i =>
+        val diff = col("qx") - col(i.toLong.toString)
+        sum(diff * diff).as(s"s$i")
+      }
+      val packed = (0 until k).map(i => col(s"s$i") * lit(16L) + lit(i.toLong))
+      v.join(broadcast(wide(cents)), cell)
+        .groupBy(byVec.map(col): _*)
+        .agg(sums.head, sums.tail: _*)
+        .select(byVec.map(col) :+ least(packed: _*).as("amin"): _*)
+    }
+
+    /** `iters` rounds of assignment + truncating centroid means from the
+      * seeds: ids 0..k−1 as cids 0..k−1 (negative ids are no cid and
+      * seed nothing), or — `hashSeeds` — the k lowest SQUARED-LCG-hash
+      * ids, remapped to cid 0..k−1. The hash scatter matters when low
+      * ids correlate with a data pattern: RQ's residual stage measured
+      * ZERO stage-2 gain on a planted corpus whose ids 0..7 all carried
+      * identical residuals (8 coincident seeds → one effective
+      * centroid). The square-mod-P mixing round is load-bearing: a bare
+      * LCG is MONOTONE over small id ranges, so ordering by it
+      * reproduced id-order seeding exactly (the SrpBucket bit-consumer
+      * lesson applied to ranking). TakeOrdered top-k, never a
+      * corpus-wide window. Returns the final codebook rows.
+      */
+    def train(iters: Int, hashSeeds: Boolean = false): Array[Row] = {
+      val seedRows =
+        if (hashSeeds) {
+          val seeds = v.select(col("id")).distinct()
+            .withColumn("h", pow2ModP((col("id") * 1000003L + 12289L) % P))
+            .orderBy(col("h"), col("id")).limit(k)
+            .withColumn("cid", row_number().over(
+              Window.orderBy(col("h"), col("id"))) - 1L)
+            .select(col("id"), col("cid"))
+          v.join(broadcast(seeds), Seq("id"))
+        } else v.filter(col("id") >= 0 && col("id") < k).withColumn("cid", col("id"))
+      var cents = collect(seedRows.select(part.map(col) ++ Seq(col("cid"), col("d"),
+        col("qx").as("cq")): _*))
+      (1 to iters).foreach { _ =>
+        val a = assign(cents).select(byVec.map(col) :+ pmod(col("amin"), lit(16L)).as("cid"): _*)
+        cents = collect(v.join(a, byVec)
+          .groupBy((part ++ Seq("cid", "d")).map(col): _*)
+          .agg(expr("sum(qx) DIV count(1)").as("cq")))
+      }
+      cents
+    }
+  }
+
+  /** The (+1)·2^20 fixed-point quantization of a float-vector frame to
+    * the exploded (id, d, qx) integer stream the Lloyd trainer consumes.
+    */
+  private def quantized(vectors: DataFrame): DataFrame =
+    vectors.select(col("id"), posexplode(col("vec")).as(Seq("d", "x")))
+      .select(col("id"), col("d"),
+        floor((col("x").cast("double") + lit(1.0)) * lit(KmQ.toDouble) + lit(0.5))
+          .cast("long").as("qx"))
+
   /** embed_kmeans — distributed Lloyd's k-means in INTEGER fixed point:
     * coordinates quantize to qx = round((x+1)·2^20) (the +1 shift keeps
     * every value non-negative so truncating integer division is
@@ -1319,118 +1421,11 @@ object Similarity {
     * drop out of the centroid table exactly as the oracle's arithmetic
     * does. Output: (vec_id, cluster, dist2_fixed).
     */
-  /** One full Lloyd run over an ALREADY-QUANTIZED (id, d, qx) stream —
-    * the shared core of [[kmeansOn]] and the residual stage of
-    * [[rqOn]]. `qx` must be NON-NEGATIVE (the truncating `div` in the
-    * centroid mean diverges from DuckDB's flooring `//` on negatives —
-    * callers shift into non-negative range). Returns (final
-    * assignment (id, amin), final centroid table (cid, d, cq)).
-    *
-    * Pivoted-codebook assignment (same rewrite as pqAssign): the
-    * centroid table pivots to d → [cq_0 .. cq_{k−1}], so the argmin is
-    * one broadcast join at N·d rows + a k-column aggregate instead of
-    * exploding to N·d·k (cid, dist) rows — identical integers (null
-    * columns from empty clusters drop out of least() like absent cids).
-    */
-  /** s² mod P — the mixing round that turns a (monotone) LCG value
-    * into a rank-scattering hash; exact int64 (s < 2^31 ⇒ s² < 2^62).
-    */
-  private def pow2ModP(s: Column): Column = (s * s) % P
-
-  private def lloyd(v: DataFrame, k: Int, iters: Int,
-      hashSeeds: Boolean = false): (DataFrame, DataFrame) = {
-    require(k <= 16, "argmin packing reserves 4 bits for the centroid id")
-    val spark = v.sparkSession
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    // r17 (guide §1.2/§5): the per-round centroid table is CONSTANT
-    // size — k·d ≤ 16·64 rows, corpus-independent — so it lives on the
-    // DRIVER between rounds (the MLlib-KMeans shape): one collect job
-    // per round replaces the r16 localCheckpoint job + the pivot's
-    // exchange + the broadcast-build job (a LocalRelation broadcasts
-    // without a job). Same integers end to end: the collected values
-    // are the exact sum-DIV-count longs the checkpoint held.
-    val centSchema = StructType(Seq(
-      StructField("cid", LongType, nullable = false),
-      StructField("d", IntegerType, nullable = false),
-      StructField("cq", LongType, nullable = false)))
-    val wideSchema = StructType(StructField("d", IntegerType, nullable = false) +:
-      (0 until k).map(i => StructField(i.toString, LongType, nullable = true)))
-    def collectCents(df: DataFrame): Array[Row] =
-      df.select(col("cid").cast("long"), col("d").cast("int"),
-        col("cq").cast("long")).collect()
-    // the driver-side twin of groupBy(d).pivot(cid).agg(first(cq)):
-    // one row per d, column i = centroid i's coordinate, null for an
-    // empty cluster (the null then voids its packed argmin term and
-    // `least` skips it — identical to the pivot's missing-cid column)
-    def wideLocal(rows: Array[Row]): DataFrame = {
-      val out = rows.groupBy(_.getInt(1)).toSeq.sortBy(_._1).map { case (d, rs) =>
-        val arr = new Array[Any](k + 1)
-        arr(0) = d
-        rs.foreach(r => arr(1 + r.getLong(0).toInt) = r.getLong(2))
-        Row.fromSeq(arr.toIndexedSeq)
-      }
-      spark.createDataFrame(java.util.Arrays.asList(out: _*), wideSchema)
-    }
-    def assignTo(rows: Array[Row]): DataFrame = {
-      val sums = (0 until k).map { i =>
-        val diff = col("qx") - col(i.toLong.toString)
-        sum(diff * diff).as(s"s$i")
-      }
-      val packed = (0 until k).map(i => col(s"s$i") * lit(16L) + lit(i.toLong))
-      v.join(broadcast(wideLocal(rows)), Seq("d"))
-        .groupBy(col("id"))
-        .agg(sums.head, sums.tail: _*)
-        .select(col("id"), least(packed: _*).as("amin"))
-    }
-    // seeding: ids 0..k−1 as cids 0..k−1 (kmeans' documented policy;
-    // negative ids are no cid and seed nothing), or —
-    // hashSeeds — the k lowest SQUARED-LCG-hash ids, remapped to cid
-    // 0..k−1. The hash scatter matters when low ids correlate with a
-    // data pattern: RQ's residual stage measured ZERO stage-2 gain on
-    // a planted corpus whose ids 0..7 all carried identical residuals
-    // (8 coincident seeds → one effective centroid). The square-mod-P
-    // mixing round is load-bearing: a bare LCG is MONOTONE over small
-    // id ranges, so ordering by it reproduced id-order seeding
-    // exactly (the SrpBucket bit-consumer lesson applied to ranking).
-    // TakeOrdered top-k, never a corpus-wide window.
-    var cents: Array[Row] = collectCents(
-      if (hashSeeds) {
-        val seeds = v.select(col("id")).distinct()
-          .withColumn("h", pow2ModP((col("id") * 1000003L + 12289L) % P))
-          .orderBy(col("h"), col("id")).limit(k)
-          .withColumn("cid", row_number().over(
-            Window.orderBy(col("h"), col("id"))) - 1L)
-          .select(col("id"), col("cid"))
-        v.join(broadcast(seeds), Seq("id"))
-          .select(col("cid"), col("d"), col("qx").as("cq"))
-      } else {
-        v.filter(col("id") >= 0 && col("id") < k)
-          .select(col("id").as("cid"), col("d"), col("qx").as("cq"))
-      })
-    (1 to iters).foreach { _ =>
-      val assign = assignTo(cents).select(col("id"), pmod(col("amin"), lit(16L)).as("cid"))
-      cents = collectCents(v.join(assign, Seq("id"))
-        .groupBy(col("cid"), col("d"))
-        .agg(expr("sum(qx) DIV count(1)").as("cq")))
-    }
-    (assignTo(cents),
-      spark.createDataFrame(java.util.Arrays.asList(cents: _*), centSchema))
-  }
-
-  /** The (+1)·2^20 fixed-point quantization of a float-vector frame to
-    * the exploded (id, d, qx) integer stream the Lloyd core consumes.
-    */
-  private def quantized(vectors: DataFrame): DataFrame =
-    vectors.select(col("id"), posexplode(col("vec")).as(Seq("d", "x")))
-      .select(col("id"), col("d"),
-        floor((col("x").cast("double") + lit(1.0)) * lit(KmQ.toDouble) + lit(0.5))
-          .cast("long").as("qx"))
-
   def kmeansOn(vectors: DataFrame, k: Int = KmK, iters: Int = KmIters): DataFrame = {
     val v = quantized(vectors)
       .transform(graft.util.CacheScope.cached) // re-read by every Lloyd iteration and the final assignment
-    lloyd(v, k, iters)._1
+    val km = new Lloyd(v, Nil, k)
+    km.assign(km.train(iters))
       .select(col("id").as("vec_id"),
         pmod(col("amin"), lit(16L)).cast("int").as("cluster"),
         expr("amin DIV 16").as("dist2_fixed"))
@@ -1461,7 +1456,7 @@ object Similarity {
     * is the quantity an index builder watches to decide whether
     * another residual stage pays.
     *
-    * Scale shape: each stage is [[lloyd]] — O(N·k·d) broadcast-join
+    * Scale shape: each stage is [[Lloyd]] — O(N·k·d) broadcast-join
     * assignment per round, constant-size centroid state; the residual
     * join adds one broadcast of the k·d stage-1 centroid table. The
     * whole composite is integer-exact → fully value-oracled (oracle =
@@ -1471,16 +1466,17 @@ object Similarity {
   def rqOn(vectors: DataFrame, k: Int = KmK, iters: Int = KmIters): DataFrame = {
     val v = quantized(vectors)
       .transform(graft.util.CacheScope.cached) // both Lloyd stages + residual build
-    val (a1, c1) = lloyd(v, k, iters)
-    val assign1 = a1.select(col("id"),
+    val stage1 = new Lloyd(v, Nil, k)
+    val c1 = stage1.train(iters)
+    val assign1 = stage1.assign(c1).select(col("id"),
         pmod(col("amin"), lit(16L)).as("cid"), expr("amin DIV 16").as("d1"))
       .transform(graft.util.CacheScope.cached) // residual build + final join
     val resid = v.join(assign1.select(col("id"), col("cid")), Seq("id"))
-      .join(broadcast(c1), Seq("cid", "d"))
+      .join(broadcast(stage1.narrow(c1)), Seq("cid", "d"))
       .select(col("id"), col("d"), (col("qx") - col("cq") + lit(RqShift)).as("qx"))
       .transform(graft.util.CacheScope.cached) // re-read by every stage-2 Lloyd round
-    val (a2, _) = lloyd(resid, k, iters, hashSeeds = true)
-    assign1.join(a2.select(col("id"),
+    val stage2 = new Lloyd(resid, Nil, k)
+    assign1.join(stage2.assign(stage2.train(iters, hashSeeds = true)).select(col("id"),
         pmod(col("amin"), lit(16L)).as("c2"), expr("amin DIV 16").as("d2")), Seq("id"))
       .select(col("id").as("vec_id"),
         col("cid").cast("int").as("c1"), col("d1").as("dist2_coarse"),
@@ -1513,6 +1509,36 @@ object Similarity {
   val PqK = 16
   val PqIters = 2
 
+  /** OPQ — the PARAMETRIC variant (OPQ-P, Ge et al.: PCA rotation +
+    * eigenvalue-balanced dimension allocation) is implemented below as
+    * [[opqOn]]/`embed_opq`: rotation TRAINED offline from exact-int64
+    * distributed moments + a deterministic driver-side Jacobi
+    * eigensolve (the matrix is dim², bounded), APPLIED scan-side as
+    * dim codegen dot products against literal rotation rows ahead of
+    * the unchanged [[pqOn]] quantizer — zero added shuffle.
+    * The ITERATIVE variant (OPQ-NP, per-Lloyd-round SVD refits)
+    * remains out of scope: each round's SVD is another driver-side
+    * dense solve for single-digit extra recall on already-decorrelated
+    * data, and the refit breaks the train-once/broadcast-forever shape
+    * that makes the parametric form 100-TB-safe. Rotated coordinates
+    * ride IEEE-double sums (summation-order-sensitive), so embed_opq
+    * is declared rows-only like every float-path sketch; OpqSpec pins
+    * the reconstruction-error win on cross-subspace-correlated data
+    * (where contiguous PQ wastes whole subspaces on duplicate signal)
+    * and near-parity on the uncorrelated testdata embeddings.
+    */
+
+  /** The exploded fixed-point (id, sub, d, qx) stream every PQ stage
+    * reads — cached because Lloyd rounds, the encode, and probe LUTs
+    * all re-scan it.
+    */
+  private def pqExplode(vectors: DataFrame, subDim: Int): DataFrame =
+    vectors.select(col("id"), posexplode(col("vec")).as(Seq("d", "x")))
+      .select(col("id"), (col("d") / lit(subDim)).cast("int").as("sub"), col("d"),
+        floor((col("x").cast("double") + lit(1.0)) * lit(KmQ.toDouble) + lit(0.5))
+          .cast("long").as("qx"))
+      .transform(graft.util.CacheScope.cached)
+
   /** embed_pq — product quantization, the codebook-training +
     * encoding step of an IVF-PQ index build: each vector splits into
     * [[PqSubs]] contiguous subvectors; per SUBSPACE an independent
@@ -1533,127 +1559,11 @@ object Similarity {
     * lowest-id vectors' subvectors, deterministic).
     * Output: (vec_id, pq_code, dist2_total).
     */
-  /** OPQ — the PARAMETRIC variant (OPQ-P, Ge et al.: PCA rotation +
-    * eigenvalue-balanced dimension allocation) is implemented below as
-    * [[opqOn]]/`embed_opq`: rotation TRAINED offline from exact-int64
-    * distributed moments + a deterministic driver-side Jacobi
-    * eigensolve (the matrix is dim², bounded), APPLIED scan-side as
-    * dim codegen dot products against literal rotation rows ahead of
-    * the unchanged [[pqOn]] quantizer — zero added shuffle.
-    * The ITERATIVE variant (OPQ-NP, per-Lloyd-round SVD refits)
-    * remains out of scope: each round's SVD is another driver-side
-    * dense solve for single-digit extra recall on already-decorrelated
-    * data, and the refit breaks the train-once/broadcast-forever shape
-    * that makes the parametric form 100-TB-safe. Rotated coordinates
-    * ride IEEE-double sums (summation-order-sensitive), so embed_opq
-    * is declared rows-only like every float-path sketch; OpqSpec pins
-    * the reconstruction-error win on cross-subspace-correlated data
-    * (where contiguous PQ wastes whole subspaces on duplicate signal)
-    * and near-parity on the uncorrelated testdata embeddings.
-    */
-
-  /** Shared PQ training/encoding internals: the per-(vector, subspace)
-    * argmin over the k centroids runs against a PIVOTED codebook — the
-    * (sub, d) → [cq_0 .. cq_15] wide form — so assignment is ONE
-    * broadcast join at N·subs·subdim rows with a 16-column aggregate,
-    * instead of exploding to N·subs·subdim·k (cid, dist) rows and
-    * re-aggregating twice. Same integers, 16× less aggregate traffic
-    * and two fewer stages per Lloyd round — the shape that matters when
-    * N is billions of vectors. An empty cluster yields a null centroid
-    * column; null distance sums propagate through the packed argmin
-    * terms and `least` skips them, exactly matching the row form's
-    * "min over present cids".
-    */
-  // r17 (guide §1.2/§5): the PQ codebook is CONSTANT size (subs·k·
-  // subdim ≈ 1 K rows, corpus-independent), so training keeps it on
-  // the DRIVER between rounds — one collect job per round replaces the
-  // per-round pivot exchange + broadcast-build job inside what was one
-  // very deep lazy plan (LocalRelations broadcast without a job, and
-  // the consumers' plans no longer carry the whole training lineage).
-  // Same integers end to end.
-  private def pqCentsWideLocal(spark: SparkSession, rows: Array[org.apache.spark.sql.Row],
-      k: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    val wideSchema = StructType(
-      StructField("sub", IntegerType, nullable = false) +:
-      StructField("d", IntegerType, nullable = false) +:
-      (0 until k).map(i => StructField(i.toString, LongType, nullable = true)))
-    // driver-side twin of groupBy(sub, d).pivot(cid).agg(first(cq)) —
-    // missing cid (empty cluster) stays a null column, which voids its
-    // packed argmin term exactly like the pivot's missing column
-    val out = rows.groupBy(r => (r.getInt(0), r.getInt(2))).toSeq
-      .sortBy(_._1).map { case ((sub, d), rs) =>
-        val arr = new Array[Any](k + 2)
-        arr(0) = sub
-        arr(1) = d
-        rs.foreach(r => arr(2 + r.getLong(1).toInt) = r.getLong(3))
-        Row.fromSeq(arr.toIndexedSeq)
-      }
-    spark.createDataFrame(java.util.Arrays.asList(out: _*), wideSchema)
-  }
-  private def pqCentsNarrowLocal(spark: SparkSession,
-      rows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
-    spark.createDataFrame(java.util.Arrays.asList(rows: _*), StructType(Seq(
-      StructField("sub", IntegerType, nullable = false),
-      StructField("cid", LongType, nullable = false),
-      StructField("d", IntegerType, nullable = false),
-      StructField("cq", LongType, nullable = false))))
-  }
-  private def pqAssign(v: DataFrame, centsWide: DataFrame, k: Int): DataFrame = {
-    val sums = (0 until k).map { i =>
-      val diff = col("qx") - col(i.toLong.toString)
-      sum(diff * diff).as(s"s$i")
-    }
-    val packed = (0 until k).map(i => col(s"s$i") * lit(16L) + lit(i.toLong))
-    v.join(broadcast(centsWide), Seq("sub", "d"))
-      .groupBy(col("id"), col("sub"))
-      .agg(sums.head, sums.tail: _*)
-      .select(col("id"), col("sub"), least(packed: _*).as("amin"))
-  }
-
-  /** The shared Lloyd loop of every PQ consumer ([[pqOn]], [[pqAdcOn]],
-    * [[ivfPq]]): seed each subspace's codebook from the subvectors of
-    * ids 0..k−1 (cid = id), then `iters` rounds of broadcast-codebook
-    * assignment + (sub, cid, d) centroid means. All integers; the
-    * codebook rows ride the driver between rounds (constant size).
-    */
-  private def pqTrainCents(v: DataFrame, k: Int, iters: Int)
-      : Array[org.apache.spark.sql.Row] = {
-    val spark = v.sparkSession
-    def collectCents(df: DataFrame): Array[org.apache.spark.sql.Row] =
-      df.select(col("sub").cast("int"), col("cid").cast("long"),
-        col("d").cast("int"), col("cq").cast("long")).collect()
-    var cents = collectCents(v.filter(col("id") >= 0 && col("id") < k)
-      .select(col("sub"), col("id").as("cid"), col("d"), col("qx").as("cq")))
-    (1 to iters).foreach { _ =>
-      val assign = pqAssign(v, pqCentsWideLocal(spark, cents, k), k)
-        .select(col("id"), col("sub"), pmod(col("amin"), lit(16L)).as("cid"))
-      cents = collectCents(v.join(assign, Seq("id", "sub"))
-        .groupBy(col("sub"), col("cid"), col("d"))
-        .agg(expr("sum(qx) DIV count(1)").as("cq")))
-    }
-    cents
-  }
-
-  /** The exploded fixed-point (id, sub, d, qx) stream every PQ stage
-    * reads — cached because Lloyd rounds, the encode, and probe LUTs
-    * all re-scan it.
-    */
-  private def pqExplode(vectors: DataFrame, subDim: Int): DataFrame =
-    vectors.select(col("id"), posexplode(col("vec")).as(Seq("d", "x")))
-      .select(col("id"), (col("d") / lit(subDim)).cast("int").as("sub"), col("d"),
-        floor((col("x").cast("double") + lit(1.0)) * lit(KmQ.toDouble) + lit(0.5))
-          .cast("long").as("qx"))
-      .transform(graft.util.CacheScope.cached)
-
   def pqOn(vectors: DataFrame, subDim: Int = PqSubDim, k: Int = PqK,
       iters: Int = PqIters): DataFrame = {
     require(k <= 16, "argmin packing and the nibble pack reserve 4 bits per code")
-    val v = pqExplode(vectors, subDim)
-    val cents = pqTrainCents(v, k, iters)
-    pqAssign(v, pqCentsWideLocal(vectors.sparkSession, cents, k), k)
+    val pq = new Lloyd(pqExplode(vectors, subDim), Seq("sub"), k)
+    pq.assign(pq.train(iters))
       .groupBy(col("id"))
       // 16^sub ≤ 16^7 < 2^53: power() is exact, the cast is exact, and
       // the pack is a plain integer sum — portable across engines
@@ -1919,30 +1829,53 @@ object Similarity {
     * [[pqSql]] (raw coordinates) and [[opqSql]] (pinned-rotation
     * coordinates).
     */
-  private def pqPipelineSql(vCtes: String): String = {
-    def assignFrom(c: String): String =
-      s"""SELECT id, sub, CAST(min(dist2 * 16 + cid) AS BIGINT) AS amin FROM (
-         |  SELECT id, sub, cid, CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS dist2
-         |  FROM v JOIN $c USING (sub, d) GROUP BY 1, 2, 3) GROUP BY 1, 2""".stripMargin
-    val prelude =
-      s"""WITH $vCtes,
-         |c0 AS (SELECT sub, id AS cid, d, qx AS cq FROM v WHERE id < $PqK)""".stripMargin
-    val steps = (1 to PqIters).map { i =>
-      s"""a$i AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid FROM (${assignFrom(s"c${i - 1}")})),
-         |c$i AS (SELECT sub, cid, d, CAST(sum(qx) // count(*) AS BIGINT) AS cq
-         |        FROM v JOIN a$i USING (id, sub) GROUP BY 1, 2, 3)""".stripMargin
-    }.mkString(",\n", ",\n", "")
-    s"""$prelude$steps
+  private def pqPipelineSql(vCtes: String): String =
+    s"""${pqLloydSql(vCtes)}
        |SELECT id AS vec_id,
        | CAST(sum((amin % 16) * CAST(power(16, sub) AS BIGINT)) AS BIGINT) AS pq_code,
        | CAST(sum(amin // 16) AS BIGINT) AS dist2_total
-       |FROM (${assignFrom(s"c$PqIters")}) GROUP BY 1 ORDER BY vec_id""".stripMargin
+       |FROM (${pqAssignSql(s"c$PqIters")}) GROUP BY 1 ORDER BY vec_id""".stripMargin
+
+  /** The PQ oracle's packed argmin per (id, sub) against codebook CTE
+    * `c` — the SQL twin of [[Lloyd]]'s assignment.
+    */
+  private def pqAssignSql(c: String): String =
+    s"""SELECT id, sub, CAST(min(dist2 * 16 + cid) AS BIGINT) AS amin FROM (
+       |  SELECT id, sub, cid, CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS dist2
+       |  FROM v JOIN $c USING (sub, d) GROUP BY 1, 2, 3) GROUP BY 1, 2""".stripMargin
+
+  /** `WITH` the caller's `v` (id, sub, d, qx) CTEs, then the PQ Lloyd
+    * chain: seed codebook c0, assignments a1.., codebooks c1..c$PqIters.
+    */
+  private def pqLloydSql(vCtes: String): String = {
+    val steps = (1 to PqIters).map { i =>
+      s"""a$i AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid FROM (${pqAssignSql(s"c${i - 1}")})),
+         |c$i AS (SELECT sub, cid, d, CAST(sum(qx) // count(*) AS BIGINT) AS cq
+         |        FROM v JOIN a$i USING (id, sub) GROUP BY 1, 2, 3)""".stripMargin
+    }.mkString(",\n", ",\n", "")
+    s"""WITH $vCtes,
+       |c0 AS (SELECT sub, id AS cid, d, qx AS cq FROM v WHERE id < $PqK)""".stripMargin + steps
   }
 
-  def pqSql: String = pqPipelineSql(
+  /** The raw-coordinate `v` CTE of the PQ oracles. */
+  private def pqVSql: String =
     s"""v AS (SELECT vec_id AS id, (d - 1) // $PqSubDim AS sub, d,
        |  CAST(floor((CAST(embedding[d] AS DOUBLE) + 1.0) * $KmQ.0 + 0.5) AS BIGINT) AS qx
-       |  FROM embeddings, generate_series(1, 64) AS g(d))""".stripMargin)
+       |  FROM embeddings, generate_series(1, 64) AS g(d))""".stripMargin
+
+  /** The trained PQ codes and the probes' distance tables as the
+    * `codes` and `lut` CTEs — the shared head of the ADC oracles.
+    */
+  private def pqCodesLutSql: String =
+    s"""${pqLloydSql(pqVSql)},
+       |codes AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid
+       |          FROM (${pqAssignSql(s"c$PqIters")})),
+       |lut AS (SELECT v.id AS probe_id, sub, cid,
+       |         CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS ld
+       |        FROM v JOIN c$PqIters USING (sub, d) WHERE v.id < $AdcProbes
+       |        GROUP BY 1, 2, 3)""".stripMargin
+
+  def pqSql: String = pqPipelineSql(pqVSql)
 
   /** embed_opq value oracle: the PINNED rotation of the corpus it reads
     * ([[OpqRotationPinned]], one per testdata corpus, selected by the
@@ -1985,27 +1918,22 @@ object Similarity {
 
   def pqAdcOn(vectors: DataFrame, probeMaxId: Int = AdcProbes,
       subDim: Int = PqSubDim, k: Int = PqK, iters: Int = PqIters): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(k <= 16, "argmin packing reserves 4 bits per code")
     val v = pqExplode(vectors, subDim)
-    val cents = pqTrainCents(v, k, iters)
-    val codes = pqAssign(v, pqCentsWideLocal(vectors.sparkSession, cents, k), k) // see pqOn: 16× slimmer agg
+    val pq = new Lloyd(v, Seq("sub"), k)
+    val cents = pq.train(iters)
+    val codes = pq.assign(cents)
       .select(col("id"), col("sub"), pmod(col("amin"), lit(16L)).as("cid"))
     // per-probe LUT: exact dist² from each probe subvector to each centroid
     val lut = v.filter(col("id") < probeMaxId)
       .withColumnRenamed("id", "probe_id")
-      .join(broadcast(pqCentsNarrowLocal(vectors.sparkSession, cents)), Seq("sub", "d"))
+      .join(broadcast(pq.narrow(cents)), Seq("sub", "d"))
       .groupBy(col("probe_id"), col("sub"), col("cid"))
       .agg(sum((col("qx") - col("cq")) * (col("qx") - col("cq"))).as("ld"))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("adc_dist2"), col("vec_id"))
-    codes
-      .join(broadcast(lut), Seq("sub", "cid"))
-      .filter(col("id") =!= col("probe_id"))
-      .groupBy(col("probe_id"), col("id").as("vec_id"))
-      .agg(sum(col("ld")).as("adc_dist2"))
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= AdcTopK)
+    topK(codes
+        .join(broadcast(lut), Seq("sub", "cid"))
+        .filter(col("id") =!= col("probe_id"))
+        .groupBy(col("probe_id"), col("id").as("vec_id"))
+        .agg(sum(col("ld")).as("adc_dist2")), "probe_id", col("adc_dist2"), "vec_id", AdcTopK)
       .select(col("probe_id"), col("vec_id"), col("adc_dist2"),
         col("rk").cast("int").as("rk"))
   }
@@ -2016,28 +1944,8 @@ object Similarity {
         .select(col("vec_id").as("id"), col("embedding").as("vec")))
       .transform(graft.util.Cols.verifySort(_, col("probe_id"), col("rk")))
 
-  def pqAdcSql: String = {
-    def assignFrom(c: String): String =
-      s"""SELECT id, sub, CAST(min(dist2 * 16 + cid) AS BIGINT) AS amin FROM (
-         |  SELECT id, sub, cid, CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS dist2
-         |  FROM v JOIN $c USING (sub, d) GROUP BY 1, 2, 3) GROUP BY 1, 2""".stripMargin
-    val prelude =
-      s"""WITH v AS (SELECT vec_id AS id, (d - 1) // $PqSubDim AS sub, d,
-         |  CAST(floor((CAST(embedding[d] AS DOUBLE) + 1.0) * $KmQ.0 + 0.5) AS BIGINT) AS qx
-         |  FROM embeddings, generate_series(1, 64) AS g(d)),
-         |c0 AS (SELECT sub, id AS cid, d, qx AS cq FROM v WHERE id < $PqK)""".stripMargin
-    val steps = (1 to PqIters).map { i =>
-      s"""a$i AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid FROM (${assignFrom(s"c${i - 1}")})),
-         |c$i AS (SELECT sub, cid, d, CAST(sum(qx) // count(*) AS BIGINT) AS cq
-         |        FROM v JOIN a$i USING (id, sub) GROUP BY 1, 2, 3)""".stripMargin
-    }.mkString(",\n", ",\n", "")
-    s"""$prelude$steps,
-       |codes AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid
-       |          FROM (${assignFrom(s"c$PqIters")})),
-       |lut AS (SELECT v.id AS probe_id, sub, cid,
-       |         CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS ld
-       |        FROM v JOIN c$PqIters USING (sub, d) WHERE v.id < $AdcProbes
-       |        GROUP BY 1, 2, 3),
+  def pqAdcSql: String =
+    s"""$pqCodesLutSql,
        |adc AS (SELECT probe_id, codes.id AS vec_id, CAST(sum(ld) AS BIGINT) AS adc_dist2
        |        FROM codes JOIN lut USING (sub, cid)
        |        WHERE codes.id <> lut.probe_id
@@ -2048,7 +1956,6 @@ object Similarity {
        |      FROM adc)
        |SELECT probe_id, vec_id, adc_dist2, rk FROM r WHERE rk <= $AdcTopK
        |ORDER BY probe_id, rk""".stripMargin
-  }
 
   /** Shortlist depth for [[ivfPq]]'s exact-refine stage. */
   val IvfPqShortlist = 10
@@ -2073,78 +1980,50 @@ object Similarity {
     * ANN-built map exactly as [[ivfRefineAssigned]] does.
     */
   def ivfPq(spark: SparkSession, sfDir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = Tables.embeddings(spark, sfDir)
-    val cents = e
-      .orderBy(expr(s"(vec_id * 1000003 + 12289) % $P"), col("vec_id")).limit(IvfK)
-      .select(col("vec_id").as("cent_id"), col("embedding").as("centv"))
+    val cents = ivfCents(e)
     // IVF: candidate→cell argmax, probe→top-nprobe cells
-    val cellOf = e.filter(col("vec_id") >= AdcProbes)
-      .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("ccos", cosExpr("cv", "centv"))
-      .groupBy(col("c_id"))
-      .agg(max_by(col("cent_id"), struct(col("ccos"), (-col("cent_id")).as("nid"))).as("cent_id"))
-    val wProbe = Window.partitionBy(col("probe_id")).orderBy(col("qcos").desc, col("cent_id"))
-    val probeCells = e.filter(col("vec_id") < AdcProbes)
-      .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))
-      .crossJoin(broadcast(cents))
-      .withColumn("qcos", cosExpr("qv", "centv"))
-      .withColumn("prk", row_number().over(wProbe)).filter(col("prk") <= IvfRefineProbes)
+    val cellOf = nearestCell(e.filter(col("vec_id") >= AdcProbes)
+      .select(col("vec_id").as("c_id"), col("embedding").as("cv")), cents)
+    val probeCells = topK(e.filter(col("vec_id") < AdcProbes)
+        .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))
+        .crossJoin(broadcast(cents))
+        .withColumn("qcos", cosExpr("qv", "centv")), "probe_id", col("qcos").desc, "cent_id",
+        IvfRefineProbes, "prk")
       .select(col("probe_id"), col("cent_id"))
     // PQ: train on the full set, encode, probe LUTs (pqAdcOn's stages)
     val v = pqExplode(e.select(col("vec_id").as("id"), col("embedding").as("vec")), PqSubDim)
-    val pqCents = pqTrainCents(v, PqK, PqIters)
-    val codes = pqAssign(v, pqCentsWideLocal(spark, pqCents, PqK), PqK)
+    val pq = new Lloyd(v, Seq("sub"), PqK)
+    val pqCents = pq.train(PqIters)
+    val codes = pq.assign(pqCents)
       .select(col("id"), col("sub"), pmod(col("amin"), lit(16L)).as("cid"))
     val lut = v.filter(col("id") < AdcProbes)
       .withColumnRenamed("id", "probe_id")
-      .join(broadcast(pqCentsNarrowLocal(spark, pqCents)), Seq("sub", "d"))
+      .join(broadcast(pq.narrow(pqCents)), Seq("sub", "d"))
       .groupBy(col("probe_id"), col("sub"), col("cid"))
       .agg(sum((col("qx") - col("cq")) * (col("qx") - col("cq"))).as("ld"))
     // ADC restricted to probed cells: codes ⋈ cell ⋈ probe map ⋈ LUT
-    val wShort = Window.partitionBy(col("probe_id")).orderBy(col("adc_dist2"), col("vec_id"))
-    val short = codes
-      .join(cellOf.select(col("c_id").as("id"), col("cent_id")), Seq("id"))
-      .join(broadcast(probeCells), Seq("cent_id"))
-      .join(broadcast(lut), Seq("probe_id", "sub", "cid"))
-      .groupBy(col("probe_id"), col("id").as("vec_id"), col("cent_id"))
-      .agg(sum(col("ld")).as("adc_dist2"))
-      .withColumn("srk", row_number().over(wShort)).filter(col("srk") <= IvfPqShortlist)
+    val short = topK(codes
+        .join(cellOf.select(col("c_id").as("id"), col("cent_id")), Seq("id"))
+        .join(broadcast(probeCells), Seq("cent_id"))
+        .join(broadcast(lut), Seq("probe_id", "sub", "cid"))
+        .groupBy(col("probe_id"), col("id").as("vec_id"), col("cent_id"))
+        .agg(sum(col("ld")).as("adc_dist2")), "probe_id", col("adc_dist2"), "vec_id",
+        IvfPqShortlist, "srk")
       .select(col("probe_id"), col("vec_id"), col("cent_id"), col("adc_dist2"))
     // exact refine of the shortlist only
-    val wTop = Window.partitionBy(col("probe_id")).orderBy(col("cos").desc, col("vec_id"))
-    short
-      .join(e.select(col("vec_id"), col("embedding").as("cv")), Seq("vec_id"))
-      .join(broadcast(e.filter(col("vec_id") < AdcProbes)
-        .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))), Seq("probe_id"))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= AdcTopK)
+    topK(short
+        .join(e.select(col("vec_id"), col("embedding").as("cv")), Seq("vec_id"))
+        .join(broadcast(e.filter(col("vec_id") < AdcProbes)
+          .select(col("vec_id").as("probe_id"), col("embedding").as("qv"))), Seq("probe_id"))
+        .withColumn("cos", cosExpr("qv", "cv")), "probe_id", col("cos").desc, "vec_id", AdcTopK)
       .select(col("probe_id"), col("vec_id"), col("cent_id"), col("adc_dist2"),
         Cols.pround(col("cos"), 6).as("cos_sim"), col("rk").cast("int").as("rk"))
       .transform(graft.util.Cols.verifySort(_, col("probe_id"), col("rk")))
   }
 
-  def ivfPqSql: String = {
-    def assignFrom(c: String): String =
-      s"""SELECT id, sub, CAST(min(dist2 * 16 + cid) AS BIGINT) AS amin FROM (
-         |  SELECT id, sub, cid, CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS dist2
-         |  FROM v JOIN $c USING (sub, d) GROUP BY 1, 2, 3) GROUP BY 1, 2""".stripMargin
-    val pqSteps = (1 to PqIters).map { i =>
-      s"""a$i AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid FROM (${assignFrom(s"c${i - 1}")})),
-         |c$i AS (SELECT sub, cid, d, CAST(sum(qx) // count(*) AS BIGINT) AS cq
-         |        FROM v JOIN a$i USING (id, sub) GROUP BY 1, 2, 3)""".stripMargin
-    }.mkString(",\n", ",\n", "")
-    s"""WITH v AS (SELECT vec_id AS id, (d - 1) // $PqSubDim AS sub, d,
-       |  CAST(floor((CAST(embedding[d] AS DOUBLE) + 1.0) * $KmQ.0 + 0.5) AS BIGINT) AS qx
-       |  FROM embeddings, generate_series(1, 64) AS g(d)),
-       |c0 AS (SELECT sub, id AS cid, d, qx AS cq FROM v WHERE id < $PqK)$pqSteps,
-       |codes AS (SELECT id, sub, CAST(amin % 16 AS BIGINT) AS cid
-       |          FROM (${assignFrom(s"c$PqIters")})),
-       |lut AS (SELECT v.id AS probe_id, sub, cid,
-       |         CAST(sum((qx - cq) * (qx - cq)) AS BIGINT) AS ld
-       |        FROM v JOIN c$PqIters USING (sub, d) WHERE v.id < $AdcProbes
-       |        GROUP BY 1, 2, 3),
+  def ivfPqSql: String =
+    s"""$pqCodesLutSql,
        |cents AS (SELECT vec_id AS cent_id, embedding AS centv FROM embeddings
        |          ORDER BY (vec_id * 1000003 + 12289) % $P, vec_id LIMIT $IvfK),
        |cand AS (SELECT vec_id AS c_id, embedding AS cv FROM embeddings WHERE vec_id >= $AdcProbes),
@@ -2178,12 +2057,11 @@ object Similarity {
        |SELECT probe_id, vec_id, cent_id, adc_dist2,
        | floor(cos * 1000000.0 + 0.5) / 1000000.0 AS cos_sim, CAST(rk AS INTEGER) AS rk
        |FROM r WHERE rk <= $AdcTopK ORDER BY probe_id, rk""".stripMargin
-  }
 
   /** One unrolled Lloyd run over CTE `src(id, d, qx)` as a WITH-body
     * fragment: centroid chain `$pfx0..$pfx$KmIters`, assignments
     * `${pfx}a$i`, final `${pfx}fin(id, cluster, dist2)` — the oracle
-    * twin of [[lloyd]], shared by the kmeans and RQ oracles.
+    * twin of [[Lloyd]], shared by the kmeans and RQ oracles.
     */
   private def lloydCtes(src: String, pfx: String,
       hashSeeds: Boolean = false): String = {
@@ -2372,8 +2250,9 @@ object Similarity {
     * LocalRelation: 3 jobs instead of 25 for 2000 vectors at sf0.1. The
     * distributed rounds run otherwise, over the same cached frame, and
     * for inputs whose semantics are Spark's own: null ids or
-    * embeddings, duplicate vec_ids, a zero-norm vector (Spark's divide
-    * then decides), or ids within the far steps of Long.MaxValue.
+    * embeddings, duplicate vec_ids, a zero-norm vector (refused there
+    * by name: its cosine is undefined), or ids within the far steps of
+    * Long.MaxValue.
     * `spark.sql.autoBroadcastJoinThreshold=-1` selects the distributed
     * rounds for every input.
     */
@@ -2414,52 +2293,76 @@ object Similarity {
   private def knnGraphDistributed(v: DataFrame, k: Int, rounds: Int, cap: Int,
       initPlanes: Int): DataFrame = {
     val n = v.count()
-    val uSide = v.select(col("vec_id").as("u"), col("embedding").as("uv"))
-    val nSide = v.select(col("vec_id").as("nbr"), col("embedding").as("nv"))
-    val w = Window.partitionBy(col("u")).orderBy(col("cos").desc, col("nbr"))
-    // dedup rides the node-key exchange the rank window needs anyway:
-    // repartition(u) + a same-partitioning (u, nbr) hash aggregate +
-    // the window sort — one exchange where distinct + window paid two
-    // (hashpartitioning(u) satisfies both requirements)
-    def scoreTopK(pairs: DataFrame): DataFrame =
-      pairs.repartition(col("u")).dropDuplicates("u", "nbr")
-        .join(uSide, Seq("u")).join(nSide, Seq("nbr"))
-        .withColumn("cos", cosExpr("uv", "nv"))
-        .select(col("u"), col("nbr"), col("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-    val tb = v.withColumn("tb", explode(array((0 until KnnGraphInitTables).map(t =>
-        struct(lit(t).as("t"), graft.functions.SrpBucket.column(
-          col("embedding"), initPlanes, t * initPlanes).as("b"))): _*)))
-      .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
     // cap bucket MEMBERSHIP (the df-cap policy — a hot bucket degrades
     // to a deterministic sample), never the per-node candidate list by
     // hash: a hash-ordered node cap was measured to evict the cluster
     // mates the seeds exist to find (signal recall 0.23 vs 1.0).
     // Bounded aggregate, not a window: same (hash, id) order, same cap.
-    val tbCapArr = tb.groupBy(col("t"), col("b"))
-      .agg(graft.functions.HashCapAgg.column(col("vec_id"), KnnGraphBucketCap).as("bm"))
-    val lshSeeds = tbCapArr.select(col("bm"), explode(col("bm")).as("u"))
-      .select(col("u"), explode(col("bm")).as("nbr"))
-      .filter(col("u") =!= col("nbr"))
+    val lshSeeds = pairsWithin(
+      srpTables(v, Seq("vec_id"), "embedding", KnnGraphInitTables, initPlanes)
+        .groupBy(col("t"), col("b"))
+        .agg(graft.functions.HashCapAgg.column(col("vec_id"), KnnGraphBucketCap).as("bm")),
+      "bm")
     val farSeeds = v.select(col("vec_id").as("u"),
         explode(array(KnnGraphSteps.take(k).map(s =>
           (col("vec_id") + lit(s)) % lit(n)): _*)).as("nbr"))
       .filter(col("u") =!= col("nbr"))
-    var g = scoreTopK(lshSeeds.unionAll(farSeeds)).localCheckpoint(true)
+    var g = scoreTopK("knnGraphOn", lshSeeds.unionAll(farSeeds), v, k).localCheckpoint(true)
     (1 to rounds).foreach { _ =>
-      val undArr = g.select(col("u").as("w"), col("nbr").as("x"))
-        .unionAll(g.select(col("nbr").as("w"), col("u").as("x")))
-        .groupBy(col("w"))
-        .agg(graft.functions.HashCapAgg.column(col("x"), cap).as("xs"))
-      val cand = undArr.select(col("xs"), explode(col("xs")).as("a"))
-        .select(col("a").as("u"), explode(col("xs")).as("nbr"))
-        .filter(col("u") =!= col("nbr"))
-      g = scoreTopK(g.select(col("u"), col("nbr")).unionAll(cand))
+      g = scoreTopK("knnGraphOn", g.select(col("u"), col("nbr")).unionAll(proposals(g, g, cap)),
+          v, k)
         .localCheckpoint(true)
     }
     g
   }
+
+  /** NN-Descent's one dedup-and-rank pass, shared by the build and the
+    * insert/delete maintenance: (u, nbr) candidate `pairs` (duplicates
+    * allowed) rejoin both endpoints' vectors from `corpus` (vec_id,
+    * embedding) and keep each u's top k by exact cosine, nbr breaking
+    * ties — (u, nbr, cos, rk). Dedup rides the node-key exchange the
+    * rank window needs anyway: repartition(u) + a same-partitioning
+    * (u, nbr) hash aggregate + the window sort is one exchange where
+    * distinct + window paid two. A pair with a zero-norm vector has no
+    * cosine: it raises a named error (operator `op` and the vec_id) in
+    * place of Spark's divide by zero. The norm product is its own
+    * projection, so each pair still computes three dot products.
+    */
+  private def scoreTopK(op: String, pairs: DataFrame, corpus: DataFrame, k: Int): DataFrame = {
+    def dot(a: String, b: String): Column = graft.functions.FloatVecDot.column(col(a), col(b))
+    val zeroNorm = raise_error(concat(lit(s"$op: vec_id "),
+      when(dot("uv", "uv") === 0.0, col("u")).otherwise(col("nbr")).cast("string"),
+      lit(" has a zero-norm embedding; cosine similarity is undefined for it")))
+    topK(pairs.repartition(col("u")).dropDuplicates("u", "nbr")
+        .join(corpus.select(col("vec_id").as("u"), col("embedding").as("uv")), Seq("u"))
+        .join(corpus.select(col("vec_id").as("nbr"), col("embedding").as("nv")), Seq("nbr"))
+        .withColumn("den", sqrt(dot("uv", "uv") * dot("nv", "nv")))
+        .withColumn("cos", when(col("den") === 0.0, zeroNorm)
+          .otherwise(dot("uv", "nv") / col("den")))
+        .select(col("u"), col("nbr"), col("cos")), "u", col("cos").desc, "nbr", k)
+  }
+
+  /** Every ordered pair of distinct ids within each row's id array
+    * `arr`, as (u, nbr) — candidate pairs EXPLODE from a bounded array
+    * (≤ cap² per row), never a self-join.
+    */
+  private def pairsWithin(df: DataFrame, arr: String): DataFrame =
+    df.select(col(arr), explode(col(arr)).as("u"))
+      .select(col("u"), explode(col(arr)).as("nbr"))
+      .filter(col("u") =!= col("nbr"))
+
+  /** NN-Descent's neighbor-of-neighbor proposal step: each node w's
+    * undirected neighborhood — w's `out` edges (u = w) plus its `in`
+    * edges (nbr = w) — capped at `cap` members in one bounded
+    * map-side-combined aggregate ([[graft.functions.HashCapAgg]]: O(cap)
+    * state per node, at most cap longs per node cross the exchange),
+    * then every pair within it proposed, as (u, nbr).
+    */
+  private def proposals(out: DataFrame, in: DataFrame, cap: Int): DataFrame =
+    pairsWithin(out.select(col("u").as("w"), col("nbr").as("x"))
+      .unionAll(in.select(col("nbr").as("w"), col("u").as("x")))
+      .groupBy(col("w"))
+      .agg(graft.functions.HashCapAgg.column(col("x"), cap).as("xs")), "xs")
 
   /** [[knnGraphOn]]'s NN-Descent over collected vectors, step for step
     * with [[knnGraphDistributed]] and through the same kernels: buckets
@@ -2591,54 +2494,21 @@ object Similarity {
     val all = baseVectors.select(col("vec_id"), col("embedding"))
       .unionByName(delta.select(col("vec_id"), col("embedding")))
       .transform(graft.util.CacheScope.cached) // scored against every stage
-    val uSide = all.select(col("vec_id").as("u"), col("embedding").as("uv"))
-    val nSide = all.select(col("vec_id").as("nbr"), col("embedding").as("nv"))
-    val w = Window.partitionBy(col("u")).orderBy(col("cos").desc, col("nbr"))
-    // r17 fusion (see knnGraphOn): dedup rides the node-key exchange
-    // the rank window needs anyway — one exchange per rescore
-    def scoreTopK(pairs: DataFrame): DataFrame =
-      pairs.repartition(col("u")).dropDuplicates("u", "nbr")
-        .join(uSide, Seq("u")).join(nSide, Seq("nbr"))
-        .withColumn("cos", cosExpr("uv", "nv"))
-        .select(col("u"), col("nbr"), col("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
-    def buckets(df: DataFrame): DataFrame =
-      df.withColumn("tb", explode(array((0 until KnnGraphInitTables).map(t =>
-          struct(lit(t).as("t"), graft.functions.SrpBucket.column(
-            col("embedding"), initPlanes, t * initPlanes).as("b"))): _*)))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val deltaBuckets = buckets(delta)
-      .select(col("t"), col("b"), col("vec_id").as("u"))
-      .transform(graft.util.CacheScope.cached) // keys filter + seed join
-    // cap ONLY the buckets an arrival actually touches: per-bucket caps
-    // are independent, so restricting the aggregate's input to the
-    // consumed buckets is result-identical — and it turns the seed
-    // stage's dominant cost delta-proportional (same device as
-    // knnGraphDelete's orphan-bucket restriction). Bounded HashCapAgg
-    // arrays replace the r16 row_number window (same (hash, id) order).
-    val candCapArr = buckets(all)
-      .join(deltaBuckets.select(col("t"), col("b")).distinct(), Seq("t", "b"), "left_semi")
-      .groupBy(col("t"), col("b"))
-      .agg(graft.functions.HashCapAgg.column(col("vec_id"), KnnGraphBucketCap).as("bm"))
     // seeds stay builder-parity WIDE (every capped bucket member — a
     // per-arrival cap of 8/table was measured costing 9pts overall /
     // 46pts on arrival neighborhoods at sf0.01, because the builder's
     // own candidate budget IS the whole capped bucket): the wide part
     // is only SCORED once, which is delta-proportional; the bounded
-    // part is the repair loop below
-    val seeds = deltaBuckets.join(candCapArr, Seq("t", "b"))
-      .select(col("u"), explode(col("bm")).as("nbr"))
-      .filter(col("u") =!= col("nbr"))
+    // part is the repair loop
+    val seeds = bucketSeeds(delta, all, initPlanes)
     val intro = seeds.unionAll(seeds.select(col("nbr").as("u"), col("u").as("nbr")))
     val affected = intro.select(col("u")).distinct()
     val gEdges = graph.select(col("u"), col("nbr"))
     // `touched` (the nodes whose adjacency rows live in touchedAdj) is
     // DERIVED — touchedAdj's u-set IS the touched set at every step
-    // (every affected node and every round's target scores ≥ 1 pair),
-    // so the r16 per-round touched checkpoint was a redundant action
-    var touchedAdj = scoreTopK(
-        gEdges.join(affected, Seq("u"), "left_semi").unionAll(intro))
+    // (every affected node and every round's target scores ≥ 1 pair)
+    val touchedAdj = scoreTopK("knnGraphInsert",
+        gEdges.join(affected, Seq("u"), "left_semi").unionAll(intro), all, k)
       .localCheckpoint(true)
     // Repair PIVOTS: only nodes whose adjacency actually CHANGED in
     // the rescore above (arrivals have no prior rows, so every arrival
@@ -2655,6 +2525,48 @@ object Similarity {
       .join(gEdges, Seq("u", "nbr"), "left_anti")
       .select(col("u")).distinct()
       .transform(graft.util.CacheScope.cached) // pivot filter every round
+    repaired("knnGraphInsert", graph, gEdges, touchedAdj, pivots, _.select(col("u")), all,
+      repairRounds, cap, k)
+  }
+
+  /** The capped-bucket LSH seed stage of the maintenance passes: each
+    * node of `probes` (vec_id, embedding) paired with the capped
+    * members of every bucket it falls in over `corpus` (same SRP
+    * geometry and bucket df-cap as the builder; the probe side rides
+    * uncapped so a hot bucket cannot orphan it), as (u, nbr). Only the
+    * buckets a probe touches are capped: per-bucket caps are
+    * independent, so restricting the aggregate's input to the consumed
+    * buckets is result-identical, and it turns the seed stage's
+    * dominant cost delta-proportional (a 1% purge measured the
+    * full-corpus cap at ~half a rebuild by itself).
+    */
+  private def bucketSeeds(probes: DataFrame, corpus: DataFrame, planes: Int): DataFrame = {
+    def buckets(df: DataFrame): DataFrame =
+      srpTables(df, Seq("vec_id"), "embedding", KnnGraphInitTables, planes)
+    val pb = buckets(probes).select(col("t"), col("b"), col("vec_id").as("u"))
+      .transform(graft.util.CacheScope.cached) // keys filter + seed join
+    val capped = buckets(corpus)
+      .join(pb.select(col("t"), col("b")).distinct(), Seq("t", "b"), "left_semi")
+      .groupBy(col("t"), col("b"))
+      .agg(graft.functions.HashCapAgg.column(col("vec_id"), KnnGraphBucketCap).as("bm"))
+    pb.join(capped, Seq("t", "b"))
+      .select(col("u"), explode(col("bm")).as("nbr"))
+      .filter(col("u") =!= col("nbr"))
+  }
+
+  /** The bounded local NN-Descent repair shared by [[knnGraphInsert]]
+    * and [[knnGraphDelete]], which differ only in their `pivots` and in
+    * `touched`, the set of nodes whose rows live in the current
+    * adjacency (a function of it). `rounds` rounds of
+    * neighbor-of-neighbor [[proposals]] inside the pivots' undirected
+    * neighborhoods, rescoring only each round's proposal targets
+    * against `corpus`; then the `carried` prior-graph rows of every
+    * untouched node, by reference, plus the touched nodes' rows —
+    * (u, nbr, cos_sim, rk), ids in `carried`'s type.
+    */
+  private def repaired(op: String, carried: DataFrame, gEdges: DataFrame, adj: DataFrame,
+      pivots: DataFrame, touched: DataFrame => DataFrame, corpus: DataFrame, rounds: Int,
+      cap: Int, k: Int): DataFrame = {
     // in-edges INTO the pivot set from the PRIOR graph, computed ONCE:
     // never-touched nodes' adjacency cannot change, so this
     // |pivots|*in-degree slice is the only part of the full edge set
@@ -2668,25 +2580,18 @@ object Similarity {
       .join(pivots.select(col("u").as("nbr")), Seq("nbr"), "left_semi")
       .select(col("u"), col("nbr"))
       .localCheckpoint(true)
-    (1 to repairRounds).foreach { _ =>
+    var touchedAdj = adj
+    (1 to rounds).foreach { _ =>
       // the pivots' undirected neighborhoods only:
       //  out-edges — the pivots' CURRENT adjacency (pivots ⊆ touched,
       //  so touchedAdj carries it);
       //  in-edges  — the once-computed prior-graph slice with rows from
       //  since-touched sources swapped for their current ones.
       val curr = touchedAdj.select(col("u"), col("nbr"))
-      val touchedIds = touchedAdj.select(col("u")) // = the touched set
-      val outPiv = curr.join(pivots, Seq("u"), "left_semi")
-      val inPiv = gInPiv.join(touchedIds, Seq("u"), "left_anti")
+      val inPiv = gInPiv.join(touched(touchedAdj), Seq("u"), "left_anti")
         .unionAll(curr.join(pivots.select(col("u").as("nbr")), Seq("nbr"), "left_semi")
           .select(col("u"), col("nbr")))
-      val undArr = outPiv.select(col("u").as("w"), col("nbr").as("x"))
-        .unionAll(inPiv.select(col("nbr").as("w"), col("u").as("x")))
-        .groupBy(col("w"))
-        .agg(graft.functions.HashCapAgg.column(col("x"), cap).as("xs"))
-      val cand = undArr.select(col("xs"), explode(col("xs")).as("a"))
-        .select(col("a").as("u"), explode(col("xs")).as("nbr"))
-        .filter(col("u") =!= col("nbr"))
+      val cand = proposals(curr.join(pivots, Seq("u"), "left_semi"), inPiv, cap)
       // rescore ONLY this round's proposal targets; every other
       // touched node's adjacency is carried forward BY REFERENCE — the
       // per-round score volume is |cand| + |targets|·2k, not
@@ -2698,18 +2603,21 @@ object Similarity {
       // lose again.
       val targets = cand.select(col("u")).distinct()
         .transform(graft.util.CacheScope.cached) // three joins below
-      val rescored = scoreTopK(
+      val rescored = scoreTopK(op,
         gEdges.join(targets, Seq("u"), "left_semi")
           .unionAll(curr.join(targets, Seq("u"), "left_semi"))
-          .unionAll(cand))
+          .unionAll(cand), corpus, k)
       touchedAdj = rescored
         .unionAll(touchedAdj.join(targets, Seq("u"), "left_anti"))
         .localCheckpoint(true)
     }
-    graph.join(touchedAdj.select(col("u")), Seq("u"), "left_anti")
+    // proposal ids come out of the cap arrays as BIGINT; the maintained
+    // graph keeps the ids of the graph it was given
+    carried.join(touched(touchedAdj), Seq("u"), "left_anti")
       .select(col("u"), col("nbr"), col("cos_sim"), col("rk"))
-      .unionAll(touchedAdj.select(col("u"), col("nbr"),
-        Cols.pround(col("cos"), 6).as("cos_sim"), col("rk")))
+      .unionAll(graft.functions.HashCapAgg.castBack(touchedAdj.select(col("u"), col("nbr"),
+        Cols.pround(col("cos"), 6).as("cos_sim"), col("rk")), Seq("u", "nbr"),
+        carried.schema("u").dataType))
   }
 
   /** Delta-admission rounds for the [[knnGraphInsert]] driver binding
@@ -2719,26 +2627,37 @@ object Similarity {
   val KnnInsertRepairRounds = 2
 
 
-  /** Prebuilt 90%-corpus base graph for [[knnInsert]], memoized per
-    * (session, sfDir) — the [[prebuiltKnnGraph]] accounting contract
-    * applied to maintenance: in production the graph being MAINTAINED
-    * is a durable artifact (that's the whole point of incremental
-    * admission — never rebuild), so the bench pin must measure the
-    * insert pass, not a rebuild-then-insert it exists to avoid. The
-    * build cost class is already on the record as `sim_knn_graph`.
+  /** The bindings' prebuilt graph ARTIFACTS, memoized per (session,
+    * sfDir) under a name: one (session, sfDir) at a time, the build run
+    * on the first request. Each is pinned with an eager
+    * `localCheckpoint`, which survives `catalog.clearCache` — exactly
+    * the artifact semantics the bench needs.
     */
-  @volatile private var insertBaseCache: Option[(SparkSession, String, DataFrame)] = None
+  @volatile private var prebuilt: (SparkSession, String, Map[String, AnyRef]) =
+    (null, null, Map.empty)
+  private def memo[A <: AnyRef](spark: SparkSession, sfDir: String, name: String)(
+      build: => A): A = synchronized {
+    if (!(prebuilt._1 eq spark) || prebuilt._2 != sfDir) prebuilt = (spark, sfDir, Map.empty)
+    prebuilt._3.get(name).map(_.asInstanceOf[A]).getOrElse {
+      val a = build
+      prebuilt = (spark, sfDir, prebuilt._3 + (name -> a))
+      a
+    }
+  }
+
+  /** Prebuilt 90%-corpus base graph for [[knnInsert]] — the
+    * [[prebuiltKnnGraph]] accounting contract applied to maintenance:
+    * in production the graph being MAINTAINED is a durable artifact
+    * (that's the whole point of incremental admission — never
+    * rebuild), so the bench pin must measure the insert pass, not a
+    * rebuild-then-insert it exists to avoid. The build cost class is
+    * already on the record as `sim_knn_graph`.
+    */
   private def prebuiltInsertBase(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      insertBaseCache match {
-        case Some((s, d, g)) if (s eq spark) && d == sfDir => g
-        case _ =>
-          val e = Tables.embeddings(spark, sfDir)
-          val cut = e.count() * 9 / 10
-          val g = knnGraphOn(e.filter(col("vec_id") < cut)).localCheckpoint(true)
-          insertBaseCache = Some((spark, sfDir, g))
-          g
-      }
+    memo(spark, sfDir, "insertBase") {
+      val e = Tables.embeddings(spark, sfDir)
+      val cut = e.count() * 9 / 10
+      knnGraphOn(e.filter(col("vec_id") < cut)).localCheckpoint(true)
     }
 
   /** sim_knn_insert testdata binding: the NN-Descent graph over the
@@ -2766,13 +2685,6 @@ object Similarity {
     * against the prior edges), [[KnnInsertRepairRounds]] repair rounds — ending in the same (u, nbr, cos_sim, rk) graph.
     */
   def knnInsertSql: String = {
-    // scoreTopK against the FULL corpus (arrivals + residents)
-    def topkAll(pairs: String, out: String): String =
-      s"""$out AS MATERIALIZED (SELECT u, nbr, cos, rk FROM (
-         | SELECT u, nbr, cos, row_number() OVER (PARTITION BY u ORDER BY cos DESC, nbr) AS rk
-         | FROM (SELECT p.u, p.nbr, ${cosSql("a.embedding", "b.embedding")} AS cos
-         |       FROM $pairs p JOIN iall a ON p.u = a.vec_id JOIN iall b ON p.nbr = b.vec_id))
-         | WHERE rk <= $KnnGraphK)""".stripMargin
     val bg = s"bg$KnnGraphRounds" // the base build's final CTE
     val prelude =
       s"""icut AS MATERIALIZED (SELECT 9 * count(*) // 10 AS cut FROM embeddings),
@@ -2799,34 +2711,11 @@ object Similarity {
          |ip0 AS MATERIALIZED (SELECT DISTINCT u, nbr FROM (
          |      SELECT u, nbr FROM ige WHERE u IN (SELECT u FROM iaf)
          |      UNION ALL SELECT u, nbr FROM iin)),
-         |${topkAll("ip0", "ia0")},
+         |${knnTopkSql("ip0", "ia0", "iall")},
          |ipv AS MATERIALIZED (SELECT DISTINCT u FROM (
          |      SELECT u, nbr FROM ia0 EXCEPT SELECT u, nbr FROM ige)),
          |igi AS MATERIALIZED (SELECT u, nbr FROM ige WHERE nbr IN (SELECT u FROM ipv))""".stripMargin
-    val roundsSql = (1 to KnnInsertRepairRounds).map { r =>
-      s"""iund$r AS MATERIALIZED (SELECT DISTINCT w, x FROM (
-         |      SELECT u AS w, nbr AS x FROM ia${r - 1} WHERE u IN (SELECT u FROM ipv)
-         |      UNION ALL SELECT nbr AS w, u AS x FROM (
-         |        SELECT u, nbr FROM igi WHERE u NOT IN (SELECT u FROM it${r - 1})
-         |        UNION ALL SELECT u, nbr FROM ia${r - 1} WHERE nbr IN (SELECT u FROM ipv)))),
-         |iuc$r AS MATERIALIZED (SELECT w, x FROM (
-         |      SELECT w, x, row_number() OVER (PARTITION BY w
-         |        ORDER BY (x * 1103515245 + 12345) % 1000000007, x) AS crk FROM iund$r)
-         |      WHERE crk <= $KnnGraphCap),
-         |icd$r AS MATERIALIZED (SELECT DISTINCT a.x AS u, b.x AS nbr
-         |      FROM iuc$r a JOIN iuc$r b ON a.w = b.w AND a.x <> b.x),
-         |itg$r AS MATERIALIZED (SELECT DISTINCT u FROM icd$r),
-         |it$r AS MATERIALIZED (SELECT DISTINCT u FROM (
-         |      SELECT u FROM it${r - 1} UNION ALL SELECT u FROM itg$r)),
-         |ip$r AS MATERIALIZED (SELECT DISTINCT u, nbr FROM (
-         |      SELECT u, nbr FROM ige WHERE u IN (SELECT u FROM itg$r)
-         |      UNION ALL SELECT u, nbr FROM ia${r - 1} WHERE u IN (SELECT u FROM itg$r)
-         |      UNION ALL SELECT u, nbr FROM icd$r)),
-         |${topkAll(s"ip$r", s"ian$r")},
-         |ia$r AS MATERIALIZED (SELECT u, nbr, cos, rk FROM ian$r
-         |      UNION ALL SELECT u, nbr, cos, rk FROM ia${r - 1}
-         |      WHERE u NOT IN (SELECT u FROM itg$r))""".stripMargin
-    }.mkString(",\n", ",\n", "")
+    val roundsSql = repairRoundsSql("i", "ipv", "iall", KnnInsertRepairRounds)
     val last = KnnInsertRepairRounds
     s"""WITH $prelude$roundsSql
        |SELECT u, nbr, ${Cols.proundSql("cos", 6)} AS cos_sim, CAST(rk AS INTEGER) AS rk
@@ -2879,18 +2768,6 @@ object Similarity {
     val survivors = vectors.select(col("vec_id"), col("embedding"))
       .join(del, Seq("vec_id"), "left_anti")
       .transform(graft.util.CacheScope.cached) // scored against every stage
-    val uSide = survivors.select(col("vec_id").as("u"), col("embedding").as("uv"))
-    val nSide = survivors.select(col("vec_id").as("nbr"), col("embedding").as("nv"))
-    val w = Window.partitionBy(col("u")).orderBy(col("cos").desc, col("nbr"))
-    // r17 fusion (see knnGraphOn): dedup rides the node-key exchange
-    // the rank window needs anyway — one exchange per rescore
-    def scoreTopK(pairs: DataFrame): DataFrame =
-      pairs.repartition(col("u")).dropDuplicates("u", "nbr")
-        .join(uSide, Seq("u")).join(nSide, Seq("nbr"))
-        .withColumn("cos", cosExpr("uv", "nv"))
-        .select(col("u"), col("nbr"), col("cos"))
-        .withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= k)
     // the prior graph with every deleted endpoint dropped
     val gEdges = graph.select(col("u"), col("nbr"))
       .join(del.select(col("vec_id").as("u")), Seq("u"), "left_anti")
@@ -2915,29 +2792,8 @@ object Similarity {
       .filter(col("u") =!= col("c"))
       .select(col("u"), col("c").as("nbr")).distinct()
     // LSH re-seed of the orphans against the capped surviving corpus
-    def buckets(df: DataFrame): DataFrame =
-      df.withColumn("tb", explode(array((0 until KnnGraphInitTables).map(t =>
-          struct(lit(t).as("t"), graft.functions.SrpBucket.column(
-            col("embedding"), initPlanes, t * initPlanes).as("b"))): _*)))
-        .select(col("vec_id"), col("tb.t").as("t"), col("tb.b").as("b"))
-    val orphanBuckets = buckets(survivors.join(orphans.select(col("u").as("vec_id")),
-          Seq("vec_id"), "left_semi"))
-      .select(col("t"), col("b"), col("vec_id").as("u"))
-      .transform(graft.util.CacheScope.cached) // keys filter + seed join
-    // cap ONLY the buckets an orphan actually touches: per-bucket caps
-    // are independent, so restricting the aggregate's input to the
-    // consumed buckets is result-identical — and it turns the seed
-    // stage's dominant cost delta-proportional: |orphan buckets| ≪ all
-    // buckets at small purges (the 1% shape measured the full-corpus
-    // window at ~half a rebuild all by itself). Bounded HashCapAgg
-    // arrays replace the r16 row_number window (same (hash, id) order).
-    val candCapArr = buckets(survivors)
-      .join(orphanBuckets.select(col("t"), col("b")).distinct(), Seq("t", "b"), "left_semi")
-      .groupBy(col("t"), col("b"))
-      .agg(graft.functions.HashCapAgg.column(col("vec_id"), KnnGraphBucketCap).as("bm"))
-    val seeds = orphanBuckets.join(candCapArr, Seq("t", "b"))
-      .select(col("u"), explode(col("bm")).as("nbr"))
-      .filter(col("u") =!= col("nbr"))
+    val seeds = bucketSeeds(survivors.join(orphans.select(col("u").as("vec_id")),
+      Seq("vec_id"), "left_semi"), survivors, initPlanes)
     // the orphans' UNDIRECTED 2-hop through survivors: in-neighbors
     // (nodes that kept pointing at the orphan are symmetric-cosine
     // candidates), plus neighbors-of-surviving-neighbors — one
@@ -2959,57 +2815,21 @@ object Similarity {
       .select(col("u"), col("w").as("nbr"))
     // stage-2 rescore: surviving edges ∪ in-neighbors ∪ 2-hop ∪
     // bridges ∪ LSH seeds, orphans only (scoreTopK dedups)
-    var touchedAdj = scoreTopK(
-        und1.unionAll(twoHop)
-          .unionAll(bridges).unionAll(seeds))
+    val touchedAdj = scoreTopK("knnGraphDelete",
+        und1.unionAll(twoHop).unionAll(bridges).unionAll(seeds), survivors, k)
       .localCheckpoint(true)
     // the touched set = orphans ∪ every round's rescored targets; the
     // targets are exactly touchedAdj's added u-rows, so it is DERIVED
-    // (orphans ∪ touchedAdj.u — an orphan with zero candidates scores
-    // no rows but must still leave the carry-by-reference branch, hence
-    // the explicit orphans term) instead of checkpointed per round
-    def touchedIds = orphans.unionAll(touchedAdj.select(col("u")))
-    // pivots = the orphans: every one of them lost a top-k member, so
-    // every one's adjacency changed (the insert derives its pivot set
-    // because MOST collided residents don't change; here all do)
-    val pivots = orphans
-    // in-edges INTO the pivot set from the surviving prior graph,
-    // computed ONCE (same |pivots|·in-degree slice as the insert)
-    val gInPiv = gEdges
-      .join(pivots.select(col("u").as("nbr")), Seq("nbr"), "left_semi")
-      .select(col("u"), col("nbr"))
-      .localCheckpoint(true)
-    (1 to repairRounds).foreach { _ =>
-      val curr = touchedAdj.select(col("u"), col("nbr"))
-      val outPiv = curr.join(pivots, Seq("u"), "left_semi")
-      val inPiv = gInPiv.join(touchedIds, Seq("u"), "left_anti")
-        .unionAll(curr.join(pivots.select(col("u").as("nbr")), Seq("nbr"), "left_semi")
-          .select(col("u"), col("nbr")))
-      val undArr = outPiv.select(col("u").as("w"), col("nbr").as("x"))
-        .unionAll(inPiv.select(col("nbr").as("w"), col("u").as("x")))
-        .groupBy(col("w"))
-        .agg(graft.functions.HashCapAgg.column(col("x"), cap).as("xs"))
-      val cand = undArr.select(col("xs"), explode(col("xs")).as("a"))
-        .select(col("a").as("u"), explode(col("xs")).as("nbr"))
-        .filter(col("u") =!= col("nbr"))
-      val targets = cand.select(col("u")).distinct()
-        .transform(graft.util.CacheScope.cached) // three joins below
-      val rescored = scoreTopK(
-        gEdges.join(targets, Seq("u"), "left_semi")
-          .unionAll(curr.join(targets, Seq("u"), "left_semi"))
-          .unionAll(cand))
-      touchedAdj = rescored
-        .unionAll(touchedAdj.join(targets, Seq("u"), "left_anti"))
-        .localCheckpoint(true)
-    }
-    // untouched survivors carry their full rows by reference: a node
-    // outside `touched` had NO deleted neighbor, so its (cos_sim, rk)
-    // rows are exactly the prior graph's
-    graph.join(del.select(col("vec_id").as("u")), Seq("u"), "left_anti")
-      .join(touchedIds, Seq("u"), "left_anti")
-      .select(col("u"), col("nbr"), col("cos_sim"), col("rk"))
-      .unionAll(touchedAdj.select(col("u"), col("nbr"),
-        Cols.pround(col("cos"), 6).as("cos_sim"), col("rk")))
+    // (an orphan with zero candidates scores no rows but must still
+    // leave the carry-by-reference branch, hence the explicit orphans
+    // term). The pivots are the orphans: every one of them lost a
+    // top-k member, so every one's adjacency changed (the insert
+    // derives its pivot set because MOST collided residents don't
+    // change; here all do). A node outside `touched` had NO deleted
+    // neighbor, so its prior (cos_sim, rk) rows carry over unchanged.
+    repaired("knnGraphDelete", graph.join(del.select(col("vec_id").as("u")), Seq("u"), "left_anti"),
+      gEdges, touchedAdj, orphans, adj => orphans.unionAll(adj.select(col("u"))), survivors,
+      repairRounds, cap, k)
   }
 
   /** sim_knn_delete testdata binding: purge every 20th vector (5%)
@@ -3033,13 +2853,6 @@ object Similarity {
     * in the same (u, nbr, cos_sim, rk) surviving graph.
     */
   def knnDeleteSql: String = {
-    // scoreTopK against the SURVIVING corpus only
-    def topkSurv(pairs: String, out: String): String =
-      s"""$out AS MATERIALIZED (SELECT u, nbr, cos, rk FROM (
-         | SELECT u, nbr, cos, row_number() OVER (PARTITION BY u ORDER BY cos DESC, nbr) AS rk
-         | FROM (SELECT p.u, p.nbr, ${cosSql("a.embedding", "b.embedding")} AS cos
-         |       FROM $pairs p JOIN dv a ON p.u = a.vec_id JOIN dv b ON p.nbr = b.vec_id))
-         | WHERE rk <= $KnnGraphK)""".stripMargin
     val bg = s"g$KnnGraphRounds" // the full-corpus build's final CTE
     val prelude =
       s"""${knnGraphCtesFor("", "TRUE")},
@@ -3085,32 +2898,9 @@ object Similarity {
          |      UNION ALL SELECT u, nbr FROM dth
          |      UNION ALL SELECT u, nbr FROM dbr
          |      UNION ALL SELECT u, nbr FROM dsd)),
-         |${topkSurv("dp0", "da0")},
+         |${knnTopkSql("dp0", "da0", "dv")},
          |dgi AS MATERIALIZED (SELECT u, nbr FROM dge WHERE nbr IN (SELECT u FROM dor))""".stripMargin
-    val roundsSql = (1 to KnnDeleteRepairRounds).map { r =>
-      s"""dund$r AS MATERIALIZED (SELECT DISTINCT w, x FROM (
-         |      SELECT u AS w, nbr AS x FROM da${r - 1} WHERE u IN (SELECT u FROM dor)
-         |      UNION ALL SELECT nbr AS w, u AS x FROM (
-         |        SELECT u, nbr FROM dgi WHERE u NOT IN (SELECT u FROM dt${r - 1})
-         |        UNION ALL SELECT u, nbr FROM da${r - 1} WHERE nbr IN (SELECT u FROM dor)))),
-         |duc$r AS MATERIALIZED (SELECT w, x FROM (
-         |      SELECT w, x, row_number() OVER (PARTITION BY w
-         |        ORDER BY (x * 1103515245 + 12345) % 1000000007, x) AS crk FROM dund$r)
-         |      WHERE crk <= $KnnGraphCap),
-         |dcd$r AS MATERIALIZED (SELECT DISTINCT a.x AS u, b.x AS nbr
-         |      FROM duc$r a JOIN duc$r b ON a.w = b.w AND a.x <> b.x),
-         |dtg$r AS MATERIALIZED (SELECT DISTINCT u FROM dcd$r),
-         |dt$r AS MATERIALIZED (SELECT DISTINCT u FROM (
-         |      SELECT u FROM dt${r - 1} UNION ALL SELECT u FROM dtg$r)),
-         |dp$r AS MATERIALIZED (SELECT DISTINCT u, nbr FROM (
-         |      SELECT u, nbr FROM dge WHERE u IN (SELECT u FROM dtg$r)
-         |      UNION ALL SELECT u, nbr FROM da${r - 1} WHERE u IN (SELECT u FROM dtg$r)
-         |      UNION ALL SELECT u, nbr FROM dcd$r)),
-         |${topkSurv(s"dp$r", s"dan$r")},
-         |da$r AS MATERIALIZED (SELECT u, nbr, cos, rk FROM dan$r
-         |      UNION ALL SELECT u, nbr, cos, rk FROM da${r - 1}
-         |      WHERE u NOT IN (SELECT u FROM dtg$r))""".stripMargin
-    }.mkString(",\n", ",\n", "")
+    val roundsSql = repairRoundsSql("d", "dor", "dv", KnnDeleteRepairRounds)
     val last = KnnDeleteRepairRounds
     s"""WITH $prelude$roundsSql
        |SELECT u, nbr, ${Cols.proundSql("cos", 6)} AS cos_sim, CAST(rk AS INTEGER) AS rk
@@ -3135,12 +2925,6 @@ object Similarity {
     */
   private def knnGraphCtesFor(px: String, vPred: String): String = {
     val steps = KnnGraphSteps.take(KnnGraphK).map(s => s"($s)").mkString(", ")
-    def topk(pairs: String, out: String): String =
-      s"""$out AS MATERIALIZED (SELECT u, nbr, cos, rk FROM (
-         | SELECT u, nbr, cos, row_number() OVER (PARTITION BY u ORDER BY cos DESC, nbr) AS rk
-         | FROM (SELECT p.u, p.nbr, ${cosSql("a.embedding", "b.embedding")} AS cos
-         |       FROM $pairs p JOIN ${px}v a ON p.u = a.vec_id JOIN ${px}v b ON p.nbr = b.vec_id))
-         | WHERE rk <= $KnnGraphK)""".stripMargin
     val prelude =
       s"""${px}v AS MATERIALIZED (SELECT vec_id, embedding FROM embeddings WHERE $vPred),
          |${px}nn AS MATERIALIZED (SELECT count(*) AS n FROM ${px}v),
@@ -3158,22 +2942,67 @@ object Similarity {
          |      UNION ALL SELECT vec_id AS u, (vec_id + s) % n AS nbr
          |      FROM ${px}v CROSS JOIN ${px}nn CROSS JOIN (VALUES $steps) AS st(s)
          |      WHERE (vec_id + s) % n <> vec_id)),
-         |${topk(s"${px}i0", s"${px}g0")}""".stripMargin
+         |${knnTopkSql(s"${px}i0", s"${px}g0", s"${px}v")}""".stripMargin
     val roundsSql = (1 to KnnGraphRounds).map { r =>
       s"""${px}u$r AS MATERIALIZED (SELECT DISTINCT w, x FROM (
          |      SELECT u AS w, nbr AS x FROM ${px}g${r - 1}
          |      UNION ALL SELECT nbr, u FROM ${px}g${r - 1})),
-         |${px}c$r AS MATERIALIZED (SELECT w, x FROM (
-         |      SELECT w, x, row_number() OVER (PARTITION BY w
-         |        ORDER BY (x * 1103515245 + 12345) % 1000000007, x) AS crk FROM ${px}u$r)
-         |      WHERE crk <= $KnnGraphCap),
+         |${neighborCapSql(s"${px}c$r", s"${px}u$r")},
          |${px}p$r AS MATERIALIZED (SELECT DISTINCT u, nbr FROM (
          |      SELECT a.x AS u, b.x AS nbr FROM ${px}c$r a JOIN ${px}c$r b ON a.w = b.w AND a.x <> b.x
          |      UNION ALL SELECT u, nbr FROM ${px}g${r - 1})),
-         |${topk(s"${px}p$r", s"${px}g$r")}""".stripMargin
+         |${knnTopkSql(s"${px}p$r", s"${px}g$r", s"${px}v")}""".stripMargin
     }.mkString(",\n", ",\n", "")
     s"$prelude$roundsSql"
   }
+
+  /** The NN-Descent oracles' scoreTopK: (u, nbr) CTE `pairs` scored
+    * against the vectors of `vTab`, each u's top [[KnnGraphK]] as CTE
+    * `out`(u, nbr, cos, rk).
+    */
+  private def knnTopkSql(pairs: String, out: String, vTab: String): String =
+    s"""$out AS MATERIALIZED (SELECT u, nbr, cos, rk FROM (
+       | SELECT u, nbr, cos, row_number() OVER (PARTITION BY u ORDER BY cos DESC, nbr) AS rk
+       | FROM (SELECT p.u, p.nbr, ${cosSql("a.embedding", "b.embedding")} AS cos
+       |       FROM $pairs p JOIN $vTab a ON p.u = a.vec_id JOIN $vTab b ON p.nbr = b.vec_id))
+       | WHERE rk <= $KnnGraphK)""".stripMargin
+
+  /** The oracles' neighbor cap: CTE `out`(w, x) keeps each w's first
+    * [[KnnGraphCap]] members of CTE `in`(w, x) in HashCapAgg's order.
+    */
+  private def neighborCapSql(out: String, in: String): String =
+    s"""$out AS MATERIALIZED (SELECT w, x FROM (
+       |      SELECT w, x, row_number() OVER (PARTITION BY w
+       |        ORDER BY (x * 1103515245 + 12345) % 1000000007, x) AS crk FROM $in)
+       |      WHERE crk <= $KnnGraphCap)""".stripMargin
+
+  /** The unrolled bounded repair rounds of the insert/delete oracles,
+    * CTEs prefixed `px`: pivots `piv`, vectors `vTab`, prior edges
+    * `${px}ge`, their in-edges into the pivots `${px}gi`, and round r's
+    * adjacency `${px}a$r` and touched set `${px}t$r`.
+    */
+  private def repairRoundsSql(px: String, piv: String, vTab: String, rounds: Int): String =
+    (1 to rounds).map { r =>
+      s"""${px}und$r AS MATERIALIZED (SELECT DISTINCT w, x FROM (
+         |      SELECT u AS w, nbr AS x FROM ${px}a${r - 1} WHERE u IN (SELECT u FROM $piv)
+         |      UNION ALL SELECT nbr AS w, u AS x FROM (
+         |        SELECT u, nbr FROM ${px}gi WHERE u NOT IN (SELECT u FROM ${px}t${r - 1})
+         |        UNION ALL SELECT u, nbr FROM ${px}a${r - 1} WHERE nbr IN (SELECT u FROM $piv)))),
+         |${neighborCapSql(s"${px}uc$r", s"${px}und$r")},
+         |${px}cd$r AS MATERIALIZED (SELECT DISTINCT a.x AS u, b.x AS nbr
+         |      FROM ${px}uc$r a JOIN ${px}uc$r b ON a.w = b.w AND a.x <> b.x),
+         |${px}tg$r AS MATERIALIZED (SELECT DISTINCT u FROM ${px}cd$r),
+         |${px}t$r AS MATERIALIZED (SELECT DISTINCT u FROM (
+         |      SELECT u FROM ${px}t${r - 1} UNION ALL SELECT u FROM ${px}tg$r)),
+         |${px}p$r AS MATERIALIZED (SELECT DISTINCT u, nbr FROM (
+         |      SELECT u, nbr FROM ${px}ge WHERE u IN (SELECT u FROM ${px}tg$r)
+         |      UNION ALL SELECT u, nbr FROM ${px}a${r - 1} WHERE u IN (SELECT u FROM ${px}tg$r)
+         |      UNION ALL SELECT u, nbr FROM ${px}cd$r)),
+         |${knnTopkSql(s"${px}p$r", s"${px}an$r", vTab)},
+         |${px}a$r AS MATERIALIZED (SELECT u, nbr, cos, rk FROM ${px}an$r
+         |      UNION ALL SELECT u, nbr, cos, rk FROM ${px}a${r - 1}
+         |      WHERE u NOT IN (SELECT u FROM ${px}tg$r))""".stripMargin
+    }.mkString(",\n", ",\n", "")
 
   def knnGraphSql: String =
     s"""WITH $knnGraphCtes
@@ -3244,7 +3073,6 @@ object Similarity {
       .unionAll(graph.select(col("nbr").as("u"), col("u").as("nbr")))
       .distinct()
       .transform(graft.util.CacheScope.cached) // re-joined every round
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
     // r17 fusion: candidate dedup (and the visited-set anti-join) ride
     // the probe-key exchange the rank window needs anyway — one
     // exchange per score pass where distinct + window paid two
@@ -3253,11 +3081,9 @@ object Similarity {
       val dd = cand.repartition(col("q_id")).dropDuplicates("q_id", "c_id")
       val fresh = excl.map(e => dd.join(e, Seq("q_id", "c_id"), "left_anti"))
         .getOrElse(dd)
-      fresh.join(vectors, Seq("c_id")).join(broadcast(queries), Seq("q_id"))
-        .withColumn("cos", cosExpr("qv", "cv"))
-        .select(col("q_id"), col("c_id"), col("cos"))
-        .withColumn("srk", row_number().over(wq))
-        .filter(col("srk") <= keep)
+      topK(fresh.join(vectors, Seq("c_id")).join(broadcast(queries), Seq("q_id"))
+          .withColumn("cos", cosExpr("qv", "cv"))
+          .select(col("q_id"), col("c_id"), col("cos")), "q_id", col("cos").desc, "c_id", keep, "srk")
         .drop("srk")
     }
     // every round's pool is re-read by the anti-join, the union, and
@@ -3282,8 +3108,7 @@ object Similarity {
       visited = visited.unionAll(kept)
       frontier = kept.select(col("q_id"), col("c_id"))
     }
-    visited.withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= k)
+    topK(visited, "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id"), Cols.pround(col("cos"), 6).as("cos_sim"),
         col("rk"))
   }
@@ -3293,20 +3118,14 @@ object Similarity {
       rounds: Int = BeamRounds, k: Int = BeamK,
       seedPlanes: Int = AutoPlanes): DataFrame = {
     val p = resolvePlanes(seedPlanes, vectors)
-    def buckets(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-      df.withColumn("tb", explode(array((0 until BeamSeedTables).map(t =>
-          struct(lit(t).as("t"), graft.functions.SrpBucket.column(
-            col(vecCol), p, t * p).as("b"))): _*)))
-        .select(col(idCol), col("tb.t").as("t"), col("tb.b").as("b"))
-    val seedCand = buckets(queries, "q_id", "qv")
-      .join(buckets(vectors, "c_id", "cv"), Seq("t", "b"))
+    val seedCand = srpTables(queries, Seq("q_id"), "qv", BeamSeedTables, p)
+      .join(srpTables(vectors, Seq("c_id"), "cv", BeamSeedTables, p), Seq("t", "b"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id")) // beamFrom's score pass dedups
     beamFrom(graph, vectors, queries, seedCand, entries, width, rounds, k)
   }
 
-  /** Prebuilt kNN-graph ARTIFACT for the beam binding, memoized per
-    * (session, sfDir) and pinned with an eager `localCheckpoint` so
+  /** Prebuilt kNN-graph ARTIFACT for the beam binding ([[memo]]), so
     * repeated beam queries consume the graph without re-running the
     * NN-Descent build. This is the production shape: at scale the
     * graph is built once (benched separately as `sim_knn_graph`) and
@@ -3316,19 +3135,11 @@ object Similarity {
     * combined 22.5 s pin as misrepresenting a 7.5 s query path).
     * Deterministic build → memoization cannot change results (the
     * build's own partition-invariance is gated directly on
-    * `sim_knn_graph`). localCheckpoint survives `catalog.clearCache`,
-    * which is exactly the artifact semantics the bench needs.
+    * `sim_knn_graph`).
     */
-  @volatile private var beamGraphCache: Option[(SparkSession, String, DataFrame)] = None
   private def prebuiltKnnGraph(spark: SparkSession, sfDir: String): DataFrame =
-    synchronized {
-      beamGraphCache match {
-        case Some((s, d, g)) if (s eq spark) && d == sfDir => g
-        case _ =>
-          val g = knnGraphOn(Tables.embeddings(spark, sfDir)).localCheckpoint(true)
-          beamGraphCache = Some((spark, sfDir, g))
-          g
-      }
+    memo(spark, sfDir, "knnGraph") {
+      knnGraphOn(Tables.embeddings(spark, sfDir)).localCheckpoint(true)
     }
 
   /** sim_graph_beam testdata binding: probes = the first 8 vectors
@@ -3343,21 +3154,50 @@ object Similarity {
     graphBeamOn(
       prebuiltKnnGraph(spark, sfDir),
       e.select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qv")),
-      seedPlanes = BeamSeedPlanes)
+      probeSplit(e)._1, seedPlanes = BeamSeedPlanes)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
+  /** The beam oracles' score pass: candidate CTE `cand`(q_id, c_id)
+    * scored against probes `qs` and the vectors of `vTab`, each probe's
+    * top `keep` as CTE `out`(q_id, c_id, cos).
+    */
+  private def beamScoreSql(cand: String, vTab: String, out: String, keep: Int): String =
+    s"""$out AS MATERIALIZED (SELECT q_id, c_id, cos FROM (
+       | SELECT q_id, c_id, cos,
+       |   row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS srk
+       | FROM (SELECT p.q_id, p.c_id, ${cosSql("q.qv", "b.embedding")} AS cos
+       |       FROM $cand p JOIN qs q ON p.q_id = q.q_id
+       |       JOIN $vTab b ON p.c_id = b.vec_id))
+       | WHERE srk <= $keep)""".stripMargin
+
+  /** The beam oracles' expansion rounds 1..`rounds` over CTEs prefixed
+    * `px`: round r expands `${px}vis${r-1}` along `${px}und`, drops the
+    * visited pool, and keeps each probe's top `keep` as `${px}vis$r`.
+    */
+  private def beamRoundsSql(px: String, vTab: String, rounds: Int, keep: Int): String =
+    (1 to rounds).map { r =>
+      val pool = (0 until r).map(i => s"SELECT q_id, c_id FROM ${px}vis$i").mkString(" UNION ALL ")
+      s"""${px}e$r AS (SELECT q_id, c_id FROM (
+         |      SELECT DISTINCT f.q_id, g.nbr AS c_id
+         |      FROM ${px}vis${r - 1} f JOIN ${px}und g ON f.c_id = g.u
+         |      WHERE g.nbr <> f.q_id) n
+         |      WHERE NOT EXISTS (SELECT 1 FROM ($pool) p
+         |                        WHERE p.q_id = n.q_id AND p.c_id = n.c_id)),
+         |${beamScoreSql(s"${px}e$r", vTab, s"${px}vis$r", keep)}""".stripMargin
+    }.mkString(",\n", ",\n", "")
+
+  /** The beam oracles' result: the pooled `vis0..vis$rounds` top [[BeamK]]. */
+  private def beamResultSql(rounds: Int): String = {
+    val all = (0 to rounds).map(i => s"SELECT q_id, c_id, cos FROM vis$i").mkString(" UNION ALL ")
+    s"""SELECT q_id, c_id, ${Cols.proundSql("cos", 6)} AS cos_sim, CAST(rk AS INTEGER) AS rk
+       |FROM (SELECT q_id, c_id, cos,
+       |       row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk
+       |      FROM ($all))
+       |WHERE rk <= $BeamK ORDER BY q_id, rk""".stripMargin
+  }
+
   def graphBeamSql: String = {
-    def score(cand: String, out: String, keep: Int): String =
-      s"""$out AS MATERIALIZED (SELECT q_id, c_id, cos FROM (
-         | SELECT q_id, c_id, cos,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS srk
-         | FROM (SELECT p.q_id, p.c_id, ${cosSql("q.qv", "b.embedding")} AS cos
-         |       FROM $cand p JOIN qs q ON p.q_id = q.q_id
-         |       JOIN v b ON p.c_id = b.vec_id))
-         | WHERE srk <= $keep)""".stripMargin
     val prelude =
       s"""WITH $knnGraphCtes,
          |und AS (SELECT DISTINCT u, nbr FROM (
@@ -3369,24 +3209,9 @@ object Similarity {
          |cb AS (SELECT vec_id AS c_id, t, ${bucketTableSql("embedding", BeamSeedPlanes, "t")} AS b
          |       FROM v, generate_series(0, ${BeamSeedTables - 1}) AS gt(t)),
          |e0 AS (SELECT DISTINCT q_id, c_id FROM qb JOIN cb USING (t, b) WHERE q_id <> c_id),
-         |${score("e0", "vis0", BeamE)}""".stripMargin
-    val roundsSql = (1 to BeamRounds).map { r =>
-      val pool = (0 until r).map(i => s"SELECT q_id, c_id FROM vis$i").mkString(" UNION ALL ")
-      s"""e$r AS (SELECT q_id, c_id FROM (
-         |      SELECT DISTINCT f.q_id, g.nbr AS c_id
-         |      FROM vis${r - 1} f JOIN und g ON f.c_id = g.u
-         |      WHERE g.nbr <> f.q_id) n
-         |      WHERE NOT EXISTS (SELECT 1 FROM ($pool) p
-         |                        WHERE p.q_id = n.q_id AND p.c_id = n.c_id)),
-         |${score(s"e$r", s"vis$r", BeamWidth)}""".stripMargin
-    }.mkString(",\n", ",\n", "")
-    val all = (0 to BeamRounds).map(i => s"SELECT q_id, c_id, cos FROM vis$i").mkString(" UNION ALL ")
-    s"""$prelude$roundsSql
-       |SELECT q_id, c_id, ${Cols.proundSql("cos", 6)} AS cos_sim, CAST(rk AS INTEGER) AS rk
-       |FROM (SELECT q_id, c_id, cos,
-       |       row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk
-       |      FROM ($all))
-       |WHERE rk <= $BeamK ORDER BY q_id, rk""".stripMargin
+         |${beamScoreSql("e0", "v", "vis0", BeamE)}""".stripMargin
+    s"""$prelude${beamRoundsSql("", "v", BeamRounds, BeamWidth)}
+       |${beamResultSql(BeamRounds)}""".stripMargin
   }
 
   // ---------------------------------------------------------------- HNSW
@@ -3425,6 +3250,19 @@ object Similarity {
   private def hnswLayerDiv(l: Int): Long =
     (0 until l).foldLeft(1L)((acc, _) => acc * HnswFanout)
 
+  /** The rows of `df` (keyed `vec_id`) that are members of layer `l`. */
+  private def hnswLayer(df: DataFrame, l: Int): DataFrame =
+    df.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
+
+  /** The auto-depth rule: layers `from`, `from`+1, … of `vectors` while
+    * the layer still holds ≥ 4·[[HnswEntryCap]] nodes, each built by
+    * `build(members, count)`.
+    */
+  private def upperLayers(vectors: DataFrame, from: Int)(
+      build: (DataFrame, Long) => DataFrame): Seq[DataFrame] =
+    Iterator.from(from).map(l => hnswLayer(vectors, l)).map(m => (m, m.count()))
+      .takeWhile(_._2 >= 4L * HnswEntryCap).map(build.tupled).toList
+
   /** sim_hnsw — HIERARCHICAL graph ANN (the HNSW decomposition proper,
     * completing the story [[graphBeamOn]]'s flat LSH-seeded beam
     * started): [[hnswBuild]] erects one NN-Descent k-NN graph per
@@ -3449,7 +3287,7 @@ object Similarity {
     */
   def hnswBuild(vectors: DataFrame, layers: Int = HnswLayers): Seq[DataFrame] =
     (0 to layers).map { l =>
-      knnGraphOn(vectors.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0))
+      knnGraphOn(hnswLayer(vectors, l))
     }
 
   /** AUTO-DEPTH build: layers extend while the next layer would still
@@ -3464,19 +3302,8 @@ object Similarity {
     * its 8-node top layer IS entry-sized there, and the unrolled
     * oracle pins that instance.
     */
-  def hnswBuildAuto(vectors: DataFrame): Seq[DataFrame] = {
-    val graphs = scala.collection.mutable.ArrayBuffer(knnGraphOn(vectors))
-    var l = 1
-    var next = vectors.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
-    var n = next.count()
-    while (n >= 4L * HnswEntryCap) {
-      graphs += knnGraphOn(next)
-      l += 1
-      next = vectors.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
-      n = next.count()
-    }
-    graphs.toSeq
-  }
+  def hnswBuildAuto(vectors: DataFrame): Seq[DataFrame] =
+    knnGraphOn(vectors) +: upperLayers(vectors, 1)((m, _) => knnGraphOn(m))
 
   /** Layered search over [[hnswBuild]]'s graphs; `vectors` is the full
     * (vec_id, embedding) corpus, `queries` is (q_id, qv).
@@ -3491,14 +3318,12 @@ object Similarity {
     val v = vectors.select(col("vec_id"), col("embedding"))
       .transform(graft.util.CacheScope.cached)
     val q = queries.transform(graft.util.CacheScope.cached)
-    def layerCand(l: Int): DataFrame = v
-      .filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
+    def layerCand(l: Int): DataFrame = hnswLayer(v, l)
       .select(col("vec_id").as("c_id"), col("embedding").as("cv"))
     // fixed entry set: the first entryCap top-layer members in mixed-
     // hash order (top layer is N/fanout^layers rows — the global rank
     // window is bounded by construction, not data-scaled)
-    val entries = v
-      .filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(layers)) === 0)
+    val entries = hnswLayer(v, layers)
       .select(col("vec_id"))
       .withColumn("erk", row_number().over(
         Window.orderBy(hnswMix(col("vec_id")), col("vec_id"))))
@@ -3526,26 +3351,15 @@ object Similarity {
       ef, ef, baseRounds, k)
   }
 
-  /** Prebuilt per-layer graph artifacts, memoized per (session, sfDir)
-    * — same amortization contract as [[prebuiltKnnGraph]] (which
-    * SERVES AS layer 0, so the flat beam and the hierarchy share the
-    * base build).
+  /** Prebuilt per-layer graph artifacts ([[memo]]) — same amortization
+    * contract as [[prebuiltKnnGraph]] (which SERVES AS layer 0, so the
+    * flat beam and the hierarchy share the base build).
     */
-  @volatile private var hnswGraphCache: Option[(SparkSession, String, Seq[DataFrame])] = None
   private def prebuiltHnswGraphs(spark: SparkSession, sfDir: String): Seq[DataFrame] =
-    synchronized {
-      hnswGraphCache match {
-        case Some((s, d, g)) if (s eq spark) && d == sfDir => g
-        case _ =>
-          val e = Tables.embeddings(spark, sfDir)
-          val g = prebuiltKnnGraph(spark, sfDir) +:
-            (1 to HnswLayers).map { l =>
-              knnGraphOn(e.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0))
-                .localCheckpoint(true)
-            }
-          hnswGraphCache = Some((spark, sfDir, g))
-          g
-      }
+    memo(spark, sfDir, "hnsw") {
+      val e = Tables.embeddings(spark, sfDir)
+      prebuiltKnnGraph(spark, sfDir) +:
+        (1 to HnswLayers).map(l => knnGraphOn(hnswLayer(e, l)).localCheckpoint(true))
     }
 
   /** sim_hnsw_build — the hierarchy's UPPER-layer construction as its
@@ -3565,7 +3379,7 @@ object Similarity {
     import spark.implicits._
     val e = Tables.embeddings(spark, sfDir)
     val rows = (1 to HnswLayers).map { l =>
-      val members = e.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
+      val members = hnswLayer(e, l)
       (l, members.count(), knnGraphOn(members).count())
     }
     rows.toDF("layer", "n_members", "n_edges").orderBy(col("layer"))
@@ -3604,9 +3418,8 @@ object Similarity {
   def hnswInsert(layerGraphs: Seq[DataFrame], baseVectors: DataFrame,
       delta: DataFrame, autoPlanes: Boolean = false): Seq[DataFrame] = {
     val maintained = layerGraphs.zipWithIndex.map { case (g, l) =>
-      val div = lit(hnswLayerDiv(l))
-      val bl = baseVectors.filter(hnswMix(col("vec_id")) % div === 0)
-      val dl = delta.filter(hnswMix(col("vec_id")) % div === 0)
+      val bl = hnswLayer(baseVectors, l)
+      val dl = hnswLayer(delta, l)
       if (dl.isEmpty) g // a layer the delta never reaches is untouched
       else {
         val planes = if (autoPlanes) planesFor(bl.count() + dl.count())
@@ -3619,18 +3432,10 @@ object Similarity {
     // nodes, build it fresh — it is fanout× smaller each time
     val all = baseVectors.select(col("vec_id"), col("embedding"))
       .unionByName(delta.select(col("vec_id"), col("embedding")))
-    val extended = scala.collection.mutable.ArrayBuffer(maintained: _*)
-    var l = maintained.length
-    var next = all.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
-    var n = next.count()
-    while (n >= 4L * HnswEntryCap) {
-      val planes = if (autoPlanes) planesFor(n) else KnnGraphInitPlanes
-      extended += knnGraphOn(next, initPlanes = planes).localCheckpoint(true)
-      l += 1
-      next = all.filter(hnswMix(col("vec_id")) % lit(hnswLayerDiv(l)) === 0)
-      n = next.count()
+    maintained ++ upperLayers(all, maintained.length) { (m, n) =>
+      knnGraphOn(m, initPlanes = if (autoPlanes) planesFor(n) else KnnGraphInitPlanes)
+        .localCheckpoint(true)
     }
-    extended.toSeq
   }
 
   /** sim_hnsw testdata binding: same 8 probes as sim_graph_beam,
@@ -3638,9 +3443,7 @@ object Similarity {
     */
   def hnsw(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    hnswSearchOn(prebuiltHnswGraphs(spark, sfDir), e,
-      e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qv")))
+    hnswSearchOn(prebuiltHnswGraphs(spark, sfDir), e, probeSplit(e)._1)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -3649,32 +3452,13 @@ object Similarity {
       s"""SELECT DISTINCT u, nbr FROM (
          | SELECT u, nbr FROM ${px}g$KnnGraphRounds
          | UNION ALL SELECT nbr, u FROM ${px}g$KnnGraphRounds)""".stripMargin
-    // score candidates against a layer's member vectors, keep top-n
-    def score(cand: String, vTab: String, out: String, keep: Int): String =
-      s"""$out AS MATERIALIZED (SELECT q_id, c_id, cos FROM (
-         | SELECT q_id, c_id, cos,
-         |   row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS srk
-         | FROM (SELECT p.q_id, p.c_id, ${cosSql("q.qv", "b.embedding")} AS cos
-         |       FROM $cand p JOIN qs q ON p.q_id = q.q_id
-         |       JOIN $vTab b ON p.c_id = b.vec_id))
-         | WHERE srk <= $keep)""".stripMargin
     // one ef-beam descent inside layer l (HnswDescentRounds expansions)
     def descent(l: Int, seedTab: String): String = {
       val px = s"h$l"
       val head =
         s"""${px}und AS MATERIALIZED (${undOf(px)}),
-           |${score(seedTab, s"${px}v", s"${px}vis0", HnswEf)}""".stripMargin
-      val rounds = (1 to HnswDescentRounds).map { r =>
-        val pool = (0 until r).map(i => s"SELECT q_id, c_id FROM ${px}vis$i")
-          .mkString(" UNION ALL ")
-        s"""${px}e$r AS (SELECT q_id, c_id FROM (
-           |      SELECT DISTINCT f.q_id, g.nbr AS c_id
-           |      FROM ${px}vis${r - 1} f JOIN ${px}und g ON f.c_id = g.u
-           |      WHERE g.nbr <> f.q_id) n
-           |      WHERE NOT EXISTS (SELECT 1 FROM ($pool) p
-           |                        WHERE p.q_id = n.q_id AND p.c_id = n.c_id)),
-           |${score(s"${px}e$r", s"${px}v", s"${px}vis$r", HnswEf)}""".stripMargin
-      }.mkString(",\n", ",\n", "")
+           |${beamScoreSql(seedTab, s"${px}v", s"${px}vis0", HnswEf)}""".stripMargin
+      val rounds = beamRoundsSql(px, s"${px}v", HnswDescentRounds, HnswEf)
       val all = (0 to HnswDescentRounds)
         .map(i => s"SELECT q_id, c_id, cos FROM ${px}vis$i").mkString(" UNION ALL ")
       s"""$head$rounds,
@@ -3703,27 +3487,11 @@ object Similarity {
       val seedTab = if (l == top) s"seed$top" else s"h${l + 1}out"
       descent(l, seedTab)
     }.mkString(",\n", ",\n", "")
-    // base-layer beam (BeamRounds rounds) from h1's survivors — the
-    // same structure as graphBeamSql's rounds, seeded by the descent
-    val base0 = s"""${score("h1out", "v", "vis0", HnswEf)}"""
-    val baseRounds = (1 to HnswBaseRounds).map { r =>
-      val pool = (0 until r).map(i => s"SELECT q_id, c_id FROM vis$i").mkString(" UNION ALL ")
-      s"""e$r AS (SELECT q_id, c_id FROM (
-         |      SELECT DISTINCT f.q_id, g.nbr AS c_id
-         |      FROM vis${r - 1} f JOIN und g ON f.c_id = g.u
-         |      WHERE g.nbr <> f.q_id) n
-         |      WHERE NOT EXISTS (SELECT 1 FROM ($pool) p
-         |                        WHERE p.q_id = n.q_id AND p.c_id = n.c_id)),
-         |${score(s"e$r", "v", s"vis$r", HnswEf)}""".stripMargin
-    }.mkString(",\n", ",\n", "")
-    val all = (0 to HnswBaseRounds).map(i => s"SELECT q_id, c_id, cos FROM vis$i").mkString(" UNION ALL ")
+    // the base-layer beam from h1's survivors: graphBeamSql's rounds,
+    // seeded by the descent
     s"""$prelude$descents,
-       |$base0$baseRounds
-       |SELECT q_id, c_id, ${Cols.proundSql("cos", 6)} AS cos_sim, CAST(rk AS INTEGER) AS rk
-       |FROM (SELECT q_id, c_id, cos,
-       |       row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, c_id) AS rk
-       |      FROM ($all))
-       |WHERE rk <= $BeamK ORDER BY q_id, rk""".stripMargin
+       |${beamScoreSql("h1out", "v", "vis0", HnswEf)}${beamRoundsSql("", "v", HnswBaseRounds, HnswEf)}
+       |${beamResultSql(HnswBaseRounds)}""".stripMargin
   }
 
   // ----------------------------------------------------- binary-code ANN
@@ -3772,16 +3540,13 @@ object Similarity {
     val cand = bands(qc, "q_id").join(bands(cc, "c_id"), Seq("t", "b"))
       .filter(col("q_id") =!= col("c_id"))
       .select(col("q_id"), col("c_id")).distinct()
-    val wq = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("c_id"))
-    cand
-      .join(qc.select(col("q_id"), col("qv"), col("code").as("qcode")), Seq("q_id"))
-      .join(cc.select(col("c_id"), col("cv"), col("code").as("ccode")), Seq("c_id"))
-      .withColumn("hamming", expr(
-        "aggregate(zip_with(qcode, ccode, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT)), CAST(0 AS BIGINT), (a, x) -> a + x)"))
-      .filter(col("hamming") <= radius)
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= k)
+    topK(cand
+        .join(qc.select(col("q_id"), col("qv"), col("code").as("qcode")), Seq("q_id"))
+        .join(cc.select(col("c_id"), col("cv"), col("code").as("ccode")), Seq("c_id"))
+        .withColumn("hamming", expr(
+          "aggregate(zip_with(qcode, ccode, (x, y) -> CAST(bit_count(x ^ y) AS BIGINT)), CAST(0 AS BIGINT), (a, x) -> a + x)"))
+        .filter(col("hamming") <= radius)
+        .withColumn("cos", cosExpr("qv", "cv")), "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id"), col("hamming"),
         Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
   }
@@ -3791,10 +3556,8 @@ object Similarity {
     */
   def hammingAnn(spark: SparkSession, sfDir: String): DataFrame = {
     val e = Tables.embeddings(spark, sfDir)
-    hammingAnnOn(
-      e.select(col("vec_id").as("c_id"), col("embedding").as("cv")),
-      e.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("q_id"), col("embedding").as("qv")))
+    hammingAnnOn(e.select(col("vec_id").as("c_id"), col("embedding").as("cv")),
+      probeSplit(e)._1)
       .transform(graft.util.Cols.verifySort(_, col("q_id"), col("rk")))
   }
 
@@ -3855,26 +3618,18 @@ object Similarity {
     // (Prof: a 2.1 s single-task job) — spread the rows first; no-op on
     // an already-parallel scan. Applied to the bucket side only: the
     // score joins' broadcast builds stay on the plain scan.
-    val b = graft.util.Cols.fanOutScan(vectors)
-      .withColumn("tb", explode(array((0 until tables).map(t =>
-        struct(lit(t).as("t"),
-          graft.functions.SrpBucket.column(col("vec"), p, t * p).as("b"))): _*)))
-      .select(col("id"), col("label"), col("tb.t").as("t"), col("tb.b").as("b"))
+    val b = srpTables(graft.util.Cols.fanOutScan(vectors), Seq("id", "label"), "vec", tables, p)
     val cand = b.select(col("id").as("q_id"), col("label").as("q_label"),
         col("t"), col("b"))
       .join(b.select(col("id").as("c_id"), col("label").as("c_label"),
         col("t"), col("b")), Seq("t", "b"))
       .filter(col("q_label") =!= col("c_label"))
       .select(col("q_id"), col("c_id")).distinct()
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("cos").desc, col("c_id"))
-    cand
-      .join(vectors.select(col("id").as("q_id"), col("vec").as("qv")), Seq("q_id"))
-      .join(vectors.select(col("id").as("c_id"), col("vec").as("cv"),
-        col("label").as("neg_label")), Seq("c_id"))
-      .withColumn("cos", cosExpr("qv", "cv"))
-      .withColumn("rk", row_number().over(wq))
-      .filter(col("rk") <= k)
+    topK(cand
+        .join(vectors.select(col("id").as("q_id"), col("vec").as("qv")), Seq("q_id"))
+        .join(vectors.select(col("id").as("c_id"), col("vec").as("cv"),
+          col("label").as("neg_label")), Seq("c_id"))
+        .withColumn("cos", cosExpr("qv", "cv")), "q_id", col("cos").desc, "c_id", k)
       .select(col("q_id"), col("c_id").as("neg_id"), col("neg_label"),
         Cols.pround(col("cos"), 6).as("cos_sim"), col("rk"))
   }

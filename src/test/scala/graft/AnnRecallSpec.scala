@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 
 /** ANN recall gate (VERDICT r1 item 7): lsh/multiprobe/ivf verify
   * against oracles that mirror their own prefilter — correct by
@@ -24,6 +24,33 @@ class AnnRecallSpec extends SparkSpecBase {
 
   private def hits(df: DataFrame): Set[(Long, Long)] =
     df.select("q_id", "c_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** The id inputs the maintenance passes must treat like BIGINT ids:
+    * (label, id map, map back, the id type a mapped graph keeps).
+    */
+  private val IdMaps = {
+    import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
+    Seq[(String, Column => Column, Column => Column, DataType)](
+      ("INT ids", _.cast("int"), _.cast("long"), IntegerType),
+      ("7·id − 200", c => c * 7 - 200, c => (c + 200).divide(7).cast("long"), LongType))
+  }
+
+  /** `df` with the id columns `cs` mapped by `to`. */
+  private def mapIds(df: DataFrame, to: Column => Column, cs: String*): DataFrame =
+    df.select(df.columns.map(c =>
+      if (cs.contains(c)) to(df.col(c)).as(c) else df.col(c)): _*)
+
+  /** A graph's rows with its ids mapped `back`, for comparison. */
+  private def edges(g: DataFrame, back: Column => Column): Set[Seq[Any]] =
+    g.select(back(g.col("u")), back(g.col("nbr")), g.col("cos_sim"), g.col("rk"))
+      .collect().map(_.toSeq).toSet
+
+  /** One zero-norm vector, vec_id 1000, in `e`'s (vec_id, embedding) schema. */
+  private def zeroVector(e: DataFrame): DataFrame = {
+    val v = e.select("vec_id", "embedding")
+    spark.createDataFrame(java.util.List.of(
+      org.apache.spark.sql.Row(1000L, Seq.fill(64)(0f))), v.schema)
+  }
 
   test("recall@5 vs brute force: multitable > multiprobe >= lsh, floors hold") {
     val truth = hits(SparkEntry.queries("sim_bruteforce_topk")(spark, Sf001))
@@ -137,6 +164,19 @@ class AnnRecallSpec extends SparkSpecBase {
     // node, every node present
     val degs = gIncr.groupBy("u").count()
     assert(degs.filter(col("count") > graft.operators.Similarity.KnnGraphK).count() == 0)
+    // INT and sparse negative ids maintain the same graph, in the id
+    // type of the graph they were given
+    val want = edges(gIncr, identity)
+    IdMaps.foreach { case (label, to, back, t) =>
+      val g = graft.operators.Similarity.knnGraphInsert(mapIds(gBase, to, "u", "nbr"),
+        mapIds(base, to, "vec_id"), mapIds(delta, to, "vec_id"))
+      assert(Seq("u", "nbr").map(g.schema(_).dataType) == Seq(t, t), s"$label: ${g.schema}")
+      assert(edges(g, back) == want, s"$label: differs from the BIGINT run")
+    }
+    // a zero-norm arrival has no cosine: refused by name
+    val m = messages(intercept[Exception](
+      graft.operators.Similarity.knnGraphInsert(gBase, base, zeroVector(e))))
+    assert(m.contains("knnGraphInsert: vec_id 1000 has a zero-norm embedding"), m)
   }
 
   test("incremental kNN-graph delete: 5% purge, recall within 2pts of a fresh rebuild, no tombstone survives") {
@@ -181,6 +221,18 @@ class AnnRecallSpec extends SparkSpecBase {
     // builder contract intact: <= k rows per node
     val degs = gDel.groupBy("u").count()
     assert(degs.filter(col("count") > graft.operators.Similarity.KnnGraphK).count() == 0)
+    // INT and sparse negative ids: the same repair, in the graph's id type
+    val want = edges(gDel, identity)
+    IdMaps.foreach { case (label, to, back, t) =>
+      val g = graft.operators.Similarity.knnGraphDelete(mapIds(gFull, to, "u", "nbr"),
+        mapIds(e, to, "vec_id"), mapIds(del, to, "vec_id"))
+      assert(Seq("u", "nbr").map(g.schema(_).dataType) == Seq(t, t), s"$label: ${g.schema}")
+      assert(edges(g, back) == want, s"$label: differs from the BIGINT run")
+    }
+    // a zero-norm survivor has no cosine: refused by name
+    val m = messages(intercept[Exception](graft.operators.Similarity.knnGraphDelete(gFull,
+      e.select("vec_id", "embedding").unionAll(zeroVector(e)), del)))
+    assert(m.contains("knnGraphDelete: vec_id 1000 has a zero-norm embedding"), m)
   }
 
   test("graph-beam frontier search recall@5 vs brute force") {

@@ -326,14 +326,20 @@ class SimilaritySpec extends SparkSpecBase {
     import spark.implicits._
     val e = graft.util.Tables.embeddings(spark, SfDir).select(col("vec_id"), col("embedding"))
     val head = e.filter(col("vec_id") < 60)
-    def both(label: String, vectors: org.apache.spark.sql.DataFrame, driver: Boolean): Unit = {
+    def both(label: String, vectors: org.apache.spark.sql.DataFrame, driver: Boolean,
+        error: Option[String] = None): Unit = {
       assert(graft.util.Local.vectorsIfFits(vectors).isDefined == driver, label)
       // the build is eager (checkpointed rounds): an error surfaces in the call
       val (local, dist) = onBothPaths(scala.util.Try {
         val g = Similarity.knnGraphOn(vectors)
         (g.schema, g.collect().map(_.toSeq).toSet)
-      }.toEither.left.map(_.getClass))
-      assert(local == dist, s"$label: driver $local vs distributed $dist")
+      }.toEither.left.map(e => (e.getClass, messages(e))))
+      assert(local.left.map(_._1) == dist.left.map(_._1), s"$label: driver $local vs distributed $dist")
+      // an expected failure names its cause on both paths
+      Seq(local, dist).foreach {
+        case Left((_, m)) => assert(error.exists(m.contains), s"$label: $m")
+        case Right(_)     => assert(error.isEmpty, s"$label: built, expected $error")
+      }
       spark.catalog.clearCache()
     }
     both("sf0.001", e, driver = true)
@@ -345,9 +351,10 @@ class SimilaritySpec extends SparkSpecBase {
     both("duplicated vectors", head.unionAll(
       head.select((col("vec_id") + 1000).as("vec_id"), col("embedding"))), driver = true)
     both("empty", e.filter(lit(false)), driver = true)
-    // Spark's divide by the zero norm fails the build (ANSI) on both paths
+    // a zero norm has no cosine: the build refuses it by name on both paths
     val zero = Seq((1000L, Array.fill(64)(0f))).toDF("vec_id", "embedding")
-    both("a zero vector", head.unionAll(zero), driver = false)
+    both("a zero vector", head.unionAll(zero), driver = false,
+      error = Some("knnGraphOn: vec_id 1000 has a zero-norm embedding"))
     val nulled = Seq((1000L, null: Array[Float])).toDF("vec_id", "embedding")
     both("a null embedding", head.unionAll(nulled), driver = false)
   }

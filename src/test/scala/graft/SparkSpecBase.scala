@@ -31,6 +31,10 @@ trait SparkSpecBase extends AnyFunSuite {
   def onBothPaths[A](body: => A): (A, A) =
     (body, withConf("spark.sql.autoBroadcastJoinThreshold", "-1")(body))
 
+  /** An exception's message and its causes' messages, outermost first. */
+  def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
   /** Spark jobs `body` launches on this thread (job-group scoped, so
     * no other work in the session counts).
     */
